@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-8 twenty-fourth batch: shard-placement planning — the data-
-  * level companion to the sink's Partitioners (hash / balanced /
-  * shuffle writers, `sink/Partitioners.scala`): before you pick a
-  * distribution key or grow a cluster, measure what the choice does.
+  * level companion to the sink's shard routing (hash / balanced /
+  * shuffle strategies, `sink/dsv2/GraftClickHouseSource.scala`): before
+  * you pick a distribution key or grow a cluster, measure what the
+  * choice does.
   *
   *  - q_consistent_hash_ring: 32-vnode consistent-hashing ring over 4
   *    shards, then the same ring grown to 5 — per-shard key counts in

@@ -22,6 +22,11 @@ final case class GraftSinkOptions(
     collapsingField: Option[String] = None,
     replacingField: Option[String] = None,
     batchSize: Int = 1000,
+    /** Parsed and validated but never consulted by the write path: the
+      * reference's private flusher thread wakes every flush-interval,
+      * while here the stream's trigger (Trigger.ProcessingTime) ends
+      * each epoch with a final flush. Kept for option-surface parity.
+      */
     flushInterval: FiniteDuration = 1.second,
     maxRetries: Int = 3,
     writeLocal: Boolean = false,
@@ -35,11 +40,11 @@ final case class GraftSinkOptions(
       * Kept for option-surface parity.
       */
     ignoreDelete: Boolean = false,
-    /** True only when the user set `cluster-name` themselves. Writers that
-      * follow the reference's convention (UpsertWriter) always emit
-      * ON CLUSTER with the default name, but new user-facing DDL paths
-      * (TRUNCATE for overwrite) must not assume a cluster exists on a
-      * single-node server — they consult [[explicitClusterName]].
+    /** True only when the user set `cluster-name` themselves. The
+      * reference always emits ON CLUSTER with the default name, but the
+      * sink's DDL paths (TRUNCATE for overwrite, ALTER ... DELETE) must
+      * not assume a cluster exists on a single-node server — they
+      * consult [[explicitClusterName]].
       */
     clusterNameConfigured: Boolean = false) {
 

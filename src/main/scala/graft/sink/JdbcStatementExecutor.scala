@@ -30,10 +30,7 @@ class JdbcStatementExecutor(
 
   private def ensureOpen(): Unit =
     if (conn == null) {
-      conn = (username, password) match {
-        case (Some(u), Some(p)) => DriverManager.getConnection(jdbcUrl, u, p)
-        case _ => DriverManager.getConnection(jdbcUrl)
-      }
+      conn = JdbcStatementExecutor.connect(jdbcUrl, username, password)
       stmt = conn.prepareStatement(insertSql)
     }
 
@@ -74,16 +71,15 @@ class JdbcStatementExecutor(
 
 object JdbcStatementExecutor {
 
-  /** Executor factory for ClickHouseStyleWriter.write: one executor per
-    * shard partition, connected to that shard's local node when a
-    * write-local topology is configured
-    * (ClickHouseShardOutputFormat.java:60-70).
+  /** The one way the sink opens a JDBC connection — row writes, driver-side
+    * mutations and the read path all authenticate alike. Credentials are
+    * sent only when both are set; GraftSinkOptions.fromMap rejects one
+    * without the other (ClickHouseDynamicTableFactory.java:139-144).
     */
-  def factory(options: GraftSinkOptions, schema: StructType,
-      fieldNames: Seq[String]): Int => StatementExecutor = { shard =>
-    new JdbcStatementExecutor(
-      ShardTopology.urlForShard(options, shard),
-      StatementFactory.insertInto(options.tableName, fieldNames),
-      schema, options.username, options.password)
-  }
+  def connect(url: String, username: Option[String],
+      password: Option[String]): Connection =
+    (username, password) match {
+      case (Some(u), Some(p)) => DriverManager.getConnection(url, u, p)
+      case _ => DriverManager.getConnection(url)
+    }
 }

@@ -1,14 +1,14 @@
 package graft.sink
 
-/** SQL statement templates for the ClickHouse-style sink, reproducing the
-  * reference generator byte for byte
-  * (CH/table/internal/ClickHouseStatementFactory.java:11-118):
-  * batch INSERT with positional placeholders, mutation-style
-  * ALTER TABLE ... UPDATE / DELETE with optional ON CLUSTER, a row-exists
-  * probe, and backtick identifier quoting. Note the reference quirk kept
-  * intact: the collapsing/replacing insert variants are identical to the
-  * plain insert — the sign/version column simply rides in fieldNames
-  * (ClickHouseStatementFactory.java:27-59).
+/** SQL statement templates for the ClickHouse-style sink, in the
+  * reference generator's grammar
+  * (CH/table/internal/ClickHouseStatementFactory.java:11-118): batch
+  * INSERT with positional placeholders and backtick identifier quoting.
+  * Collapsing and replacing writes use the same INSERT — the sign/flag
+  * column simply rides in fieldNames (ClickHouseStatementFactory.java:27-59).
+  * Beyond the reference's append-only surface: TRUNCATE and
+  * ALTER ... DELETE WHERE for overwrite and SQL DELETE, and the read
+  * path's SELECT.
   */
 object StatementFactory {
 
@@ -20,41 +20,15 @@ object StatementFactory {
     s"INSERT INTO ${quoteIdentifier(tableName)}($columns) VALUES ($placeholders)"
   }
 
-  /** Identical to [[insertInto]] by design (see object scaladoc). */
-  def collapsingInsert(tableName: String, fieldNames: Seq[String]): String =
-    insertInto(tableName, fieldNames)
-
-  /** Identical to [[insertInto]] by design (see object scaladoc). */
-  def replacingInsert(tableName: String, fieldNames: Seq[String]): String =
-    insertInto(tableName, fieldNames)
-
-  def update(tableName: String, fieldNames: Seq[String],
-      conditionFields: Seq[String], clusterName: Option[String]): String = {
-    val setClause = fieldNames.filterNot(conditionFields.contains)
-      .map(f => s"${quoteIdentifier(f)}=?").mkString(", ")
-    val cond = conditionFields.map(f => s"${quoteIdentifier(f)}=?")
-      .mkString(" AND ")
-    s"ALTER TABLE ${quoteIdentifier(tableName)}${onCluster(clusterName)}" +
-      s" UPDATE $setClause WHERE $cond"
-  }
-
-  def delete(tableName: String, conditionFields: Seq[String],
-      clusterName: Option[String]): String = {
-    val cond = conditionFields.map(f => s"${quoteIdentifier(f)}=?")
-      .mkString(" AND ")
-    s"ALTER TABLE ${quoteIdentifier(tableName)}${onCluster(clusterName)}" +
-      s" DELETE WHERE $cond"
-  }
-
   /** Overwrite support (beyond the reference, which is append-only):
     * ClickHouse's TRUNCATE TABLE, with the same ON CLUSTER variant as
-    * the mutation statements.
+    * [[deleteWhere]].
     */
   def truncate(tableName: String, clusterName: Option[String]): String =
     s"TRUNCATE TABLE ${quoteIdentifier(tableName)}${onCluster(clusterName)}"
 
   /** Filter-based mutation (SQL `DELETE FROM` / overwrite-by-filter):
-    * same ALTER mutation grammar as [[delete]], but with a
+    * the reference's ALTER ... DELETE mutation grammar, with a
     * pre-rendered WHERE condition instead of PK-equality placeholders.
     */
   def deleteWhere(tableName: String, condition: String,
@@ -76,12 +50,6 @@ object StatementFactory {
       if (where.isEmpty) ""
       else where.mkString(" WHERE (", ") AND (", ")")
     s"SELECT $cols FROM ${quoteIdentifier(tableName)}$cond"
-  }
-
-  def rowExists(tableName: String, conditionFields: Seq[String]): String = {
-    val cond = conditionFields.map(f => s"${quoteIdentifier(f)}=?")
-      .mkString(" AND ")
-    s"SELECT 1 FROM ${quoteIdentifier(tableName)} WHERE $cond"
   }
 
   private def onCluster(clusterName: Option[String]): String =

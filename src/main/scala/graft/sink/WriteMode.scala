@@ -12,16 +12,12 @@ package graft.sink
   * Collapsing wins if both fields are set (the reference checks it first),
   * but — mirroring the field-append loop at :84-119 — BOTH extra column
   * names are appended to the insert field list in that case.
-  * The upsert executor exists in the reference but is dead code
-  * (createUpsertExecutor never called); we expose it as an explicit mode
-  * for completeness, reachable only by direct request.
   */
 sealed trait WriteMode
 object WriteMode {
   case object InsertOnly extends WriteMode
   case object Collapsing extends WriteMode
   case object Replacing extends WriteMode
-  case object Upsert extends WriteMode
 
   def dispatch(options: GraftSinkOptions, hasPrimaryKey: Boolean): WriteMode =
     if (hasPrimaryKey && options.collapsingField.isDefined) Collapsing

@@ -341,20 +341,6 @@ object GraftBatchWrite {
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftBatchWrite])
 
-  /** TRUNCATE with the sink's retry contract (same linear 1000·attempt
-    * backoff as BufferedRetryWriter) and the same credential rule as
-    * JdbcStatementExecutor: credentials are sent only when BOTH username
-    * and password are configured — the two halves of one overwrite must
-    * authenticate identically.
-    *
-    * ON CLUSTER is emitted only when the user explicitly configured
-    * `cluster-name` — a single-node server has no 'default_cluster' and
-    * would reject the implicit default even though appends work. Without
-    * a cluster name the statement reaches only the node it is sent to,
-    * so in write-local mode the truncate is issued to EVERY shard node —
-    * otherwise an overwrite would clear shard 0 and leave old rows on
-    * the rest.
-    */
   /** The node(s) a truncate must reach: with an explicit cluster name
     * one ON CLUSTER statement on the coordinator fans out; without one,
     * write-local mode must hit every shard node individually.
@@ -373,6 +359,19 @@ object GraftBatchWrite {
     urls.distinct
   }
 
+  /** TRUNCATE with the sink's retry contract (same linear 1000·attempt
+    * backoff as BufferedRetryWriter), connecting through the same
+    * JdbcStatementExecutor.connect as the row writers — the two halves
+    * of one overwrite must authenticate identically.
+    *
+    * ON CLUSTER is emitted only when the user explicitly configured
+    * `cluster-name` — a single-node server has no 'default_cluster' and
+    * would reject the implicit default even though appends work. Without
+    * a cluster name the statement reaches only the node it is sent to,
+    * so in write-local mode the truncate is issued to EVERY shard node —
+    * otherwise an overwrite would clear shard 0 and leave old rows on
+    * the rest.
+    */
   private[dsv2] def truncateWithRetry(options: GraftSinkOptions): Unit =
     executeMutationWithRetry(options, graft.sink.StatementFactory.truncate(
       options.tableName, options.explicitClusterName))
@@ -389,11 +388,8 @@ object GraftBatchWrite {
       while (!done) {
         attempt += 1
         try {
-          val conn = (options.username, options.password) match {
-            case (Some(u), Some(p)) =>
-              java.sql.DriverManager.getConnection(url, u, p)
-            case _ => java.sql.DriverManager.getConnection(url)
-          }
+          val conn = JdbcStatementExecutor.connect(url, options.username,
+            options.password)
           try {
             val st = conn.createStatement()
             try st.execute(sql) finally st.close()

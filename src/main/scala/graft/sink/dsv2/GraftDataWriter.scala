@@ -13,9 +13,10 @@ import graft.sink._
   * row-at-a-time — exactly where the reference does it (the converter
   * appends sign/flag at index arity+1 and the executor drops D/-U,
   * ClickHouseRowConverter.java:66-96, ClickHouseBatchExecutor.java:50) —
-  * then runs the same BufferedRetryWriter hot path as the
-  * foreachPartition route (count-trigger flush, retry, final flush on
-  * commit — ClickHouseBatchOutputFormat.java:44-79).
+  * then hands the rows to a BufferedRetryWriter (count-trigger flush,
+  * retry, final flush on commit — ClickHouseBatchOutputFormat.java:44-79).
+  * This is the sink's one write path: batch and streaming writes both
+  * arrive here.
   */
 class GraftDataWriterFactory(options: GraftSinkOptions, pk: Seq[String],
     executorKind: String, schema: StructType)
@@ -132,31 +133,33 @@ object MemorySinkRegistry {
   def clearTable(table: String): Unit =
     batches.removeIf(_._1 == table)
 
-  /** Row-level mutation for DELETE WHERE / overwrite-by-filter: drop
-    * buffered rows matching the predicate, keeping batch identity (the
-    * streaming replay offsets stay valid — a mutated batch replays its
-    * surviving rows).
-    */
-  /** Atomic-swap for staged replacement writes (row-level operations):
-    * the staging table's rows become the real table's in one pass.
+  /** Swap for staged replacement writes (row-level operations): the
+    * real table's batches are dropped and each staging batch is moved
+    * under the real table's name, one at a time, so a batch that another
+    * writer adds meanwhile is never lost.
     */
   def swap(from: String, to: String): Unit = {
     import scala.jdk.CollectionConverters._
     batches.removeIf(_._1 == to)
-    val moved = batches.asScala.filter(_._1 == from).toSeq
-    batches.removeIf(_._1 == from)
-    moved.foreach { case (_, pid, rows) => batches.add((to, pid, rows)) }
-  }
-
-  def deleteWhere(table: String, pred: org.apache.spark.sql.Row => Boolean): Unit = {
-    import scala.jdk.CollectionConverters._
-    val snapshot = batches.asScala.toSeq
-    batches.clear()
-    snapshot.foreach { case (t, pid, rows) =>
-      if (t == table) batches.add((t, pid, rows.filterNot(pred)))
-      else batches.add((t, pid, rows))
+    batches.asScala.filter(_._1 == from).toList.foreach { e =>
+      if (batches.remove(e)) batches.add((to, e._2, e._3))
     }
   }
+
+  /** Row-level mutation for DELETE WHERE / overwrite-by-filter: drop
+    * buffered rows matching the predicate, keeping batch identity (the
+    * streaming replay offsets stay valid — a mutated batch replays its
+    * surviving rows). Only this table's batches are replaced, one at a
+    * time and in commit order, so other tables' concurrent writes are
+    * never touched.
+    */
+  def deleteWhere(table: String, pred: Row => Boolean): Unit = {
+    import scala.jdk.CollectionConverters._
+    batches.asScala.filter(_._1 == table).toList.foreach { e =>
+      if (batches.remove(e)) batches.add((table, e._2, e._3.filterNot(pred)))
+    }
+  }
+
   def all: Seq[(Int, Seq[Row])] = {
     import scala.jdk.CollectionConverters._
     batches.asScala.toSeq.map(e => (e._2, e._3))
@@ -167,7 +170,6 @@ object MemorySinkRegistry {
   }
 
   class Exec(table: String, partition: Int) extends StatementExecutor {
-    def this(partition: Int) = this("", partition)
     override def executeBatch(rows: Seq[Row]): Unit =
       batches.add((table, partition, rows))
   }

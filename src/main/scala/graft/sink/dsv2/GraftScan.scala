@@ -1,6 +1,6 @@
 package graft.sink.dsv2
 
-import java.sql.{DriverManager, ResultSet}
+import java.sql.ResultSet
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-import graft.sink.{GraftSinkOptions, ShardTopology, StatementFactory}
+import graft.sink.{GraftSinkOptions, JdbcStatementExecutor, ShardTopology, StatementFactory}
 
 /** DSv2 batch READ for the clickhouse-style source — the reference's
   * JDBC→row converter (R15, ClickHouseRowConverter.java:98-147) is dead
@@ -427,7 +427,7 @@ class GraftScan(options: GraftSinkOptions, executorKind: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(fullSchema, readSchema(),
+    new GraftScanReaderFactory(fullSchema, readSchema(),
       options.username, options.password, agg, limit)
 
   /** Streaming READ: replay the table's committed batches as
@@ -546,7 +546,7 @@ case class GraftMemoryPartition(table: String, pid: Int)
 case class GraftJdbcPartition(url: String, sql: String, shard: Int = -1)
     extends InputPartition
 
-class GraftReaderFactory(fullSchema: StructType, required: StructType,
+class GraftScanReaderFactory(fullSchema: StructType, required: StructType,
     username: Option[String], password: Option[String],
     agg: Option[PushedAgg] = None, limit: Option[Int] = None)
     extends PartitionReaderFactory {
@@ -724,12 +724,7 @@ class GraftJdbcReader(url: String, sql: String, required: StructType,
     }
   }
 
-  private lazy val conn = {
-    val props = new java.util.Properties()
-    username.foreach(props.setProperty("user", _))
-    password.foreach(props.setProperty("password", _))
-    DriverManager.getConnection(url, props)
-  }
+  private lazy val conn = JdbcStatementExecutor.connect(url, username, password)
   // not lazy-forced in close(): a task cancelled before its first
   // next() must not execute the whole SELECT just to tear down
   private var opened = false

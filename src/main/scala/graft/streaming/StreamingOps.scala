@@ -2,10 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
-
-import graft.sink.{ClickHouseStyleWriter, GraftSinkOptions, StatementExecutor}
 
 /** Structured Streaming parity for the reference's sink semantics
   * (SURVEY.md §2b streaming tail). The reference couples a count trigger
@@ -42,21 +38,6 @@ object StreamingOps {
     */
   def opSign(op: String): Long =
     if (op == "I" || op == "+U") 1L else -1L
-
-  /** stream_append_sink / stream_count_time_trigger: a changelog stream
-    * written through the full sink path on every micro-batch; the trigger
-    * interval carries the reference's flush-interval semantics.
-    */
-  def changelogSink(stream: DataFrame, options: GraftSinkOptions,
-      primaryKey: Seq[String], numShards: Int,
-      executorFactory: Int => StatementExecutor): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(options.flushInterval.toMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ClickHouseStyleWriter.write(
-          batch, options, primaryKey, numShards, executorFactory)
-      }
 
   /** stream_tumbling_watermark: event-time tumbling window counts with a
     * watermark bounding state; late rows beyond the watermark are dropped

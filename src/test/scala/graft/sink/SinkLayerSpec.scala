@@ -1,5 +1,9 @@
 package graft.sink
 
+import java.lang.reflect.Proxy
+import java.sql.{Connection, Driver, DriverManager, DriverPropertyInfo, SQLFeatureNotSupportedException}
+import java.util.Properties
+
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,19 +76,14 @@ class SinkLayerSpec extends AnyFunSuite {
   }
 
   test("collapsing/replacing inserts are identical to plain insert") {
-    val plain = StatementFactory.insertInto("t", Seq("a", "sign"))
-    assert(StatementFactory.collapsingInsert("t", Seq("a", "sign")) == plain)
-    assert(StatementFactory.replacingInsert("t", Seq("a", "sign")) == plain)
-  }
-
-  test("mutation update/delete with ON CLUSTER") {
-    assert(StatementFactory.update("t", Seq("a", "b", "k"), Seq("k"),
-      Some("c1")) ==
-      "ALTER TABLE `t` ON CLUSTER `c1` UPDATE `a`=?, `b`=? WHERE `k`=?")
-    assert(StatementFactory.delete("t", Seq("k1", "k2"), None) ==
-      "ALTER TABLE `t` DELETE WHERE `k1`=? AND `k2`=?")
-    assert(StatementFactory.rowExists("t", Seq("k")) ==
-      "SELECT 1 FROM `t` WHERE `k`=?")
+    // the sign/flag column simply rides in the field list
+    // (ClickHouseStatementFactory.java:27-59)
+    Seq("table.collapsing.field", "table.replacing.field").foreach { k =>
+      val o = GraftSinkOptions.fromMap(base + (k -> "sign"))
+      assert(StatementFactory.insertInto("t",
+        WriteMode.insertFieldNames(o, hasPrimaryKey = true, Seq("a"))) ==
+        StatementFactory.insertInto("t", Seq("a", "sign")))
+    }
   }
 
   test("truncate emits ON CLUSTER only when cluster-name was configured") {
@@ -138,25 +137,42 @@ class SinkLayerSpec extends AnyFunSuite {
       insertOnlyStream = true) // fine
   }
 
-  // --- read path (R15) ---
-
-  test("range predicates cover the domain without overlap") {
-    val preds = GraftReader.rangePredicates("id", 0, 100, 4)
-    assert(preds.length == 4)
-    assert(preds(0) == "`id` < 25")
-    assert(preds(1) == "`id` >= 25 AND `id` < 50")
-    assert(preds(3) == "`id` >= 75") // open-ended: catches upper & strays
-    assert(GraftReader.rangePredicates("id", 0, 10, 1).toSeq == Seq("1=1"))
-    // degenerate range still yields valid, non-overlapping predicates
-    assert(GraftReader.rangePredicates("id", 5, 5, 3).length == 3)
-  }
+  // --- connections ---
 
   test("connection properties carry credentials only when configured") {
-    val anon = GraftReader.connectionProperties(GraftSinkOptions.fromMap(base))
-    assert(anon.isEmpty)
-    val auth = GraftReader.connectionProperties(GraftSinkOptions.fromMap(
-      base + ("username" -> "u") + ("password" -> "p")))
-    assert(auth.getProperty("user") == "u" && auth.getProperty("password") == "p")
+    // a probe driver records the properties each connect hands it
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Properties]()
+    val probe = new Driver {
+      def acceptsURL(url: String): Boolean = url.startsWith("jdbc:probe:")
+      def connect(url: String, info: Properties): Connection =
+        if (!acceptsURL(url)) null
+        else {
+          seen.add(info)
+          Proxy.newProxyInstance(getClass.getClassLoader,
+            Array(classOf[Connection]), (_, _, _) => null)
+            .asInstanceOf[Connection]
+        }
+      def getPropertyInfo(url: String, info: Properties) =
+        Array.empty[DriverPropertyInfo]
+      def getMajorVersion: Int = 1
+      def getMinorVersion: Int = 0
+      def jdbcCompliant(): Boolean = false
+      def getParentLogger: java.util.logging.Logger =
+        throw new SQLFeatureNotSupportedException()
+    }
+    DriverManager.registerDriver(probe)
+    try {
+      def connectWith(extra: Map[String, String]): Properties = {
+        val o = GraftSinkOptions.fromMap(base ++ extra +
+          ("url" -> "jdbc:probe:t"))
+        JdbcStatementExecutor.connect(o.url, o.username, o.password)
+        seen.poll()
+      }
+      assert(connectWith(Map.empty).isEmpty)
+      val auth = connectWith(Map("username" -> "u", "password" -> "p"))
+      assert(auth.getProperty("user") == "u" &&
+        auth.getProperty("password") == "p")
+    } finally DriverManager.deregisterDriver(probe)
   }
 
   // --- type mapping (R14/R17) ---

@@ -30,6 +30,21 @@ class Dsv2WriteSpec extends AnyFunSuite with SparkSuite {
     assert(rows.head.get(1).isInstanceOf[String])
   }
 
+  test("count trigger flushes full batches and the remainder on commit (R4)") {
+    MemorySinkRegistry.clearTable("t_count")
+    import spark.implicits._
+    (1L to 50L).map(i => (i, i * 1.0)).toDF("id", "v")
+      .coalesce(1).write.format("clickhouse-style")
+      .option("url", "clickhouse://localhost:8123")
+      .option("table-name", "t_count")
+      .option("sink.batch-size", "20")
+      .option("graft.executor", "memory")
+      .mode("append").save()
+    // two mid-partition flushes, then the final flush of the remainder
+    assert(MemorySinkRegistry.allFor("t_count").map(_._2.size) ==
+      Seq(20, 20, 10))
+  }
+
   test("changelog semantics apply in the DSv2 path: collapsing sign") {
     MemorySinkRegistry.clear()
     import spark.implicits._
@@ -319,6 +334,32 @@ class Dsv2WriteSpec extends AnyFunSuite with SparkSuite {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(x => Option(x.getMessage).getOrElse("")).toSeq
     assert(chain(e).exists(_.contains("Complete output mode")), e.toString)
+  }
+
+  test("deleteWhere on one table keeps another table's concurrent batches") {
+    import org.apache.spark.sql.Row
+    Seq("t_race_a", "t_race_b").foreach(MemorySinkRegistry.clearTable)
+    val a = new MemorySinkRegistry.Exec("t_race_a", 0)
+    (1L to 20L).foreach(i => a.executeBatch(Seq(Row(i))))
+    val n = 5000
+    val appender = new Thread(() => {
+      val b = new MemorySinkRegistry.Exec("t_race_b", 0)
+      (1L to n.toLong).foreach(i => b.executeBatch(Seq(Row(i))))
+    })
+    appender.start()
+    var passes = 0
+    while (appender.isAlive || passes == 0) {
+      MemorySinkRegistry.deleteWhere("t_race_a", _.getLong(0) % 2 == 0)
+      passes += 1
+    }
+    appender.join()
+    val b = MemorySinkRegistry.allFor("t_race_b")
+    val lost = n - b.size
+    assert(lost == 0, s"lost $lost batches over $passes passes")
+    assert(b.flatMap(_._2).map(_.getLong(0)) == (1L to n.toLong))
+    // table A: odd ids survive, one batch per original batch, in order
+    assert(MemorySinkRegistry.allFor("t_race_a").map(_._2.map(_.getLong(0)))
+      == (1L to 20L).map(i => if (i % 2 == 0) Seq.empty else Seq(i)))
   }
 
   test("missing table-name rejected") {

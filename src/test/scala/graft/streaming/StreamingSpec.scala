@@ -2,18 +2,20 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
-import graft.sink.{CollectingSink, GraftSinkOptions}
+import graft.sink.dsv2.MemorySinkRegistry
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, value: Double)
 
 /** Streaming parity (SURVEY.md §2b tail): MemoryStream-driven checks of
-  * watermarked windows, late-data drop, stateful dedup, and the
-  * foreachBatch sink adapter.
+  * watermarked windows, late-data drop, stateful dedup, and streams
+  * written through `writeStream.format("clickhouse-style")`.
   */
 class StreamingSpec extends AnyFunSuite with SparkSuite {
 
@@ -100,24 +102,36 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     assert(out.filter($"event_id" === 1).count() == 2)
   }
 
-  test("stream_append_sink: foreachBatch drives the buffered sink (R4/R9)") {
+  /** A writer of `df` to the clickhouse-style sink's memory endpoint. */
+  private def toSink(df: org.apache.spark.sql.DataFrame, table: String,
+      mode: String): DataStreamWriter[Row] = {
+    MemorySinkRegistry.clearTable(table)
+    df.writeStream.format("clickhouse-style")
+      .outputMode(mode)
+      .option("url", "clickhouse://localhost:8123")
+      .option("table-name", table)
+      .option("primary-key", "user_id")
+      .option("graft.executor", "memory")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-sink-ckpt").toString)
+  }
+
+  test("stream_append_sink: micro-batches drive the buffered sink (R4/R9)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    CollectingSink.clear()
     val mem = MemoryStream[(Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "op", "value")
-    val opts = GraftSinkOptions.fromMap(Map(
-      "url" -> "clickhouse://localhost:8123", "table-name" -> "t",
-      "sink.batch-size" -> "2", "sink.flush-interval" -> "1s"))
-    val q = StreamingOps.changelogSink(df, opts,
-      primaryKey = Seq("user_id"), numShards = 1,
-      new CollectingSink.Exec(_)).start()
+    // the trigger interval carries the reference's flush-interval
+    val q = toSink(df, "t_append_sink", "append")
+      .option("sink.batch-size", "2")
+      .trigger(Trigger.ProcessingTime("1 second"))
+      .start()
     try {
       mem.addData((1L, "I", 1.0), (2L, "D", 2.0), (3L, "+U", 3.0))
       q.processAllAvailable()
     } finally q.stop()
-    val rows = CollectingSink.all.flatMap(_._2)
-    // insert-only mode (no PK): the D row is dropped
+    val rows = MemorySinkRegistry.allFor("t_append_sink").flatMap(_._2)
+    // insert-only mode (no collapsing/replacing field): the D row is dropped
     assert(rows.map(_.getLong(0)).sorted == Seq(1L, 3L))
   }
 
@@ -154,10 +168,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("file-source streaming: parquet ingest through agg into the sink") {
     // end-to-end: readStream over a parquet directory (the 100 TB ingest
-    // shape), per-user counts in update mode, foreachBatch into the
-    // buffered sink — the full pipeline a production deployment runs
-    import org.apache.spark.sql.functions.{col, count, lit}
-    CollectingSink.clear()
+    // shape), per-user counts in update mode, appended through the
+    // clickhouse-style sink — the full pipeline a production deployment runs
+    import org.apache.spark.sql.functions.{count, lit}
     val src = java.nio.file.Files.createTempDirectory("graft-fstream")
     import spark.implicits._
     Seq((1L, 1.0), (1L, 2.0), (2L, 3.0)).toDF("user_id", "value")
@@ -166,17 +179,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .schema("user_id LONG, value DOUBLE")
       .parquet(src.toString)
       .groupBy("user_id").agg(count(lit(1)).as("n"))
-    val opts = GraftSinkOptions.fromMap(Map(
-      "url" -> "clickhouse://localhost:8123", "table-name" -> "t"))
-    val q = stream.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.sink.ClickHouseStyleWriter.write(batch, opts,
-          primaryKey = Seq("user_id"), numShards = 1,
-          new CollectingSink.Exec(_))
-      }.start()
+    val q = toSink(stream, "t_file_agg", "update").start()
     try q.processAllAvailable() finally q.stop()
-    val rows = CollectingSink.all.flatMap(_._2)
+    val rows = MemorySinkRegistry.allFor("t_file_agg").flatMap(_._2)
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     assert(rows == Seq((1L, 2L), (2L, 1L)))
   }
