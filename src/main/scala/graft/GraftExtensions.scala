@@ -6,13 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.expressions._
 
-/** Session-extension entry point: makes the graft expressions available in
-  * any session created with
+/** Session-extension entry point: the ONLY place the graft functions,
+  * optimizer rules and the as-of planner strategy enter a session.
+  * Available in any session created with
   *   spark.sql.extensions=graft.GraftExtensions
   * or SparkSession.builder().withExtensions(new GraftExtensions) — the
-  * deployment-config analog of the reference's SPI factory discovery. The
-  * same expressions are also registered imperatively per session by
-  * VectorExpressions.register / TextExpressions.register.
+  * deployment-config analog of the reference's SPI factory discovery.
+  * GraftSession.build installs it in every harness session; nothing
+  * registers functions or strategies per query.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -81,8 +82,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // BroadcastNestedLoopJoin — identical rows, linear instead of
     // quadratic comparisons (r9 verdict #2)
     e.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
-    // the native as-of join operator (custom LogicalPlan -> SparkPlan);
-    // AsOfJoinOps.asofJoin also self-registers via experimental methods
+    // the native as-of join operator (custom LogicalPlan -> SparkPlan)
     e.injectPlannerStrategy(_ => graft.operators.AsOfJoinStrategy)
   }
 }

@@ -205,7 +205,6 @@ object PipelineRun {
 
   def run(spark: SparkSession, sfDir: String, outDir: String,
           budgetFrac: Double = 0.6): Seq[StageResult] = {
-    graft.expressions.TextExpressions.register(spark)
     val ledger = new Ledger
 
     // 1. ingest — ONE scan, persisted (ingest measure, bench_split, and
@@ -377,7 +376,6 @@ object PipelineRun {
     */
   def prepareState(spark: SparkSession, sfDir: String, stateDir: String,
                    basePct: Double = 0.8): (Long, Double) = {
-    graft.expressions.TextExpressions.register(spark)
     val t0 = System.nanoTime()
     val withCut = corpusWithCut(spark, sfDir, basePct)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -419,7 +417,6 @@ object PipelineRun {
   def incremental(spark: SparkSession, sfDir: String, outDir: String,
                   basePct: Double = 0.8,
                   stateDir: Option[String] = None): Seq[StageResult] = {
-    graft.expressions.TextExpressions.register(spark)
     val ledger = new Ledger
 
     val benchDocs = Tables(spark, sfDir, "documents")

@@ -27,7 +27,7 @@ object SparkEntry {
     * MEMORY_AND_DISK block outlives its query in a long-lived session
     * (Bench opts out — see CacheScope).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (k, f) =>
       k -> ((s: SparkSession, d: String) => CacheScope.scoped(f(s, d)))
     }
@@ -170,29 +170,36 @@ object SparkEntry {
     (Round12hQueries.queries, Round12hQueries.oracle),
     (Round12iQueries.queries, Round12iQueries.oracle))
 
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = {
-    val b = Map.newBuilder[String, (SparkSession, String) => DataFrame]
-    groups.foreach(g => b ++= g._1)
-    val merged = b.result()
-    // a key declared in two batches would silently SHADOW the earlier
-    // one (Map ++ keeps the later entry) — its oracle, contract, and
-    // floor would then disagree about which query they describe. Caught
-    // live once (q_permutation_test, round-10 continuation); fail loud.
-    val declared = groups.map(_._1.size).sum
-    require(merged.size == declared, {
-      val dups = groups.flatMap(_._1.keys)
+  /** Merges one side of every batch. A key declared in two batches
+    * would silently SHADOW the earlier one (Map ++ keeps the later
+    * entry) — its oracle, contract, and floor would then disagree about
+    * which query they describe. Caught live once (q_permutation_test,
+    * round-10 continuation); fail loud.
+    */
+  private def merged[V](side: Seq[Map[String, V]], what: String)
+      : Map[String, V] = {
+    val m = side.foldLeft(Map.empty[String, V])(_ ++ _)
+    require(m.size == side.map(_.size).sum, {
+      val dups = side.flatMap(_.keys)
         .groupBy(identity).collect { case (k, v) if v.size > 1 => k }
-      s"duplicate query keys across batches: ${dups.mkString(", ")}"
+      s"duplicate $what keys across batches: ${dups.mkString(", ")}"
     })
-    merged
+    m
   }
 
+  private lazy val rawQueries
+      : Map[String, (SparkSession, String) => DataFrame] =
+    merged(groups.map(_._1), "query")
+
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check.
+    * the same parquet tables. Omitted keys get a weaker rows-only check;
+    * a key that names no query fails loud.
     */
-  def oracleSql: Map[String, String] = {
-    val b = Map.newBuilder[String, String]
-    groups.foreach(g => b ++= g._2)
-    b.result()
+  lazy val oracleSql: Map[String, String] = {
+    val m = merged(groups.map(_._2), "oracle")
+    val orphans = m.keySet -- rawQueries.keySet
+    require(orphans.isEmpty,
+      s"oracle keys with no query: ${orphans.toSeq.sorted.mkString(", ")}")
+    m
   }
 }

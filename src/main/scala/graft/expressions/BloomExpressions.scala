@@ -2,7 +2,6 @@ package graft.expressions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -58,13 +57,4 @@ case class BloomMightContain(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object BloomExpressions {
-
-  private val FnName = "graft_bloom_might_contain"
-
-  def register(spark: SparkSession): Unit =
-    Registration.tempFn(spark,
-      FnName, exprs => BloomMightContain(exprs(0), exprs(1)))
 }

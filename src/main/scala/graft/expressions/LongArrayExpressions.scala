@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -22,13 +21,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * WholeStageCodegen span.
   */
 object LongArrayExpressions {
-
-  def register(s: SparkSession): Unit = {
-    Registration.tempFn(s, "graft_lsorted_intersect_size",
-      exprs => LongSortedIntersectSize(exprs(0), exprs(1)))
-    Registration.tempFn(s, "graft_lsorted_intersect",
-      exprs => LongSortedIntersect(exprs(0), exprs(1)))
-  }
 
   private[expressions] def checkLongArrays(
       prettyName: String, exprs: Seq[Expression]): TypeCheckResult = {

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,13 +91,8 @@ object RankExpressions {
 
   private val FnName = "graft_bounds_bucket"
 
-  /** Idempotently register in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.tempFn(spark,
-      FnName, exprs => BoundsBucket(exprs(0), exprs(1)))
-
   /** Bucket id of `value` against the sorted boundary array `bounds`,
-    * 0 when either side is NULL (requires register(spark) first).
+    * 0 when either side is NULL (resolved through GraftExtensions).
     */
   def bucketOf(bounds: Column, value: Column): Column =
     org.apache.spark.sql.functions.coalesce(

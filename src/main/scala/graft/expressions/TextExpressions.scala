@@ -69,21 +69,19 @@ object TextExpressions {
     mins
   }
 
+  private val FnNames = Seq("graft_jaro_winkler", "graft_minhash_bands",
+    "graft_array_intersect_size", "graft_shingles", "graft_shingles5",
+    "graft_poly_hash", "graft_minhash_sig")
+
+  /** Checks that the session resolves the text functions. It registers
+    * nothing: [[graft.GraftExtensions]] injects them into every session
+    * built by GraftSession.build.
+    */
   def register(spark: SparkSession): Unit = {
-    Registration.tempFn(spark, "graft_jaro_winkler",
-      exprs => JaroWinkler(exprs(0), exprs(1)))
-    Registration.tempFn(spark, "graft_minhash_bands",
-      exprs => MinhashBandKeys(exprs.head))
-    Registration.tempFn(spark, "graft_array_intersect_size",
-      exprs => ArrayIntersectSize(exprs(0), exprs(1)))
-    Registration.tempFn(spark, "graft_shingles",
-      exprs => ShingleArray(exprs.head))
-    Registration.tempFn(spark, "graft_shingles5",
-      exprs => ShingleArray(exprs.head, n = 5))
-    Registration.tempFn(spark, "graft_poly_hash",
-      exprs => StringPolyHash(exprs.head))
-    Registration.tempFn(spark, "graft_minhash_sig",
-      exprs => MinhashSignature(exprs.head))
+    val missing = FnNames.filterNot(spark.catalog.functionExists)
+    require(missing.isEmpty, s"text functions ${missing.mkString(", ")} " +
+      "do not resolve: build the session with GraftSession.build " +
+      "(spark.sql.extensions=graft.GraftExtensions)")
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -204,20 +204,10 @@ object VectorExpressions {
   private val FnName = "graft_vec_dot"
   private val SqFnName = "graft_vec_sqdist"
 
-  /** Idempotently register the expressions in the session's function
-    * registry; queries call this before building plans that use them.
-    */
-  def register(spark: SparkSession): Unit = {
-    Registration.tempFn(spark,
-      FnName, exprs => VectorDotProduct(exprs(0), exprs(1)))
-    Registration.tempFn(spark,
-      SqFnName, exprs => VectorSqDist(exprs(0), exprs(1)))
-  }
-
-  /** Column API for the dot product (requires register(spark) first). */
+  /** Column API for the dot product (resolved through GraftExtensions). */
   def vecDot(a: Column, b: Column): Column = call_function(FnName, a, b)
 
-  /** Column API for squared distance (requires register(spark) first). */
+  /** Column API for squared distance (resolved through GraftExtensions). */
   def vecSqDist(a: Column, b: Column): Column =
     call_function(SqFnName, a, b)
 }

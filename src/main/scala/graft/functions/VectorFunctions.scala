@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
 object VectorFunctions {
 
   /** Left-to-right double dot product of two float arrays, via the
-    * codegen'd VectorDotProduct expression (requires
-    * VectorExpressions.register(spark) — PipelineQueries does this).
+    * codegen'd VectorDotProduct expression (graft_vec_dot, injected by
+    * GraftExtensions).
     * Bitwise-identical to the interpreted fold in [[dotFold]].
     */
   def dotD(a: Column, b: Column): Column =
@@ -34,7 +34,8 @@ object VectorFunctions {
   def normD(a: Column): Column = sqrt(dotD(a, a))
 
   /** Left-to-right squared euclidean distance Σ(a−b)² via the codegen'd
-    * VectorSqDist expression (requires VectorExpressions.register).
+    * VectorSqDist expression (graft_vec_sqdist, injected by
+    * GraftExtensions).
     * Bitwise-identical to [[sqDistFold]].
     */
   def sqDistD(a: Column, b: Column): Column =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 
@@ -27,7 +27,6 @@ object AsOfJoinOps {
     require(leftKeys.length == rightKeys.length,
       "leftKeys and rightKeys must pair up")
     val spark = left.sparkSession
-    ensureStrategy(spark)
     val lPlan = left.queryExecution.analyzed
     // fresh expr ids on the right: self-derived sides stay unambiguous
     val rAliased = Project(
@@ -44,14 +43,5 @@ object AsOfJoinOps {
       res(rOut, rightTime, "right"),
       rightTieBreak.map(res(rOut, _, "right")), direction)
     GraftSqlBridge.ofRows(spark, node)
-  }
-
-  /** Idempotently registers the planner strategy on the session (also
-    * injected by GraftExtensions for config-driven sessions).
-    */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
   }
 }

@@ -58,7 +58,6 @@ object GlobalRank {
     */
   def withRank(df: DataFrame, metric: Column, tie: Column,
                rankCol: String, buckets: Int = 32): DataFrame = {
-    graft.expressions.RankExpressions.register(df.sparkSession)
     val mCol = "__gr_metric"
     val bCol = "__gr_bucket"
     val rCol = "__gr_rn"
@@ -106,7 +105,6 @@ object GlobalRank {
     */
   def withGroupRank(df: DataFrame, groups: Seq[String], metric: Column,
       tie: Column, rankCol: String, buckets: Int = 32): DataFrame = {
-    graft.expressions.RankExpressions.register(df.sparkSession)
     val mCol = "__gr_metric"
     val bCol = "__gr_bucket"
     val rCol = "__gr_rn"
@@ -204,7 +202,6 @@ object GlobalRank {
     */
   def withNtiles(df: DataFrame, metrics: Seq[(String, String)],
                  tie: Column, k: Int, buckets: Int = 32): DataFrame = {
-    graft.expressions.RankExpressions.register(df.sparkSession)
     val mNames = metrics.map(_._1).distinct
     // boundary sketches for ALL metrics from ONE in-plan 1-row aggregate
     // (was one driver-side approxQuantile action — r13, see class doc)

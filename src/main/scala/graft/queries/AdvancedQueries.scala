@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.QueryKit.dsum
 
 /** Group D (round 2): relational depth beyond the §2b contract — the
   * temporal/merge patterns a changelog-fed warehouse needs (as-of
@@ -26,12 +27,6 @@ import graft.Tables
   */
 object AdvancedQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast("double")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // As-of join: each click enriched with the latest purchase (same
@@ -45,7 +40,7 @@ object AdvancedQueries {
     // makes the sort total. The oracle is DuckDB's native ASOF JOIN —
     // an independent implementation of the same semantics.
     "q_asof_join" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("us"), lit(1).as("side"),
@@ -79,7 +74,7 @@ object AdvancedQueries {
         .orderBy("us", "event_id")
       val byUserType = Window.partitionBy("user_id", "event_type")
         .orderBy("us", "event_id")
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("grp",
           row_number().over(byUser) - row_number().over(byUserType))
@@ -98,7 +93,7 @@ object AdvancedQueries {
     // here. Single shuffle on the PK.
     "q_scd2_ranges" -> ((s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy("event_id")
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("valid_from_us", unix_micros(col("ts")))
         .withColumn("valid_to_us",
           lead(col("valid_from_us"), 1).over(byUser))
@@ -114,7 +109,7 @@ object AdvancedQueries {
     // the batch materialization of the upsert executor's routing (R12).
     // arg_max keyed by the unique o_orderkey keeps it deterministic.
     "q_merge_diff" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val cut = lit("1998-01-01").cast("timestamp")
       def snap(df: DataFrame) = df.groupBy("o_custkey")
         .agg(max_by(col("o_totalprice"), col("o_orderkey")).as("price"),
@@ -137,7 +132,7 @@ object AdvancedQueries {
     // FILTER-clause conditional aggregation (count_if / filtered sums).
     "q_conditional_agg" -> ((s, dir) => {
       val high = col("value") > 100
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_total"),
           sum(when(high, 1L).otherwise(0L)).as("n_high"),
@@ -150,7 +145,7 @@ object AdvancedQueries {
     // arg_max / arg_min: value carried by the extremal version key —
     // deterministic because event_id is unique per group.
     "q_min_max_by" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         // NULL-valued rows are excluded from the arg extremes by
         // nulling their ORDERING key (Spark's min_by/max_by skip null
@@ -166,7 +161,7 @@ object AdvancedQueries {
 
     // Bitwise aggregates over the version column (shard-mask style).
     "q_bitwise_agg" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(expr("bit_and(event_id)").as("band"),
           expr("bit_or(event_id)").as("bor"),
@@ -178,7 +173,7 @@ object AdvancedQueries {
     // Sorted BEFORE concatenation on both engines (array_sort here,
     // ORDER BY inside string_agg there) so the result is total-ordered.
     "q_string_agg" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(concat_ws(",",
           transform(array_sort(collect_set(col("user_id"))),
@@ -189,7 +184,7 @@ object AdvancedQueries {
     // Table-generating explode with position (LATERAL/UNNEST surface) —
     // first 5 tokens of each document, position-tagged.
     "q_posexplode" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(slice(split(col("text"), " "), 1, 5))
             .as(Seq("pos", "tok")))
@@ -200,7 +195,7 @@ object AdvancedQueries {
     // (no interpolation, no percentile built-ins), single window pass.
     "q_quantile_disc" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("value", "event_id")
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("rn", row_number().over(w))
         .withColumn("n", count(lit(1)).over(
           Window.partitionBy("event_type")))
@@ -223,11 +218,11 @@ object AdvancedQueries {
     // bucket is 1/16th of a hot key. Oracle = the plain unsalted join.
     "q_salted_join" -> ((s, dir) => {
       val salts = 16
-      val dim = t(s, dir, "events").select(col("user_id")).distinct()
+      val dim = Tables(s, dir, "events").select(col("user_id")).distinct()
         .withColumn("tier", pmod(col("user_id"), lit(3)))
         .crossJoin(broadcast(
           s.range(salts).select(col("id").cast("int").as("salt"))))
-      val facts = t(s, dir, "events")
+      val facts = Tables(s, dir, "events")
         .withColumn("salt", pmod(col("event_id"), lit(salts)).cast("int"))
       facts.join(dim, Seq("user_id", "salt"))
         .groupBy("tier")
@@ -241,7 +236,7 @@ object AdvancedQueries {
       val d = DecimalType(18, 2)
       val w = Window.partitionBy("user_id")
         .orderBy("us", "event_id").rowsBetween(-2, 0)
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("mavg3",
           (sum(col("value").cast(d)).over(w).cast("double") /
@@ -254,7 +249,7 @@ object AdvancedQueries {
     // two-level (aggregate, then window over aggregates) shape.
     "q_yoy_revenue" -> ((s, dir) => {
       val w = Window.orderBy("yr")
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy(year(col("o_orderdate")).as("yr"))
         .agg(dsum(col("o_totalprice")).as("revenue"),
           count(lit(1)).as("n_orders"))
@@ -265,7 +260,7 @@ object AdvancedQueries {
 
     // Fixed-width value histogram — the profile/telemetry shape.
     "q_histogram" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy(floor(col("value") / 50).cast("long").as("bucket"))
         .agg(count(lit(1)).as("n"),
           min(col("value")).as("lo"), max(col("value")).as("hi"))
@@ -276,7 +271,7 @@ object AdvancedQueries {
     // joins — same plans as q_semi_join/q_anti_join, different syntax).
     "q_exists_subquery" -> ((s, dir) => {
       Seq("customer", "orders").foreach(n =>
-        t(s, dir, n).createOrReplaceTempView(s"${n}_v"))
+        Tables(s, dir, n).createOrReplaceTempView(s"${n}_v"))
       s.sql("""
         SELECT c_custkey, c_name FROM customer_v
         WHERE EXISTS (SELECT 1 FROM orders_v
@@ -291,8 +286,8 @@ object AdvancedQueries {
     // where sort-merge's sort is pure overhead and neither side
     // broadcasts — the third join strategy, requested explicitly.
     "q_shuffle_hash_join" -> ((s, dir) =>
-      t(s, dir, "orders").hint("shuffle_hash")
-        .join(t(s, dir, "lineitem"),
+      Tables(s, dir, "orders").hint("shuffle_hash")
+        .join(Tables(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
@@ -306,7 +301,7 @@ object AdvancedQueries {
       val ws = split(col("text"), " ")
       // interpreted lambda folds are per-row CPU: spread the single-file
       // scan across the cluster first (PipelineQueries.spread rationale)
-      PipelineQueries.spread(s, t(s, dir, "documents"))
+      PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"),
           size(filter(ws, w => length(w) > 5)).as("n_long_tokens"),
           array_max(transform(ws, w => length(w))).as("max_token_len"),
@@ -320,7 +315,7 @@ object AdvancedQueries {
     // without a window function — the per-row table-subquery surface.
     "q_lateral_topn" -> ((s, dir) => {
       Seq("customer", "orders").foreach(n =>
-        t(s, dir, n).createOrReplaceTempView(s"${n}_lv"))
+        Tables(s, dir, n).createOrReplaceTempView(s"${n}_lv"))
       s.sql("""
         SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
         FROM customer_lv c,
@@ -334,7 +329,7 @@ object AdvancedQueries {
     // mapped to NULL on both sides still joins — the semantic the
     // changelog PK join needs when keys carry explicit nulls.
     "q_null_safe_join" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .withColumn("k", when(col("user_id") === 0, lit(null).cast("long"))
           .otherwise(col("user_id")))
       val dim = e.select(col("k")).distinct()
@@ -352,7 +347,7 @@ object AdvancedQueries {
     // are bounded per key by the interval width, so the join output is
     // linear in input at any scale (unlike an unkeyed range join).
     "q_interval_join" -> ((s, dir) => {
-      val e = t(s, dir, "events").withColumn("us", unix_micros(col("ts")))
+      val e = Tables(s, dir, "events").withColumn("us", unix_micros(col("ts")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"), col("us").as("c_us"))
       val purchases = e.filter(col("event_type") === "purchase")
@@ -379,7 +374,7 @@ object AdvancedQueries {
       val w = Window.partitionBy("user_id")
         .orderBy("us", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("pv",
           when(col("event_type") === "purchase", col("value")))
@@ -399,18 +394,18 @@ object AdvancedQueries {
       val d = DecimalType(18, 2)
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1998-01-01").cast("timestamp")
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders")
+      Tables(s, dir, "lineitem")
+        .join(Tables(s, dir, "orders")
             .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi),
           col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "customer")),
+        .join(broadcast(Tables(s, dir, "customer")),
           col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "supplier")),
+        .join(broadcast(Tables(s, dir, "supplier")),
           col("l_suppkey") === col("s_suppkey") &&
           col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(t(s, dir, "nation")),
+        .join(broadcast(Tables(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
+        .join(broadcast(Tables(s, dir, "region")),
           col("n_regionkey") === col("r_regionkey") &&
           col("r_name") === "ASIA")
         .groupBy("n_name")
@@ -423,16 +418,16 @@ object AdvancedQueries {
     // TPC-H Q18 shape (large-volume customers): semi-join against a
     // HAVING-filtered aggregate subquery, then re-aggregate.
     "q_tpch_q18" -> ((s, dir) => {
-      val big = t(s, dir, "lineitem")
+      val big = Tables(s, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(sum(col("l_quantity").cast(DecimalType(18, 2))).as("sumq"))
         .filter(col("sumq") > 150)
         .select("l_orderkey")
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .join(big, col("o_orderkey") === big("l_orderkey"), "left_semi")
-        .join(broadcast(t(s, dir, "customer")),
+        .join(broadcast(Tables(s, dir, "customer")),
           col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "lineitem"),
+        .join(Tables(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy("c_custkey", "c_name", "o_orderkey")
         .agg(dsum(col("l_quantity")).as("total_qty"),
@@ -448,10 +443,10 @@ object AdvancedQueries {
     "q_tpch_q3" -> ((s, dir) => {
       val d = DecimalType(18, 2)
       val cut = lit("1998-01-01").cast("timestamp")
-      val cust = t(s, dir, "customer")
+      val cust = Tables(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-      val ord = t(s, dir, "orders").filter(col("o_orderdate") < cut)
-      val li = t(s, dir, "lineitem").filter(col("l_shipdate") > cut)
+      val ord = Tables(s, dir, "orders").filter(col("o_orderdate") < cut)
+      val li = Tables(s, dir, "lineitem").filter(col("l_shipdate") > cut)
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate")
@@ -474,13 +469,13 @@ object AdvancedQueries {
       val d = DecimalType(18, 2)
       val lo = lit("1997-01-01").cast("timestamp")
       val hi = lit("1998-01-01").cast("timestamp")
-      t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-        .join(t(s, dir, "orders")
+      Tables(s, dir, "lineitem").filter(col("l_returnflag") === "R")
+        .join(Tables(s, dir, "orders")
             .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi),
           col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "customer")),
+        .join(broadcast(Tables(s, dir, "customer")),
           col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")),
+        .join(broadcast(Tables(s, dir, "nation")),
           col("c_nationkey") === col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(sum(col("l_extendedprice").cast(d) *

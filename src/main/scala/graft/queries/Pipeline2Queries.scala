@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,7 +26,8 @@ object Pipeline2Queries {
   // expression registration, the spread/fence scale workarounds, the
   // intersect-size expression, and the SimHash construction + its
   // oracle CTE — one definition each, used by both groups
-  import PipelineQueries.{fencedFilter, interSize, simhashCte, simhashed, spread, t}
+  import PipelineQueries.{fencedFilter, interSize, simhashCte, simhashed,
+    spread}
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -37,7 +38,7 @@ object Pipeline2Queries {
     // with the number of MATCHING grams, never candidates × benchmarks.
     // The (small) distinct benchmark-gram list broadcasts.
     "decontam_ngram" -> ((s, dir) => {
-      val grams = spread(s, t(s, dir, "documents"))
+      val grams = spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"),
           explode(call_function("graft_shingles5", col("text")))
             .as("gram"))
@@ -55,7 +56,7 @@ object Pipeline2Queries {
     // pasted inside a longer one, which symmetric Jaccard dilutes away.
     // Same blocked merge-join shape as dedup_ngram_jaccard.
     "dedup_containment" -> ((s, dir) => {
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
         .select("doc_id", "lang", "source", "sh")
         .hint("merge")
@@ -96,7 +97,7 @@ object Pipeline2Queries {
     // double fold; sqrt is IEEE-exact) — the sanity pass before any
     // cosine index is built.
     "embedding_norms" -> ((s, dir) =>
-      t(s, dir, "embeddings")
+      Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           normD(col("embedding")).as("l2norm"))
         .orderBy("vec_id")),
@@ -110,7 +111,7 @@ object Pipeline2Queries {
     // rank values, computable on a 1000-executor cluster; the total
     // count rides in on a broadcast 1-row aggregate.
     "doc_len_p95" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = Tables(s, dir, "documents")
       val total = d.groupBy().agg(count(lit(1)).as("n"))
       GlobalRank.withRank(d, col("n_chars"), col("doc_id"), "rn")
         .crossJoin(broadcast(total))
@@ -133,20 +134,18 @@ object Pipeline2Queries {
       val m = 8; val subDim = 8; val k = 16
       val subArr = array((0 until m).map(i =>
         slice(col("embedding"), i * subDim + 1, subDim)): _*)
-      val subs = t(s, dir, "embeddings")
+      val subs = Tables(s, dir, "embeddings")
         .select(col("vec_id"), posexplode(subArr).as(Seq("sub", "subv")))
       val anchors = broadcast(subs.filter(col("vec_id") < k)
         .select(col("vec_id").cast("int").as("cid"), col("sub"),
           col("subv").as("av")))
-      // codegen'd Σ(a-b)² — bitwise-identical to the declarative
-      // zip_with/aggregate fold (VectorSqDistSpec proves it) but it
-      // keeps the encode stage inside whole-stage codegen
-      def dist2(a: Column, b: Column): Column =
-        graft.functions.VectorFunctions.sqDistD(a, b)
       val byDist = Window.partitionBy("vec_id", "sub")
         .orderBy("d2", "cid")
       val codes = subs.join(anchors, "sub")
-        .withColumn("d2", dist2(col("subv"), col("av")))
+        // codegen'd Σ(a-b)² — bitwise-identical to the declarative
+        // zip_with/aggregate fold (VectorSqDistSpec proves it) but it
+        // keeps the encode stage inside whole-stage codegen
+        .withColumn("d2", sqDistD(col("subv"), col("av")))
         .withColumn("rn", row_number().over(byDist))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("sub"), col("cid").as("code"))
@@ -154,7 +153,7 @@ object Pipeline2Queries {
       val probe = subs.filter(col("vec_id") === 0)
         .select(col("sub"), col("subv").as("pv"))
       val adc = broadcast(anchors.join(probe, "sub")
-        .select(col("sub"), col("cid"), dist2(col("pv"), col("av")).as("pd")))
+        .select(col("sub"), col("cid"), sqDistD(col("pv"), col("av")).as("pd")))
       codes.join(adc,
           codes("sub") === adc("sub") && col("code") === col("cid"))
         .groupBy("vec_id")
@@ -173,7 +172,7 @@ object Pipeline2Queries {
     // filtering pipeline. Explode-then-count; the shuffle key is the
     // token, work ∝ corpus token count.
     "stopword_discovery" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
       val total = broadcast(docs.agg(count(lit(1)).as("n_docs")))
       spread(s, docs)
         .select(explode(array_distinct(words(col("text")))).as("token"))
@@ -190,7 +189,7 @@ object Pipeline2Queries {
     // reproducible on any cluster at any parallelism, and joinable as a
     // split-assignment table.
     "sample_split" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("h", substring(md5(col("doc_id").cast("string")), 1, 1))
         .withColumn("split",
           when(col("h") < "c", "train")
@@ -211,7 +210,7 @@ object Pipeline2Queries {
       import org.apache.spark.storage.StorageLevel
       // near-dup edges: LSH candidates confirmed at Jaccard >= 0.5
       // (same construction as dedup_minhash_pairs)
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
       val bands = docs
         .select(col("doc_id"),
@@ -240,7 +239,7 @@ object Pipeline2Queries {
       // jump below) plus edges/bidir; the sweep harnesses clearCache()
       // between queries, and mid-query unpersist reproduced the r3
       // ContextCleaner stall (see the note at the end of this query).
-      var labels = t(s, dir, "documents")
+      var labels = Tables(s, dir, "documents")
         .select(col("doc_id"), col("doc_id").as("lbl"))
         .transform(graft.CacheScope.retain)
       var converged = false
@@ -293,7 +292,7 @@ object Pipeline2Queries {
     // candidate pair — the error measurement that justifies the
     // signature size. Both metrics are exact rationals in doubles.
     "minhash_estimate" -> ((s, dir) => {
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
       val sigs = docs.select(col("doc_id"), col("sh"),
         call_function("graft_minhash_sig", col("sh")).as("sig"))
@@ -328,7 +327,7 @@ object Pipeline2Queries {
     // actual decode stays a stub (multimodal/), but this is the real
     // partition-planning step a 100 TB media pipeline shuffles on.
     "multimodal_chunk_plan" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("n_bytes", octet_length(col("text")))
         .withColumn("n_chunks", expr("(n_bytes + 999) div 1000"))
         // zero-byte payloads plan zero chunks: without this guard,
@@ -349,7 +348,7 @@ object Pipeline2Queries {
     // before the text ever leaves the pipeline — the redaction pass a
     // training corpus runs before tokenization. Pure regex, one scan.
     "pii_mask" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_id"),
           regexp_replace(col("props"), "[0-9]+", "#").as("masked"),
           regexp_count(col("props"), lit("[0-9]+")).as("n_masked_runs"))
@@ -361,7 +360,7 @@ object Pipeline2Queries {
     // shuffle key stays the 64-char hash.
     "dup_rate_by_source" -> ((s, dir) => {
       val byHash = Window.partitionBy(sha2(col("text"), 256))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("is_dup",
           (col("doc_id") =!= min(col("doc_id")).over(byHash)).cast("long"))
         .groupBy("lang", "source")
@@ -381,7 +380,7 @@ object Pipeline2Queries {
       val g1 = col("n_chars") >= 100
       val g2 = size(ws) >= 30
       val g3 = (size(array_distinct(ws)).cast("double") / size(ws)) >= 0.3
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_total"),
           sum(g1.cast("long")).as("n_len_ok"),
@@ -398,7 +397,7 @@ object Pipeline2Queries {
     // ratio is one double division. The vocab is a broadcast semi-join
     // side; per-doc work is a token explode, linear in corpus size.
     "vocab_coverage" -> ((s, dir) => {
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spread(s, Tables(s, dir, "documents"))
       val toks = docs.select(col("doc_id"),
         explode(words(col("text"))).as("token"))
       // aggregate the explode ONCE into per-(doc, term) counts; the
@@ -425,7 +424,7 @@ object Pipeline2Queries {
     // not bitwise-reproducible across engines). Top term per document
     // by (score, term) — the keyword-extraction primitive.
     "term_tfidf" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
       val total = broadcast(docs.agg(count(lit(1)).as("n_docs")))
       // ONE hash exchange for the whole query: repartition by doc_id
       // up front — HashPartitioning(doc_id) satisfies the clustering of

@@ -22,12 +22,6 @@ import graft.functions.VectorFunctions._
   */
 object PipelineQueries {
 
-  private[queries] def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    Tables(s, dir, n)
-  }
-
   /** 4 LSH band keys from the shingle set (codegen'd one-pass MinHash). */
   private def bandKeys(sh: Column): Column =
     call_function("graft_minhash_bands", sh)
@@ -74,7 +68,7 @@ object PipelineQueries {
     * the extra grouping keys change nothing).
     */
   private[queries] def simhashed(s: SparkSession, dir: String): DataFrame = {
-    val exploded = spread(s, t(s, dir, "documents"))
+    val exploded = spread(s, Tables(s, dir, "documents"))
       .select(col("doc_id"), col("lang"), col("source"),
         explode(array_distinct(words(col("text")))).as("wd"))
       .withColumn("hh", md5(col("wd")))
@@ -159,7 +153,7 @@ object PipelineQueries {
     // Exact dedup via content-hash groupBy — the 100 TB-safe shape
     // (shuffle on a 64-char key, never on the document body).
     "dedup_exact" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy(sha2(col("text"), 256).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"),
           count(lit(1)).as("n_copies"))
@@ -171,7 +165,7 @@ object PipelineQueries {
     // not the body, so the shuffle key is 64 chars at any scale.
     "dedup_cluster_labels" -> ((s, dir) => {
       val byHash = Window.partitionBy(sha2(col("text"), 256))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           min(col("doc_id")).over(byHash).as("cluster_id"))
         .withColumn("is_dup", (col("doc_id") =!= col("cluster_id")).cast("int"))
@@ -179,7 +173,7 @@ object PipelineQueries {
     }),
 
     "text_stats" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("total_chars"),
@@ -191,7 +185,7 @@ object PipelineQueries {
 
     "token_count" -> ((s, dir) => {
       val ws = words(col("text"))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           size(ws).as("n_tokens"),
           size(array_distinct(ws)).as("n_uniq_tokens"),
@@ -204,7 +198,7 @@ object PipelineQueries {
     // argmax with fixed precedence (en > de > es > fr > zh).
     "lang_id" -> ((s, dir) => {
       val uniq = array_distinct(words(col("text")))
-      val scored = t(s, dir, "documents").withColumns(
+      val scored = Tables(s, dir, "documents").withColumns(
         markers.map { case (l, ms) =>
           s"s_$l" -> size(array_intersect(uniq,
             array(ms.map(lit): _*)))
@@ -226,7 +220,7 @@ object PipelineQueries {
     // Quality scoring: length score + stopword ratio + type-token ratio.
     "quality_score" -> ((s, dir) => {
       val ws = words(col("text"))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("n_tokens", size(ws))
         .withColumn("n_uniq", size(array_distinct(ws)))
         .withColumn("n_stop", size(filter(ws,
@@ -244,7 +238,7 @@ object PipelineQueries {
     // Corpus token frequencies: explode + count + top-k (the word-count
     // shape every data pipeline starts from).
     "q_top_words" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(explode(words(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("word").asc)
@@ -253,7 +247,7 @@ object PipelineQueries {
     // Array primitives over the token array.
     "q_array_funcs" -> ((s, dir) => {
       val ws = words(col("text"))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           element_at(ws, 1).as("first_word"),
           element_at(ws, -1).as("last_word"),
@@ -265,7 +259,7 @@ object PipelineQueries {
     // Polynomial rolling hash over characters (document fingerprint);
     // codegen'd one-pass byte fold, == the declarative char fold on ASCII.
     "doc_fingerprint" -> ((s, dir) =>
-      spread(s, t(s, dir, "documents"))
+      spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"),
           call_function("graft_poly_hash", col("text")).as("fp"))
         .orderBy("doc_id")),
@@ -273,7 +267,7 @@ object PipelineQueries {
     // MinHash signatures + LSH banding (long format: one row per band).
     "dedup_minhash_lsh" -> ((s, dir) => {
       val sh = call_function("graft_shingles", col("text"))
-      spread(s, t(s, dir, "documents"))
+      spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", sh)
         .select(col("doc_id"),
           posexplode(bandKeys(col("sh"))).as(Seq("band_idx", "band_key")))
@@ -290,7 +284,7 @@ object PipelineQueries {
       // Narrow band table (doc_id, band_idx, band_key — ~50 B/row) cached
       // once: the MinHash pass runs exactly once, the self-join moves no
       // shingle payloads, and the candidate set is tiny by construction.
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
       // retain, not a raw .cache(): the scope releases it after the
       // consuming action, and plan-only sweeps can drain it (r6 #3 — a
@@ -346,7 +340,7 @@ object PipelineQueries {
     // the choice is fully distributed — no driver-side collect.
     "dedup_ngram_jaccard" -> ((s, dir) => {
       val T = 256 // target bucket rows: per-tile pair work <= T^2
-      val base = spread(s, t(s, dir, "documents"))
+      val base = spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
         .select("doc_id", "lang", "source", "sh")
       val blocks = base.groupBy("lang", "source")
@@ -388,7 +382,7 @@ object PipelineQueries {
 
     // Brute-force cosine top-k for a single probe vector (ANN baseline).
     "similarity_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probe = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("pe")))
       e.crossJoin(probe)
@@ -403,7 +397,7 @@ object PipelineQueries {
     // kNN join: top-5 neighbors for each of the first 20 probes — the
     // broadcast-probes pattern that scales to many queries at once.
     "similarity_knn_join" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probes = broadcast(e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
       val w = Window.partitionBy("probe_id")
@@ -426,7 +420,7 @@ object PipelineQueries {
       // scan's partitioning, and the sf parquet is ONE row group — the
       // whole n²/2 pair space evaluated on a single task (measured wall
       // ≈ total task time). Round-robin to all cores first.
-      val n = withNorm(spread(s, t(s, dir, "embeddings")))
+      val n = withNorm(spread(s, Tables(s, dir, "embeddings")))
       val a = n.select(col("vec_id").as("a_id"),
         col("embedding").as("ea"), col("nrm").as("na"))
       val b = n.select(col("vec_id").as("b_id"),
@@ -443,7 +437,7 @@ object PipelineQueries {
     // sign bucket (16-way partition of the space) — the join that
     // survives 100×, unlike the exact all-pairs product.
     "similarity_lsh_bucketed" -> ((s, dir) => {
-      val n = withNorm(t(s, dir, "embeddings"))
+      val n = withNorm(Tables(s, dir, "embeddings"))
         .withColumn("bucket", signBucket(col("embedding"), lshDims))
       val a = n.select(col("bucket"), col("vec_id").as("a_id"),
         col("embedding").as("ea"), col("nrm").as("na"))
@@ -464,7 +458,7 @@ object PipelineQueries {
     // them. The centroid fold runs in explicit vec_id order so both
     // engines produce bitwise-identical means.
     "ann_ivf_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probe = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("pe")))
       val cents = e.groupBy("label").agg(
@@ -505,7 +499,7 @@ object PipelineQueries {
     // encoding of the text; schema/partitioning/metadata extraction is
     // the real, tested part (decode stubs live in multimodal/).
     "multimodal_binary_meta" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           octet_length(col("text")).as("n_bytes"),
           md5(col("text")).as("payload_md5"),

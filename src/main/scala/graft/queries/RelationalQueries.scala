@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.QueryKit.dsum
 
 /** Group B (SURVEY.md §2b): the upstream relational surface a Flink 1.12 SQL
   * job feeds into the reference sink — joins, aggregates, windows, set ops,
@@ -21,17 +22,10 @@ import graft.Tables
   */
 object RelationalQueries {
 
-  /** Exact sum of a 2-decimal double column, surfaced as DOUBLE. */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast("double")
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_filter_project" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_quantity") > 30 && col("l_returnflag") === "R")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         // (l_orderkey, l_linenumber) is NOT unique in the synthetic data —
@@ -40,19 +34,19 @@ object RelationalQueries {
           "l_extendedprice")),
 
     "q_inner_join" -> ((s, dir) =>
-      t(s, dir, "orders").join(t(s, dir, "customer"),
+      Tables(s, dir, "orders").join(Tables(s, dir, "customer"),
           col("o_custkey") === col("c_custkey"))
         .select("o_orderkey", "c_custkey", "c_name", "o_totalprice")
         .orderBy("o_orderkey")),
 
     "q_left_join" -> ((s, dir) =>
-      t(s, dir, "customer").join(t(s, dir, "orders"),
+      Tables(s, dir, "customer").join(Tables(s, dir, "orders"),
           col("c_custkey") === col("o_custkey"), "left")
         .select("c_custkey", "c_name", "o_orderkey", "o_totalprice")
         .orderBy(col("c_custkey").asc, col("o_orderkey").asc_nulls_first)),
 
     "q_semi_join" -> ((s, dir) =>
-      t(s, dir, "customer").join(t(s, dir, "orders"),
+      Tables(s, dir, "customer").join(Tables(s, dir, "orders"),
           col("c_custkey") === col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name")
         .orderBy("c_custkey")),
@@ -61,15 +55,15 @@ object RelationalQueries {
     // order at sf>=0.01, so anti-join against the unfiltered table would
     // be vacuously empty — filter the build side to keep the test sharp.
     "q_anti_join" -> ((s, dir) =>
-      t(s, dir, "customer").join(
-          t(s, dir, "orders").filter(col("o_orderstatus") === "P"),
+      Tables(s, dir, "customer").join(
+          Tables(s, dir, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
         .orderBy("c_custkey")),
 
     // Small dimension explicitly broadcast: no shuffle of the fact table.
     "q_broadcast_join" -> ((s, dir) =>
-      t(s, dir, "lineitem").join(broadcast(t(s, dir, "part")),
+      Tables(s, dir, "lineitem").join(broadcast(Tables(s, dir, "part")),
           col("l_partkey") === col("p_partkey"))
         .groupBy("p_brand")
         .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
@@ -78,7 +72,7 @@ object RelationalQueries {
     // Non-equi theta join (acctbal band); tiny supplier side is broadcast
     // so the nested-loop join streams customer exactly once.
     "q_range_join" -> ((s, dir) =>
-      t(s, dir, "customer").join(broadcast(t(s, dir, "supplier")),
+      Tables(s, dir, "customer").join(broadcast(Tables(s, dir, "supplier")),
           col("c_acctbal") >= col("s_acctbal") - 100 &&
           col("c_acctbal") <= col("s_acctbal") + 100)
         .groupBy("s_suppkey").agg(count(lit(1)).as("n"))
@@ -86,12 +80,12 @@ object RelationalQueries {
 
     // 4-way star join; dims broadcast, single shuffle for the final agg.
     "q_multiway_join" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .join(broadcast(t(s, dir, "customer")),
+      Tables(s, dir, "orders")
+        .join(broadcast(Tables(s, dir, "customer")),
           col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")),
+        .join(broadcast(Tables(s, dir, "nation")),
           col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
+        .join(broadcast(Tables(s, dir, "region")),
           col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name")
         .agg(count(lit(1)).as("n_orders"),
@@ -101,7 +95,7 @@ object RelationalQueries {
     // TPC-H Q1 shape — the README's canonical sink feed.
     "q_hash_agg" -> ((s, dir) => {
       val d = DecimalType(18, 2)
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           dsum(col("l_quantity")).as("sum_qty"),
@@ -116,7 +110,7 @@ object RelationalQueries {
     }),
 
     "q_distinct_agg" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy("o_orderpriority")
         .agg(countDistinct(col("o_custkey")).as("n_custs"),
           count(lit(1)).as("n_orders"))
@@ -131,7 +125,7 @@ object RelationalQueries {
     // counts and asserts TRUE — an estimator drifting out of bound is a
     // hash mismatch, not an unverifiable row.
     "q_approx_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(countDistinct(col("l_partkey")).as("exact_parts"),
           approx_count_distinct(col("l_partkey"), 0.05).as("approx"))
@@ -141,21 +135,21 @@ object RelationalQueries {
         .orderBy("l_returnflag")),
 
     "q_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)),
 
     "q_cube" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first)),
 
     "q_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("graft_lineitem_gs")
+      Tables(s, dir, "lineitem").createOrReplaceTempView("graft_lineitem_gs")
       s.sql(
         """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
           |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
@@ -170,7 +164,7 @@ object RelationalQueries {
     "q_window_rank" -> ((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
@@ -186,7 +180,7 @@ object RelationalQueries {
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"), col("l_extendedprice"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .withColumn("running_qty",
           sum(col("l_quantity").cast(DecimalType(18, 2))).over(w)
             .cast("double"))
@@ -203,7 +197,7 @@ object RelationalQueries {
     "q_window_first_last" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           first(col("value")).over(w).as("first_value"),
           last(col("value")).over(w).as("last_value"))
@@ -218,7 +212,7 @@ object RelationalQueries {
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts_us"))
         .rangeBetween(-hourUs, 0)
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("ts_us", unix_micros(col("ts")))
         .withColumn("trailing_hour_sum",
           sum(col("value").cast(DecimalType(18, 2))).over(w).cast("double"))
@@ -228,7 +222,7 @@ object RelationalQueries {
 
     "q_window_lag_lead" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("event_id")
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("prev_value", lag(col("value"), 1).over(w))
         .withColumn("next_value", lead(col("value"), 1).over(w))
         .select("event_id", "user_id", "value", "prev_value", "next_value")
@@ -237,36 +231,37 @@ object RelationalQueries {
 
     // Global top-k: Catalyst plans TakeOrderedAndProject, no full sort.
     "q_sort_limit" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(100)
         .select("o_orderkey", "o_totalprice")),
 
     "q_union_all" -> ((s, dir) =>
-      t(s, dir, "customer")
+      Tables(s, dir, "customer")
         .select(col("c_custkey").as("id"), lit("customer").as("src"))
-        .unionAll(t(s, dir, "supplier")
+        .unionAll(Tables(s, dir, "supplier")
           .select(col("s_suppkey").as("id"), lit("supplier").as("src")))
         .orderBy("id", "src")),
 
     "q_intersect" -> ((s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderstatus") === "F")
+      Tables(s, dir, "orders").filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey").as("okey"))
-        .intersect(t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
+        .intersect(Tables(s, dir, "lineitem")
+          .filter(col("l_returnflag") === "R")
           .select(col("l_orderkey").as("okey")))
         .orderBy("okey")),
 
     // Open orders that never shipped a returned line (non-empty subsets on
     // both sides; part EXCEPT lineitem.partkey is vacuously empty at sf0.01).
     "q_except" -> ((s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderstatus") === "O")
+      Tables(s, dir, "orders").filter(col("o_orderstatus") === "O")
         .select(col("o_orderkey").as("okey"))
-        .except(t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
+        .except(Tables(s, dir, "lineitem").filter(col("l_returnflag") === "R")
           .select(col("l_orderkey").as("okey")))
         .orderBy("okey")),
 
     "q_string_funcs" -> ((s, dir) =>
-      t(s, dir, "customer")
+      Tables(s, dir, "customer")
         .select(col("c_custkey"),
           upper(col("c_name")).as("uname"),
           substring(col("c_name"), 1, 8).as("prefix"),
@@ -277,7 +272,7 @@ object RelationalQueries {
         .orderBy("c_custkey")),
 
     "q_date_funcs" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(col("o_orderkey"),
           year(col("o_orderdate")).as("y"),
           month(col("o_orderdate")).as("m"),
@@ -289,7 +284,7 @@ object RelationalQueries {
         .orderBy("o_orderkey")),
 
     "q_math_funcs" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           abs(col("l_discount") - 0.05).as("abs_disc"),
           floor(col("l_extendedprice")).as("floor_price"),
@@ -302,7 +297,7 @@ object RelationalQueries {
     // CASE WHEN routing — the same conditional shape as the sign/flag
     // injection in ChangelogOps (R10/R11).
     "q_case_expr" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .withColumn("band",
           when(col("o_totalprice") < 50000, "low")
             .when(col("o_totalprice") < 150000, "mid")
@@ -312,7 +307,7 @@ object RelationalQueries {
 
     // Tumbling 1h event-time window (batch emulation of the stream agg).
     "q_tumbling_window" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n"),
           dsum(col("value")).as("sum_value"))
@@ -322,7 +317,7 @@ object RelationalQueries {
 
     // Sliding 1h window every 30m: each event lands in two windows.
     "q_sliding_window" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
         .agg(count(lit(1)).as("n"),
           dsum(col("value")).as("sum_value"))
@@ -337,7 +332,7 @@ object RelationalQueries {
     // plain GROUP BY (which is exactly what the oracle runs).
     "q_salted_agg" -> ((s, dir) => {
       val d = DecimalType(18, 2)
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("salt", pmod(col("event_id"), lit(8)))
         .groupBy("user_id", "salt")
         .agg(sum(col("value").cast(d)).as("part_sum"),
@@ -350,7 +345,7 @@ object RelationalQueries {
 
     // GROUP BY + HAVING (post-aggregation predicate).
     "q_having" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n_orders"),
           dsum(col("o_totalprice")).as("sum_price"))
@@ -359,8 +354,8 @@ object RelationalQueries {
 
     // Null-handling scalar functions over outer-join padding.
     "q_null_funcs" -> ((s, dir) =>
-      t(s, dir, "customer").join(
-          t(s, dir, "orders").filter(col("o_orderstatus") === "P"),
+      Tables(s, dir, "customer").join(
+          Tables(s, dir, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left")
         .groupBy("c_custkey")
         .agg(
@@ -373,13 +368,13 @@ object RelationalQueries {
 
     // Explicit cartesian product of two small dims.
     "q_cross_join" -> ((s, dir) =>
-      t(s, dir, "region").crossJoin(t(s, dir, "nation"))
+      Tables(s, dir, "region").crossJoin(Tables(s, dir, "nation"))
         .select(col("r_name"), col("n_name"))
         .orderBy("r_name", "n_name")),
 
     // JSON extraction from the events props payload, aggregated.
     "q_json_funcs" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
         .groupBy("event_type")
@@ -393,7 +388,7 @@ object RelationalQueries {
     "q_window_ntile" -> ((s, dir) => {
       val w = Window.partitionBy("o_orderstatus")
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(col("o_orderstatus"), col("o_orderkey"),
           ntile(4).over(w).as("quartile"),
           percent_rank().over(w).as("pct_rank"),
@@ -402,9 +397,9 @@ object RelationalQueries {
     }),
 
     "q_union_distinct" -> ((s, dir) =>
-      t(s, dir, "orders").filter(col("o_orderstatus") === "F")
+      Tables(s, dir, "orders").filter(col("o_orderstatus") === "F")
         .select(col("o_custkey").as("ck"))
-        .union(t(s, dir, "orders").filter(col("o_orderstatus") === "O")
+        .union(Tables(s, dir, "orders").filter(col("o_orderstatus") === "O")
           .select(col("o_custkey").as("ck")))
         .distinct()
         .orderBy("ck")),
@@ -412,7 +407,7 @@ object RelationalQueries {
     // Pivot: one column per priority bucket (explicit value list so the
     // output schema is static), counts per order status.
     "q_pivot" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy("o_orderstatus")
         .pivot("o_orderpriority", Seq("1-URGENT", "2-HIGH", "3-MEDIUM",
           "4-NOT SPECIFIED", "5-LOW"))
@@ -424,7 +419,7 @@ object RelationalQueries {
 
     // Scalar subquery: orders above the global average price.
     "q_scalar_subquery" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("graft_orders_ss")
+      Tables(s, dir, "orders").createOrReplaceTempView("graft_orders_ss")
       s.sql(
         """SELECT o_orderkey, o_totalprice FROM graft_orders_ss
           |WHERE o_totalprice > (SELECT CAST(SUM(CAST(o_totalprice AS
@@ -435,7 +430,7 @@ object RelationalQueries {
     // Correlated subquery: each customer's count of above-their-own-average
     // orders (decorrelated by Catalyst into a join + aggregate).
     "q_correlated_subquery" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("graft_orders_cs")
+      Tables(s, dir, "orders").createOrReplaceTempView("graft_orders_cs")
       s.sql(
         """SELECT o1.o_custkey, COUNT(*) AS n_above
           |FROM graft_orders_cs o1
@@ -450,7 +445,7 @@ object RelationalQueries {
     // Exact median over an integer column: even-count interpolation
     // (a+b)/2 is FP-exact for 52-bit ints, so engines agree bitwise.
     "q_percentile" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy("lang")
         .agg(median(col("n_chars")).as("median_chars"),
           count(lit(1)).as("n"))
@@ -462,7 +457,7 @@ object RelationalQueries {
       val byTime = Window.partitionBy("user_id")
         .orderBy(col("ts"), col("event_id"))
       val gapUs = 30L * 60 * 1000 * 1000
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(byTime))
         .withColumn("is_new",
           (col("prev_us").isNull ||

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-10 first batch: keyless band joins written the NAIVE way —
   * `a.join(b, abs(a.ts - b.ts) <= W)` with no equi-keys — and planned
@@ -32,13 +33,8 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round10aQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   private def ev(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(col("event_id"), col("event_type"),
+    Tables(s, dir, "events").select(col("event_id"), col("event_type"),
       col("value"), unix_micros(col("ts")).as("us"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

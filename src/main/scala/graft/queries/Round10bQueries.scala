@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 second batch: ClickHouse behavioral combinators, part IV —
   * retention(), the windowFunnel window-sensitivity sweep, and
@@ -25,9 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10bQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Best-anchor windowFunnel levels per user for SEVERAL windows in
     * ONE pass (r12, guide §1.2/§2.4): the sweep used to build the whole
     * anchor×click join + anchor×purchase join + per-user aggregate
@@ -43,7 +41,7 @@ object Round10bQueries {
   private def funnelLevelsSweep(s: SparkSession, dir: String,
                                 windowsSec: Seq[Long]): DataFrame = {
     val ws = windowsSec.map(sec => sec -> sec * 1000000L)
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
     val anchors = ev.filter(col("event_type") === "view")
@@ -120,7 +118,7 @@ object Round10bQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_retention_cohorts" -> ((s, dir) => {
-      val days = t(s, dir, "events")
+      val days = Tables(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       val day0 = days.agg(min(col("day")).as("d0"))
       val flags = days.join(broadcast(day0))
@@ -151,7 +149,7 @@ object Round10bQueries {
 
     "q_uniq_upto" -> ((s, dir) => {
       val N = 50
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(hour(col("ts")).cast("long").as("h"), col("user_id"))
         .groupBy("h")
         .agg(countDistinct(col("user_id")).as("exact"))

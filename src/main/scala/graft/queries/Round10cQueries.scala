@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-10 third batch: weighted order statistics — the exact weighted
   * median/quantile machinery a pricing or SLA dashboard needs when rows
@@ -31,18 +32,13 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round10cQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   /** Per-(flag, price-bucket) weight summaries with running cumulative
     * weight and the per-flag total: (flag, bkt, wsum, cumw, totw).
     * The bucket table is bounded (price range / 100), so the running
     * window is over summaries, not rows.
     */
   private def bucketCum(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(col("l_returnflag").as("flag"),
         col("l_extendedprice").as("price"),
         col("l_quantity").cast(dec).as("w"))
@@ -80,7 +76,7 @@ object Round10cQueries {
         (col("cumw") - col("wsum")).as("prefix"), col("totw")),
       Seq("flag", "bb"))
     // in-bucket scan: only boundary-bucket rows rejoin the fact table
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(col("l_returnflag").as("flag"),
         col("l_extendedprice").as("price"),
         col("l_quantity").cast(dec).as("w"),
@@ -112,7 +108,7 @@ object Round10cQueries {
         .orderBy("l_returnflag", "decile")),
 
     "q_newsvendor_stock" -> ((s, dir) => {
-      val daily = t(s, dir, "lineitem").join(t(s, dir, "part"),
+      val daily = Tables(s, dir, "lineitem").join(Tables(s, dir, "part"),
           col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"), to_date(col("l_shipdate")).as("day"))
         .agg(sum(col("l_quantity").cast(dec)).as("demand"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 fifth batch: text policy gates — the per-document screening
   * pass a training-data pipeline runs between dedup and sampling:
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val Lexicon = Seq("slow", "dup", "big", "fast")
   private def lexSql = Lexicon.map(w => s"'$w'").mkString("[", ", ", "]")
 
@@ -37,7 +35,7 @@ object Round10eQueries {
     "q_lexicon_score" -> ((s, dir) => {
       val ws = split(col("text"), " ")
       val lex = array(Lexicon.map(lit): _*)
-      val perDoc = t(s, dir, "documents")
+      val perDoc = Tables(s, dir, "documents")
         .select(col("source"),
           size(ws).cast("long").as("n_tokens"),
           size(filter(ws, w => array_contains(lex, w))).cast("long")
@@ -57,7 +55,7 @@ object Round10eQueries {
     }),
 
     "q_pii_prevalence" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"),
           regexp_count(col("props"), lit("[0-9]{3,}")).cast("long")
             .as("long_runs"),
@@ -81,7 +79,7 @@ object Round10eQueries {
       val ws = split(col("text"), " ")
       val byHash = Window.partitionBy(sha2(col("text"), 256))
       val stop = array(lit("the"), lit("a"))
-      val gates = t(s, dir, "documents")
+      val gates = Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"),
           size(ws).cast("long").as("n_tok"),
           size(array_distinct(ws)).cast("long").as("n_uniq"),

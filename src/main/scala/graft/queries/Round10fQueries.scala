@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 tenth batch: materialized-view / rollup workload planning —
   * the warehouse-operator loop that decides WHICH aggregates to
@@ -28,9 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10fQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   // candidate views and the workload (frequencies) — fixed metadata
   private val ViewNames = Seq("v_flag", "v_status", "v_fs", "v_part",
     "v_supp", "v_month")
@@ -48,7 +46,7 @@ object Round10fQueries {
 
   /** (view, vrows) measured + n_rows: one scan, then a literal unpivot. */
   private def viewSizes(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(col("l_returnflag").as("flag"),
         col("l_linestatus").as("status"), col("l_partkey").as("part"),
         col("l_suppkey").as("supp"),
@@ -185,7 +183,7 @@ object Round10fQueries {
     }),
 
     "q_rollup_cost_model" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_returnflag").as("flag"),
           col("l_linestatus").as("status"),
           date_trunc("month", col("l_shipdate")).as("month"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 sixth batch: Bayesian decision analytics — the closed-form
   * posterior arithmetic an experimentation platform runs at scale
@@ -26,17 +27,14 @@ import org.apache.spark.sql.functions._
   */
 object Round10gQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Per-user conversion flags: (user_id, converted 0/1). */
   private def userConv(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy("user_id")
       .agg(max((col("event_type") === "purchase").cast("long"))
         .as("converted"))
 
-  private def d(c: Column): Column = c.cast("double")
+  private def dbl(c: Column): Column = c.cast("double")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -55,10 +53,10 @@ object Round10gQueries {
           coalesce(col("b_n"), lit(0L)).as("n_b"),
           coalesce(col("b_conv"), lit(0L)).as("conv_b"))
       // Beta(1,1) prior: alpha = conv+1, beta = n-conv+1
-      def mean(n: Column, c: Column): Column = (d(c) + 1.0) / (d(n) + 2.0)
+      def mean(n: Column, c: Column): Column = (dbl(c) + 1.0) / (dbl(n) + 2.0)
       def variance(n: Column, c: Column): Column =
-        (d(c) + 1.0) * (d(n) - d(c) + 1.0) /
-          ((d(n) + 2.0) * (d(n) + 2.0) * (d(n) + 3.0))
+        (dbl(c) + 1.0) * (dbl(n) - dbl(c) + 1.0) /
+          ((dbl(n) + 2.0) * (dbl(n) + 2.0) * (dbl(n) + 3.0))
       wide.select(col("n_a"), col("conv_a"), col("n_b"), col("conv_b"),
         mean(col("n_a"), col("conv_a")).as("post_mean_a"),
         mean(col("n_b"), col("conv_b")).as("post_mean_b"),
@@ -68,11 +66,11 @@ object Round10gQueries {
     }),
 
     "q_eb_shrinkage" -> ((s, dir) => {
-      val conv = t(s, dir, "orders")
+      val conv = Tables(s, dir, "orders")
         .groupBy("o_custkey")
         .agg(max((col("o_orderpriority") === "1-URGENT").cast("long"))
           .as("urgent"))
-      val byNation = t(s, dir, "customer")
+      val byNation = Tables(s, dir, "customer")
         .join(conv, col("c_custkey") === col("o_custkey"), "left")
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("n"),
@@ -81,9 +79,10 @@ object Round10gQueries {
         sum(col("n")).as("n_tot"))
       byNation.join(broadcast(global))
         .select(col("c_nationkey"), col("n"), col("s"),
-          when(col("n") > 0, d(col("s")) / d(col("n"))).as("raw_rate"),
-          ((d(col("s")) + lit(20.0) * (d(col("s_tot")) / d(col("n_tot"))))
-            / (d(col("n")) + 20.0)).as("shrunk_rate"))
+          when(col("n") > 0, dbl(col("s")) / dbl(col("n"))).as("raw_rate"),
+          ((dbl(col("s")) +
+            lit(20.0) * (dbl(col("s_tot")) / dbl(col("n_tot"))))
+            / (dbl(col("n")) + 20.0)).as("shrunk_rate"))
         .withColumn("shrink_delta",
           col("shrunk_rate") - coalesce(col("raw_rate"), lit(0.0)))
         .orderBy("c_nationkey")
@@ -106,7 +105,7 @@ object Round10gQueries {
         df.withColumn(s"${i}_n", coalesce(col(s"${i}_n"), lit(0L)))
           .withColumn(s"${i}_conv", coalesce(col(s"${i}_conv"), lit(0L))))
       def score(i: Int): Column = {
-        val n = d(col(s"${i}_n")); val c = d(col(s"${i}_conv"))
+        val n = dbl(col(s"${i}_n")); val c = dbl(col(s"${i}_conv"))
         (c + 1.0) / (n + 2.0) +
           sqrt((c + 1.0) * (n - c + 1.0) /
             ((n + 2.0) * (n + 2.0) * (n + 3.0)))

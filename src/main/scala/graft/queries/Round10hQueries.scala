@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 seventh batch: event-time hygiene — the watermark-policy
   * audits a streaming deployment runs over its own history to pick
@@ -28,9 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10hQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val Sentinel = -1000000000000000000L // -1e18 us
   private val BlockSz = 4096L
 
@@ -39,7 +37,7 @@ object Round10hQueries {
     * decomposed.
     */
   private def withPrefix(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_id"), unix_micros(col("ts")).as("us"),
         call_function("div", col("event_id"), lit(BlockSz)).as("bk"))
     val blocks = ev.groupBy("bk").agg(max(col("us")).as("blk_max"))
@@ -128,7 +126,7 @@ object Round10hQueries {
       val W = 30L * 1000000L
       val wu = Window.partitionBy("user_id").orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val perUser = t(s, dir, "events")
+      val perUser = Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("us"))
         .withColumn("prefix",

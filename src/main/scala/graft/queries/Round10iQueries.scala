@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.DetMath
+import graft.Tables
 
 /** Round-10 ninth batch: first-order Markov journey attribution — the
   * removal-effect model (vs the rule-based q_attribution_models and the
@@ -32,9 +33,6 @@ import graft.functions.DetMath
   */
 object Round10iQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val Transient = Seq("view", "click", "signup", "error")
   private val Dsts = Transient ++ Seq("purchase", "END")
   private val Srcs = "START" +: Transient
@@ -51,7 +49,7 @@ object Round10iQueries {
     // extra START row by exploding a per-row 1-or-2-element array keeps
     // the exact same (src, dst) multiset out of a single Sort+Window.
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val seq = t(s, dir, "events")
+    val seq = Tables(s, dir, "events")
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
       .withColumn("dst",
         coalesce(lead(col("event_type"), 1).over(w), lit("END")))

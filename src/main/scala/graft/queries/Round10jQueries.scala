@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DetMath
+import graft.Tables
 
 /** Round-10 eighth batch: training-mix token-budget planning — the
   * allocator that turns per-source token counts + quality weights into
@@ -30,14 +31,11 @@ import graft.functions.DetMath
   */
 object Round10jQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Per-source allocation after 3 waterfill rounds:
     * (source, tokens, weight, cap, alloc).
     */
   private def waterfill(s: SparkSession, dir: String): DataFrame = {
-    val perSrc = t(s, dir, "documents")
+    val perSrc = Tables(s, dir, "documents")
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("tok"),
         size(array_distinct(split(col("text"), " "))).cast("long")

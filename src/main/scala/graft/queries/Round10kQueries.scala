@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 final batch: source/sink FORMAT coverage — the CSV / JSON /
   * partitioned-parquet read-write paths a lakehouse deployment feeds
@@ -32,9 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10kQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def work(name: String): String =
     s"/tmp/graft_fmt/$name"
 
@@ -58,7 +56,7 @@ object Round10kQueries {
     "q_csv_roundtrip" -> ((s, dir) => {
       val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
         "cents", "us", "o_orderpriority")
-      val src = t(s, dir, "orders").select(
+      val src = Tables(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         floor(col("o_totalprice") * 100.0).cast("long").as("cents"),
         // orderdate ships as TIMESTAMP_NTZ — cast to session-UTC
@@ -83,7 +81,7 @@ object Round10kQueries {
 
     "q_json_roundtrip" -> ((s, dir) => {
       val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
-      val src = t(s, dir, "documents")
+      val src = Tables(s, dir, "documents")
         .select(cols.map(col): _*)
       val path = work("json_documents")
       src.write.mode("overwrite").json(path)
@@ -109,7 +107,7 @@ object Round10kQueries {
     "q_partitioned_roundtrip" -> ((s, dir) => {
       val cols = Seq("l_orderkey", "l_linenumber", "qty_c", "price_c",
         "l_returnflag")
-      val src = t(s, dir, "lineitem").select(
+      val src = Tables(s, dir, "lineitem").select(
         col("l_orderkey"), col("l_linenumber").cast("long")
           .as("l_linenumber"),
         floor(col("l_quantity") * 100.0).cast("long").as("qty_c"),

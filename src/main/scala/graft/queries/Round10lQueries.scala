@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch l: item-item co-occurrence — the market-basket
   * neighborhood model a retail/recommendation pipeline derives from the
@@ -30,9 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10lQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Per-order sorted distinct item arrays (r12, guide §2.3/§2.4): ONE
     * groupBy(order) with map-side partial collect_set replaces the old
     * distinct-rows frame — the downstream pair expansion then runs in
@@ -43,7 +41,7 @@ object Round10lQueries {
     * constant work per order.
     */
   private def baskets(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .groupBy("o").agg(sort_array(collect_set(col("p"))).as("ps"))
 

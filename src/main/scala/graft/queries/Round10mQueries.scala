@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch m: fuzzy string matching on the codegen'd
   * [[graft.expressions.JaroWinkler]] expression — record-linkage
@@ -26,12 +27,8 @@ import org.apache.spark.sql.functions._
   */
 object Round10mQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def customers(s: SparkSession, dir: String): DataFrame = {
-    graft.expressions.TextExpressions.register(s)
-    t(s, dir, "customer")
+    Tables(s, dir, "customer")
       .select(col("c_custkey").as("k"), col("c_name").as("name"))
       .withColumn("blk", expr("k div 100"))
   }
@@ -72,8 +69,7 @@ object Round10mQueries {
     }),
 
     "q_jw_part_dedup" -> ((s, dir) => {
-      graft.expressions.TextExpressions.register(s)
-      val names = t(s, dir, "part")
+      val names = Tables(s, dir, "part")
         .select(col("p_name").as("name")).distinct()
         .withColumn("w1", split_part(col("name"), lit(" "), lit(1)))
       val l = names.select(col("w1"), col("name").as("name_a"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch n: exact Shapley-value marketing attribution over the
   * 4 touch channels (view/click/signup/error) preceding a user's first
@@ -32,9 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10nQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val channels = Seq(("view", 1), ("click", 2), ("signup", 4),
     ("error", 8))
 
@@ -43,7 +41,7 @@ object Round10nQueries {
     * mask 0.
     */
   private def converterMasks(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
     val firstPurchase = ev.filter(col("event_type") === "purchase")
       .groupBy("user_id").agg(min(col("ts")).as("conv_ts"))
@@ -106,7 +104,7 @@ object Round10nQueries {
     }),
 
     "q_attribution_compare" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
       val firstPurchase = ev.filter(col("event_type") === "purchase")
         .groupBy("user_id").agg(min(col("ts")).as("conv_ts"))

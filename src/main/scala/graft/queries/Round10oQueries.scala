@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.DetMath
+import graft.Tables
 
 /** Round-10 batch o: supervised categorical-feature encoders — the
   * weight-of-evidence / information-value audit and the two standard
@@ -36,15 +37,12 @@ import graft.functions.DetMath
   */
 object Round10oQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** (segment, is_good, o_orderkey) labeled rows: one per order. */
   private def labeled(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         (col("o_orderstatus") === "F").cast("long").as("y"))
-    val c = t(s, dir, "customer")
+    val c = Tables(s, dir, "customer")
       .select(col("c_custkey").as("o_custkey"),
         col("c_mktsegment").as("segment"))
     o.join(broadcast(c), Seq("o_custkey"))

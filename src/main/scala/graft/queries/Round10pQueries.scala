@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-10 batch p: market-data bar analytics over the order stream —
   * OHLC candles, volume-weighted average price, and Bollinger bands,
@@ -33,14 +35,9 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round10pQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   /** Daily close: the last order of each day in (ts, key) total order. */
   private def dailyClose(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
       .select(to_date(col("o_orderdate")).as("day"),
         col("o_orderdate").as("ts"), col("o_orderkey"),
         col("o_totalprice"))
@@ -54,7 +51,7 @@ object Round10pQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_ohlc_daily" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(to_date(col("o_orderdate")).as("day"),
           col("o_orderdate").as("ts"), col("o_orderkey"),
           col("o_totalprice").as("p"))
@@ -77,7 +74,7 @@ object Round10pQueries {
     }),
 
     "q_vwap_daily" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(to_date(col("l_shipdate")).as("day"),
           (col("l_extendedprice").cast(dec) * col("l_quantity").cast(dec))
             .as("pq"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch q: inverted-index PLANNING over the document corpus —
   * the posting-list geometry, delta-encoding budget, and skip-pointer
@@ -31,12 +32,9 @@ import org.apache.spark.sql.functions._
   */
 object Round10qQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Distinct (term, doc_id) postings. */
   private def postings(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
       .distinct()

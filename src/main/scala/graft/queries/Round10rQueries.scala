@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch r: observational causal inference by caliper
   * matching — 1-nearest-neighbor (with replacement) covariate matching,
@@ -34,20 +35,17 @@ import org.apache.spark.sql.functions._
   */
 object Round10rQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val CaliperCents = 1000L // $10
   private val Shift = 100000L      // acctbal >= -$994.28 -> nonneg cents
 
   /** Units: (custkey, treated flag, covariate cents, outcome cents). */
   private def units(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
+    val c = Tables(s, dir, "customer")
       .select(col("c_custkey").as("k"),
         (col("c_mktsegment") === "BUILDING").as("treated"),
         (col("c_acctbal").cast("decimal(18,2)") * 100)
           .cast("long").as("x"))
-    val spend = t(s, dir, "orders")
+    val spend = Tables(s, dir, "orders")
       .groupBy(col("o_custkey").as("k"))
       .agg((sum(col("o_totalprice").cast("decimal(18,2)")) * 100)
         .cast("long").as("y"))

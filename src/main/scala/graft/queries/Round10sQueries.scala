@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch s: uplift modeling over a deterministic md5-coin
   * experiment — per-stratum incremental conversion lift, the Qini
@@ -31,14 +32,11 @@ import org.apache.spark.sql.functions._
   */
 object Round10sQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Per-user experiment rows: stratum (activity quartile by fixed
     * thresholds), md5-coin treatment, conversion flag.
     */
   private def cohort(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val perUser = ev.groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         max((col("event_type") === "purchase").cast("int")).as("converted"))

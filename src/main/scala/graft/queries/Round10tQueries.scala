@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch t: offline recommender evaluation on a TEMPORAL
   * holdout — train the item-item co-occurrence model (batch 10l's
@@ -31,9 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10tQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val Split = "2000-01-01"
 
   /** Distinct (order, part) baskets restricted to one side of the
@@ -41,11 +39,11 @@ object Round10tQueries {
     */
   private def baskets(s: SparkSession, dir: String,
                       train: Boolean): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables(s, dir, "orders")
       .filter(if (train) col("o_orderdate") < lit(Split)
               else col("o_orderdate") >= lit(Split))
       .select(col("o_orderkey"))
-    t(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
@@ -118,7 +116,7 @@ object Round10tQueries {
     "q_rec_catalog_coverage" -> ((s, dir) => {
       val train = graft.CacheScope.retain(baskets(s, dir, train = true))
       val test = graft.CacheScope.retain(baskets(s, dir, train = false))
-      val catalog = t(s, dir, "part")
+      val catalog = Tables(s, dir, "part")
         .agg(countDistinct(col("p_partkey")).as("n_catalog"))
       // an item has >= 1 rec iff it appears in ANY train pair, i.e.
       // iff some basket holds it together with a second distinct item

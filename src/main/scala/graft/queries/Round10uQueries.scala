@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch u: three more ClickHouse aggregate-function analogs,
   * continuing the combinator-parity series (windowFunnel, retention,
@@ -26,11 +27,8 @@ import org.apache.spark.sql.functions._
   */
 object Round10uQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def ev(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(col("event_id"), col("user_id"),
+    Tables(s, dir, "events").select(col("event_id"), col("user_id"),
       col("event_type"), unix_micros(col("ts")).as("us"),
       (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
 

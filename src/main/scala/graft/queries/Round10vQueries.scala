@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch v: randomization inference — the permutation test
   * that closes the experimentation family (CUPED, DiD placebo, power
@@ -34,9 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object Round10vQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val K = 20
 
   /** md5-coin in {0,1} from a salted user key. Salt 0 is the REAL
@@ -49,7 +47,7 @@ object Round10vQueries {
 
   /** Per-user outcome frame: total event value in cents. */
   private def perUser(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy("user_id")
       .agg((sum(col("value").cast("decimal(18,2)")) * 100)
         .cast("long").as("y"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-10 batch w: conversion-latency analytics — how long the
   * view→purchase journey takes, the figure a growth team reads next to
@@ -27,11 +28,8 @@ import org.apache.spark.sql.functions._
   */
 object Round10wQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def ev(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(col("event_id"), col("user_id"),
+    Tables(s, dir, "events").select(col("event_id"), col("user_id"),
       col("event_type"), unix_micros(col("ts")).as("us"))
 
   /** Per converting user: first view, first purchase strictly after it

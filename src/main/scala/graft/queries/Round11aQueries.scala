@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-11 first batch: TEMPORAL band joins written the way users
   * actually write them — raw TimestampType/DateType columns compared
@@ -32,13 +33,8 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round11aQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   private def ev(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(col("event_id"), col("event_type"),
+    Tables(s, dir, "events").select(col("event_id"), col("event_type"),
       col("value"), col("ts"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -79,7 +75,7 @@ object Round11aQueries {
     }),
 
     "q_date_band_join_auto" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("d"))
       val a = o.select(col("o_orderkey").as("ka"), col("d").as("da"))
@@ -96,7 +92,7 @@ object Round11aQueries {
     }),
 
     "q_date_between_join_auto" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val urgent = o.filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey").as("ku"), to_date(col("o_orderdate")).as("du"))
       val high = o.filter(col("o_orderpriority") === "2-HIGH")

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-11 second batch: the remaining ClickHouse behavioral-analytics
   * combinators a reference user reaches for (r10 verdict #4) —
@@ -41,17 +42,12 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round11bQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_sequence_match_timed" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val W = 3600L * 1000000L
-      val vc = t(s, dir, "events")
+      val vc = Tables(s, dir, "events")
         .filter(col("event_type").isin("view", "click"))
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"), col("event_id"))
@@ -82,7 +78,7 @@ object Round11bQueries {
     "q_funnel_strict_order" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val W = 3600L * 1000000L
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"), col("event_id"))
       val w = Window.partitionBy("user_id").orderBy("us", "event_id")
@@ -108,7 +104,7 @@ object Round11bQueries {
 
     "q_funnel_strict_dedup" -> ((s, dir) => {
       val W = 3600L * 1000000L
-      val ev = graft.CacheScope.retain(t(s, dir, "events")
+      val ev = graft.CacheScope.retain(Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us")))
       val anchors = ev.filter(col("event_type") === "view")
@@ -157,7 +153,7 @@ object Round11bQueries {
 
     "q_group_array_moving" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .filter(col("ts").isNotNull)
         .select(col("event_type"), to_date(col("ts")).as("d"),
           col("value").cast(dec).as("v"))

@@ -2,9 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.DetMath
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-11 third batch: four more analytics surfaces a ClickHouse-sink
   * user expects, each absent from the inventory until now.
@@ -32,11 +33,6 @@ import graft.functions.DetMath
   */
 object Round11cQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   /** Written-order fold of `term` over rows sorted by `key`: the
     * cross-engine-deterministic float sum for handful-sized term sets.
     */
@@ -50,7 +46,7 @@ object Round11cQueries {
       // ts IS NOT NULL like the sibling time-keyed keys: a NULL hour
       // group would ORDER differently across engines (Spark nulls
       // first, DuckDB nulls last) under the positional comparator
-      val hourly = t(s, dir, "events")
+      val hourly = Tables(s, dir, "events")
         .filter(col("ts").isNotNull)
         .select(col("event_type"), hour(col("ts")).cast("long").as("h"),
           col("value").cast(dec).as("v"))
@@ -67,7 +63,7 @@ object Round11cQueries {
     }),
 
     "q_group_bitmap_ops" -> ((s, dir) => {
-      val perUser = t(s, dir, "events")
+      val perUser = Tables(s, dir, "events")
         .filter(col("ts").isNotNull)
         .select(col("user_id"), dayofweek(col("ts")).as("wd"))
         .distinct()
@@ -83,7 +79,7 @@ object Round11cQueries {
     }),
 
     "q_cramers_v" -> ((s, dir) => {
-      val cells = graft.CacheScope.retain(t(s, dir, "orders")
+      val cells = graft.CacheScope.retain(Tables(s, dir, "orders")
         .groupBy(col("o_orderpriority").as("p"),
           col("o_orderstatus").as("st"))
         .agg(count(lit(1)).as("c")))
@@ -133,7 +129,7 @@ object Round11cQueries {
 
     "q_sequence_timed_sweep" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val vc = t(s, dir, "events")
+      val vc = Tables(s, dir, "events")
         .filter(col("event_type").isin("view", "click"))
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"), col("event_id"))

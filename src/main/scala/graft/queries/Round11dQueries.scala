@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-11 fourth batch: DECIMAL band joins through the naive API —
   * the duplicate-payment / price-band shapes. A DecimalType is a scaled
@@ -19,11 +20,8 @@ import org.apache.spark.sql.functions._
   */
 object Round11dQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def priced(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").select(col("o_orderkey").as("k"),
+    Tables(s, dir, "orders").select(col("o_orderkey").as("k"),
       col("o_totalprice").cast("decimal(12,2)").as("p"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{d, dec}
 
 /** Round-11 fifth batch: the ClickHouse statistical-test / time-series
   * functions still absent from the inventory.
@@ -32,17 +34,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round11eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def d(c: Column): Column = c.cast("string").cast("double")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_welch_ttest" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .filter(col("event_type") === "purchase" && col("value").isNotNull)
         // the q_ab_test_z arms: first md5 hex char splits users
         .withColumn("g",
@@ -101,7 +96,7 @@ object Round11eQueries {
     "q_lttb_downsample" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val nBuckets = 30
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .filter(col("ts").isNotNull)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(sum(col("value").cast(dec)).as("rev"))
@@ -145,7 +140,7 @@ object Round11eQueries {
 
     "q_tukey_fences" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .filter(col("value").isNotNull)
         .select(col("event_type"), col("value").cast(dec).as("v"))
       // exact type-1 order statistics: q1 at ceil(n/4), q3 at

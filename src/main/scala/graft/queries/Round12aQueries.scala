@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-12 first batch: TimestampNTZ band joins (r11 verdict #4).
   * TimestampNTZ is the second timestamp flavor a real event table
@@ -26,16 +27,11 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round12aQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   /** events with ts reinterpreted as wall-clock NTZ (exact under the
     * pinned-UTC session zone).
     */
   private def evNtz(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(col("event_id"), col("event_type"),
+    Tables(s, dir, "events").select(col("event_id"), col("event_type"),
       col("value"), col("ts").cast("timestamp_ntz").as("ts"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-12 second batch: deterministic heavy hitters — the ClickHouse
   * `topK` / `topKWeighted` / `anyHeavy` / `sparkbar` analog family
@@ -43,9 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object Round12bQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** 16-way md5 shard coin: value of the 8th hex digit of
     * md5(tag || rowKey) — deterministic under any partitioning.
     */
@@ -62,7 +60,7 @@ object Round12bQueries {
       // the ground-truth aggregate — without it each arm re-ran the
       // 1-row-group scan as its own single task (guide §1.2, §2.5)
       val ev = graft.CacheScope.retain(PipelineQueries.spread(s,
-        t(s, dir, "events")
+        Tables(s, dir, "events")
           .filter(col("user_id").isNotNull)
           .select(col("event_id"), col("user_id"))))
       val local = ev.withColumn("sh", shard("ss", col("event_id")))
@@ -111,7 +109,7 @@ object Round12bQueries {
       // exact counts read off the full exact aggregate, and the integer
       // total is the sum of per-key sums.
       val li = graft.CacheScope.retain(PipelineQueries.spread(s,
-        t(s, dir, "lineitem")
+        Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
             col("l_quantity").cast("long").as("w"))))
       val rowKey = concat(col("l_orderkey").cast("string"), lit("_"),
@@ -150,7 +148,7 @@ object Round12bQueries {
     }),
 
     "q_any_heavy" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .filter(col("user_id").isNotNull && col("event_type").isNotNull)
         .select(col("event_id"), col("event_type"), col("user_id"))
       // r12 (guide §2.3/§4): one retained (type, shard, user) count is
@@ -210,7 +208,7 @@ object Round12bQueries {
     }),
 
     "q_sparkbar" -> ((s, dir) => {
-      val d = t(s, dir, "events")
+      val d = Tables(s, dir, "events")
         .filter(col("ts").isNotNull)
         .select(expr("unix_date(to_date(ts))").cast("long").as("day"))
       val rng = d.agg(min(col("day")).as("d_min"),

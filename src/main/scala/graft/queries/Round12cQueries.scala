@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{d, dec}
 
 /** Round-12 third batch: the remaining ClickHouse-analog statistics a
   * migrating analyst still reaches for — rank tests, association
@@ -35,13 +37,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round12cQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def d(c: Column): Column = c.cast("string").cast("double")
-
   /** Written-order fold of `term` over rows sorted by `key` (the
     * cross-engine-deterministic float sum for handful-sized term sets).
     */
@@ -52,7 +47,7 @@ object Round12cQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_mann_whitney_u" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .filter(col("event_type") === "purchase" && col("value").isNotNull)
         .withColumn("g",
           when(substring(md5(col("user_id").cast("string")), 1, 1) < "8",
@@ -91,7 +86,7 @@ object Round12cQueries {
     }),
 
     "q_spearman_rho" -> ((s, dir) => {
-      val per = t(s, dir, "orders")
+      val per = Tables(s, dir, "orders")
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("x"),
           sum(col("o_totalprice").cast(dec)).as("y"))
@@ -129,7 +124,7 @@ object Round12cQueries {
     }),
 
     "q_sequence_count_greedy" -> ((s, dir) => {
-      val vp = t(s, dir, "events")
+      val vp = Tables(s, dir, "events")
         .filter(col("event_type").isin("view", "purchase"))
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"), col("event_id"))
@@ -158,7 +153,7 @@ object Round12cQueries {
     }),
 
     "q_max_intersections" -> ((s, dir) => {
-      val ses = t(s, dir, "events")
+      val ses = Tables(s, dir, "events")
         .filter(col("ts").isNotNull)
         .select(to_date(col("ts")).as("day"),
           unix_micros(col("ts")).as("us"), col("event_id"))
@@ -183,7 +178,7 @@ object Round12cQueries {
     }),
 
     "q_contingency_coef" -> ((s, dir) => {
-      val cells = graft.CacheScope.retain(t(s, dir, "orders")
+      val cells = graft.CacheScope.retain(Tables(s, dir, "orders")
         .groupBy(col("o_orderpriority").as("p"),
           col("o_orderstatus").as("st"))
         .agg(count(lit(1)).as("c")))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-12 fourth batch: interval ALGEBRA over the session sweep —
   * the two capacity questions `q_max_intersections`' peak number
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Round12dQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Per-day sweep segments: (day, open, seg_len) where `open` is the
     * session count over [t, next_t). The last boundary of a day has no
     * successor — its open count is 0 by construction (every +1 has its
@@ -37,7 +35,7 @@ object Round12dQueries {
     * semantic shared with q_max_intersections).
     */
   private def segments(s: SparkSession, dir: String): DataFrame = {
-    val ses = t(s, dir, "events")
+    val ses = Tables(s, dir, "events")
       .filter(col("ts").isNotNull)
       .select(to_date(col("ts")).as("day"),
         unix_micros(col("ts")).as("us"), col("event_id"))

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{d, dec}
 
 /** Round-12 fifth batch: the remaining ClickHouse statistical-test
   * functions — distribution comparison and regression fitting — closing
@@ -41,18 +43,11 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round12eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def d(c: Column): Column = c.cast("string").cast("double")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_ks_test" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val ord = t(s, dir, "orders")
+      val ord = Tables(s, dir, "orders")
         .filter(col("o_orderstatus").isin("F", "O"))
         .select(col("o_totalprice").cast(dec).as("v"),
           when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("g1"),
@@ -96,7 +91,7 @@ object Round12eQueries {
     }),
 
     "q_simple_linreg" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_quantity").cast(dec).as("x"),
           col("l_extendedprice").cast(dec).as("y"))
       val stats = li.agg(
@@ -134,7 +129,7 @@ object Round12eQueries {
       // parameters, not estimated — fixed literals here (conf = 0.95)
       val varX = 2000000.0
       val varY = 2000000.0
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .filter(col("event_type") === "purchase" &&
           col("value").isNotNull && col("ts").isNotNull)
         .withColumn("g",

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{d, dec}
 
 /** Round-12 sixth batch: the ClickHouse time-series aggregate tail —
   * counter deltas, timing-resolution quantiles, and exponential
@@ -33,20 +35,13 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round12fQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def d(c: Column): Column = c.cast("string").cast("double")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_delta_sum_timestamp" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("event_type")
         .orderBy("us", "event_id")
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .filter(col("ts").isNotNull && col("value").isNotNull)
         .select(col("event_type"), col("event_id"),
           unix_micros(col("ts")).as("us"), col("value").cast(dec).as("v"))
@@ -64,7 +59,7 @@ object Round12fQueries {
     "q_quantile_timing" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val wU = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val gaps = t(s, dir, "events")
+      val gaps = Tables(s, dir, "events")
         .filter(col("ts").isNotNull)
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("us"))
@@ -93,7 +88,7 @@ object Round12fQueries {
     }),
 
     "q_exp_moving_avg" -> ((s, dir) => {
-      val hourly = t(s, dir, "events")
+      val hourly = Tables(s, dir, "events")
         .filter(col("ts").isNotNull && col("value").isNotNull)
         .groupBy(col("event_type"), hour(col("ts")).cast("long").as("h"))
         .agg((d(sum(col("value").cast(dec)).cast(DecimalType(28, 2))) /

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{d, dec}
 
 /** Round-12 seventh batch: the ClickHouse moment/association aggregates
   * still missing after 12e — higher central moments and weighted means.
@@ -27,13 +29,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round12gQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def d(c: Column): Column = c.cast("string").cast("double")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_moments" -> ((s, dir) => {
@@ -41,7 +36,7 @@ object Round12gQueries {
       // partial decimal aggregate ran serially (guide §2.5 unsplittable
       // input -> repartition right after the read). spread() is a
       // ~10 MB round-robin exchange that unlocks all cores.
-      val li = PipelineQueries.spread(s, t(s, dir, "lineitem")
+      val li = PipelineQueries.spread(s, Tables(s, dir, "lineitem")
         .select(col("l_discount").cast(DecimalType(4, 2)).as("x")))
       // exact raw power sums: x ∈ [0, 1] with scale 2 ⇒ x² scale 4,
       // x³ scale 6, x⁴ scale 8 — all exact decimal products
@@ -80,7 +75,7 @@ object Round12gQueries {
     }),
 
     "q_covar_corr" -> ((s, dir) => {
-      val li = PipelineQueries.spread(s, t(s, dir, "lineitem")
+      val li = PipelineQueries.spread(s, Tables(s, dir, "lineitem")
         .select(col("l_returnflag").as("flag"),
           col("l_discount").cast(DecimalType(4, 2)).as("x"),
           col("l_extendedprice").cast(dec).as("y"))) // spread: see q_moments
@@ -118,7 +113,7 @@ object Round12gQueries {
     }),
 
     "q_avg_weighted" -> ((s, dir) => {
-      val li = PipelineQueries.spread(s, t(s, dir, "lineitem")
+      val li = PipelineQueries.spread(s, Tables(s, dir, "lineitem")
         .select(col("l_returnflag").as("flag"),
           col("l_extendedprice").cast(dec).as("x"),
           col("l_quantity").cast(dec).as("w"))) // spread: see q_moments

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{d, dec}
 
 /** Round-12 eighth batch: the ClickHouse variance-decomposition /
   * regression aggregates still open after 12g.
@@ -42,13 +44,6 @@ import org.apache.spark.sql.types.DecimalType
   * never touches the corpus again after the sufficient statistics.
   */
 object Round12hQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def d(c: Column): Column = c.cast("string").cast("double")
 
   /** Exact per-group sufficient statistics of a decimal(18,2) column. */
   private def groupStats(df: DataFrame): DataFrame =
@@ -92,7 +87,7 @@ object Round12hQueries {
     "q_anova_f" -> ((s, dir) => {
       // r12: spread() after the 1-row-group scan — the partial decimal
       // aggregate otherwise runs on a single scan task (guide §2.5)
-      val li = PipelineQueries.spread(s, t(s, dir, "lineitem")
+      val li = PipelineQueries.spread(s, Tables(s, dir, "lineitem")
         .select(col("l_returnflag").as("flag"),
           col("l_extendedprice").cast(dec).as("x")))
       anovaFrom(groupStats(li))
@@ -103,7 +98,7 @@ object Round12hQueries {
       // grid, and the deviation scan) — without the retain each one
       // re-ran the scan + spread exchange (guide §1.2)
       val li = graft.CacheScope.retain(
-        PipelineQueries.spread(s, t(s, dir, "lineitem")
+        PipelineQueries.spread(s, Tables(s, dir, "lineitem")
           .select(col("l_returnflag").as("flag"),
             col("l_extendedprice").cast(dec).as("x")))) // spread: q_anova_f
       val tot = li.groupBy("flag").agg(count(lit(1)).as("gn"))
@@ -123,7 +118,7 @@ object Round12hQueries {
     }),
 
     "q_corr_matrix" -> ((s, dir) => {
-      val li = PipelineQueries.spread(s, t(s, dir, "lineitem").select(
+      val li = PipelineQueries.spread(s, Tables(s, dir, "lineitem").select(
         col("l_discount").cast(DecimalType(4, 2)).as("vd"),
         col("l_extendedprice").cast(dec).as("vp"),
         col("l_quantity").cast(dec).as("vq"),
@@ -181,7 +176,7 @@ object Round12hQueries {
       // reads 0.52 s on the raw 1-task scan vs 0.98 s behind a
       // round-robin exchange of the two decimal columns — the shuffle
       // write+read costs more than the lost scan parallelism (guide §1)
-      val li = t(s, dir, "lineitem").select(
+      val li = Tables(s, dir, "lineitem").select(
         col("l_quantity").cast(dec).as("x"),
         col("l_extendedprice").cast(dec).as("y"))
       val stats = li.agg(

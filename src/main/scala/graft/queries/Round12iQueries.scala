@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{d, dec}
 
 /** Round-12 ninth batch: CH `retention`, `quantileBFloat16`, and the
   * finance-series recurrences (Wilder RSI, MACD).
@@ -39,17 +41,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round12iQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def d(c: Column): Column = c.cast("string").cast("double")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_retention_conditions" -> ((s, dir) => {
-      val ev = t(s, dir, "events").filter(col("user_id").isNotNull)
+      val ev = Tables(s, dir, "events").filter(col("user_id").isNotNull)
       val perUser = ev.groupBy("user_id").agg(
         max(when(col("event_type") === "view", 1).otherwise(0)).as("c1"),
         max(when(col("event_type") === "click", 1).otherwise(0)).as("c2"),
@@ -70,7 +65,7 @@ object Round12iQueries {
     }),
 
     "q_quantile_bfloat16" -> ((s, dir) => {
-      val cents = t(s, dir, "lineitem")
+      val cents = Tables(s, dir, "lineitem")
         .select((col("l_extendedprice").cast(dec) * 100)
           .cast("long").as("c"))
       // truncate to 8 significant bits: e = bitlength−1, step = 2^(e−7)
@@ -122,7 +117,7 @@ object Round12iQueries {
     }),
 
     "q_rsi_wilder" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .filter(col("ts").isNotNull && col("value").isNotNull)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg((d(sum(col("value").cast(dec)).cast(DecimalType(28, 2))) /
@@ -155,7 +150,7 @@ object Round12iQueries {
     }),
 
     "q_macd_signal" -> ((s, dir) => {
-      val daily = t(s, dir, "orders")
+      val daily = Tables(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("day"))
         .agg((d(sum(col("o_totalprice").cast(dec))
           .cast(DecimalType(38, 2))) / count(lit(1))).as("dv"))

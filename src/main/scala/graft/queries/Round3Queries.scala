@@ -3,10 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.queries.QueryKit.{dec, dsum}
 
 /** Round-3 additions: the remaining classic TPC-H query shapes
   * (Q4/Q12/Q14/Q16/Q19/Q22 — EXISTS aggregation, case-sum over a join,
@@ -24,18 +24,6 @@ import graft.functions.VectorFunctions._
   * exact-decimal arithmetic so the DuckDB oracle matches bitwise.
   */
 object Round3Queries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    Tables(s, dir, n)
-  }
-
-  /** Exact sum of a 2-decimal double column, surfaced as DOUBLE. */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 2))).cast("double")
-
-  private val dec = DecimalType(18, 2)
 
   /** l_extendedprice * (1 - l_discount) in exact decimals. */
   private def discPrice: Column =
@@ -58,8 +46,8 @@ object Round3Queries {
     // counted per priority. The EXISTS is a semi join — lineitem never
     // leaves its shuffle partition and duplicates never inflate counts.
     "q_tpch_q4" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"),
+      Tables(s, dir, "orders")
+        .join(Tables(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey") &&
             col("l_shipdate") > col("o_orderdate"), "left_semi")
         .groupBy("o_orderpriority")
@@ -71,7 +59,7 @@ object Round3Queries {
     // lineitem lacks) — the two-way conditional-sum-over-join pattern.
     "q_tpch_q12" -> ((s, dir) => {
       val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      t(s, dir, "orders").join(t(s, dir, "lineitem"),
+      Tables(s, dir, "orders").join(Tables(s, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey") &&
             col("l_shipdate") >= col("o_orderdate"))
         .groupBy("l_returnflag")
@@ -84,8 +72,8 @@ object Round3Queries {
     // exact decimal sums over a broadcast part join. The division is the
     // only FP op and runs once, identically, in both engines.
     "q_tpch_q14" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")),
+      Tables(s, dir, "lineitem")
+        .join(broadcast(Tables(s, dir, "part")),
           col("l_partkey") === col("p_partkey"))
         .agg(
           sum(when(col("p_type") === "PROMO", discPrice)
@@ -98,12 +86,12 @@ object Round3Queries {
     // sizes, excluding one brand and low-balance suppliers (NOT IN ->
     // null-safe anti join; keys are non-null so it stays a plain anti).
     "q_tpch_q16" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")
+      Tables(s, dir, "lineitem")
+        .join(broadcast(Tables(s, dir, "supplier")
             .filter(col("s_acctbal") < 2000)
             .select(col("s_suppkey"))),
           col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .join(broadcast(t(s, dir, "part")
+        .join(broadcast(Tables(s, dir, "part")
             .filter(col("p_brand") =!= "Brand#3" &&
               col("p_size").isin(1, 4, 7, 10, 13))),
           col("l_partkey") === col("p_partkey"))
@@ -115,8 +103,8 @@ object Round3Queries {
     // join condition — the OR must not force a cartesian; part stays
     // broadcast and each lineitem row probes once.
     "q_tpch_q19" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")),
+      Tables(s, dir, "lineitem")
+        .join(broadcast(Tables(s, dir, "part")),
           col("l_partkey") === col("p_partkey") && (
             (col("p_brand") === "Brand#1" && col("p_size").between(1, 5) &&
               col("l_quantity").between(1, 11)) ||
@@ -131,7 +119,7 @@ object Round3Queries {
     // name) cohorts with above-average balance and no pending order —
     // scalar aggregate subquery (broadcast single row) + anti join.
     "q_tpch_q22" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
+      val cust = Tables(s, dir, "customer")
         .withColumn("cntrycode", substring(col("c_name"), 18, 1))
         .filter(col("cntrycode").isin(q22Codes: _*))
       val avgBal = cust.filter(col("c_acctbal") > 0.0)
@@ -139,7 +127,7 @@ object Round3Queries {
           count(lit(1))).as("avgbal"))
       cust.crossJoin(broadcast(avgBal))
         .filter(col("c_acctbal") > col("avgbal"))
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "P"),
+        .join(Tables(s, dir, "orders").filter(col("o_orderstatus") === "P"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy("cntrycode")
         .agg(count(lit(1)).as("numcust"),
@@ -152,7 +140,7 @@ object Round3Queries {
     // sign-LSH buckets (16-way blocking — the join that survives 100x);
     // each duplicate keeps its smallest-id neighbor above the threshold.
     "dedup_embedding_cosine" -> ((s, dir) => {
-      val n = t(s, dir, "embeddings")
+      val n = Tables(s, dir, "embeddings")
         .withColumn("nrm", normD(col("embedding")))
         .withColumn("bucket", signBucket(col("embedding"), lshDims))
       val a = n.select(col("bucket"), col("vec_id").as("a_id"),
@@ -176,7 +164,7 @@ object Round3Queries {
     // tokens, stride 15. Pure integer arithmetic + sequence explode —
     // one scan, no shuffle until the output sort.
     "doc_chunking" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .withColumn("n", size(col("toks")))
         .withColumn("n_chunks",
@@ -198,7 +186,7 @@ object Round3Queries {
     // every engine and every rerun.
     "sample_stratified" -> ((s, dir) => {
       val byLang = Window.partitionBy("lang")
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("h",
           md5(concat(lit("strat:"), col("doc_id").cast("string"))))
         .withColumn("rn",
@@ -213,7 +201,7 @@ object Round3Queries {
     // 100 chars of each doc — the support table a real n-gram language
     // identifier trains from (lang_id uses fixed marker words).
     "ngram_profile" -> ((s, dir) =>
-      PipelineQueries.spread(s, t(s, dir, "documents"))
+      PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("lang"), substring(col("text"), 1, 100).as("sp"))
         .withColumn("len", length(col("sp")))
         .select(col("lang"), explode(
@@ -233,7 +221,7 @@ object Round3Queries {
     // clip's duration_ms — the real decoder is the stubbed mapInPandas
     // seam in MultimodalOps; this is the plan it consumes).
     "multimodal_frame_sample" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"), (col("n_chars") * 10).as("duration_ms"))
         .withColumn("n_frames",
           least(lit(16), expr("(duration_ms + 39) div 40")))
@@ -256,7 +244,7 @@ object Round3Queries {
     // that formulation, proving equivalence).
     "q_topk_agg" -> ((s, dir) => {
       val topk = udaf(new graft.functions.TopKAggregator(3))
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy("o_custkey")
         .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top"))
         .select(col("o_custkey"),
@@ -273,7 +261,7 @@ object Round3Queries {
     // conditional-min aggregations chained by joins — each join keyed on
     // user_id, so at scale all three resolve in one co-partitioning.
     "q_funnel_steps" -> ((s, dir) => {
-      val base = t(s, dir, "events")
+      val base = Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("tu"))
       val s1 = base.filter(col("event_type") === "insert")
@@ -295,7 +283,7 @@ object Round3Queries {
     // (cohort, day-offset) — the daily-distinct reduction happens before
     // any join, so only (user, day) pairs shuffle, never raw events.
     "q_cohort_retention" -> ((s, dir) => {
-      val days = t(s, dir, "events")
+      val days = Tables(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       val first = days.groupBy("user_id").agg(min(col("day")).as("cohort"))
       days.join(first, "user_id")
@@ -311,7 +299,7 @@ object Round3Queries {
     // spine is generated distributed (explode after a groupBy), never
     // on the driver.
     "q_gap_fill" -> ((s, dir) => {
-      val hourly = t(s, dir, "events")
+      val hourly = Tables(s, dir, "events")
         .select(col("user_id"), date_trunc("hour", col("ts")).as("h"),
           col("value"))
         .groupBy("user_id", "h")
@@ -340,7 +328,7 @@ object Round3Queries {
     // single-partition window anywhere, though the daily aggregate is
     // calendar-bounded (~365 rows/year) at any data scale.
     "q_running_distinct" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(min(date_format(col("ts"), "yyyy-MM-dd")).as("d"))
         .groupBy("d").agg(count(lit(1)).as("new_users"))
@@ -364,7 +352,7 @@ object Round3Queries {
     // null-filled (allowMissingColumns) — the batch form of ingesting
     // two feed versions into one sink table.
     "q_union_by_name" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
       val a = li.filter(col("l_returnflag") === "A")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity").as("qty"), lit("a").as("src"))
@@ -393,7 +381,7 @@ object Round3Queries {
         16, 10).cast("long")
       val bottom64 = udaf(new graft.functions.TopKAggregator(64))
       val kth = element_at(col("mins"), 64).getField("id")
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_returnflag"), u.as("u")).distinct()
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_distinct"),
@@ -422,7 +410,7 @@ object Round3Queries {
     // keys from subtotal rows in cube output — without them rollup
     // results are unconsumable downstream.
     "q_grouping_id" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .cube("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("n"),
           grouping(col("o_orderstatus")).as("g_status"),
@@ -444,7 +432,7 @@ object Round3Queries {
     // also mixes parsed digits with letter->NULL rows so no output
     // column is all-NULL.
     "q_try_funcs" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_orderkey") < 100)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"),
@@ -468,7 +456,7 @@ object Round3Queries {
     // access, map construction + lookup, map_keys — flattened back to
     // scalars so the oracle checks the round-tripped values.
     "q_complex_types" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .withColumn("js", from_json(col("props"),
           org.apache.spark.sql.types.StructType.fromDDL("k INT")))
         .withColumn("k", col("js").getField("k"))
@@ -485,7 +473,7 @@ object Round3Queries {
     // (regexp_extract_all with a capture-group index), plus derived
     // stats — the BPE-ish regex tokenization path.
     "q_regexp_funcs" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("vw", regexp_extract_all(col("text"),
           lit("(^| )([aeiou][a-z]*)"), lit(2)))
         .filter(size(col("vw")) > 0)

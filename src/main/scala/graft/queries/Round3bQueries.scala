@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.functions.VectorFunctions.{dotD, normD}
+import graft.queries.QueryKit.dec
 
 /** Round-3 second batch: the statistical-aggregate surface (moments,
   * correlation, regression — the profiling pass a corpus runs before
@@ -31,11 +32,6 @@ import graft.functions.VectorFunctions.{dotD, normD}
   * task-key partition — each is linear and shuffle-minimal at 100 TB.
   */
 object Round3bQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    Tables(s, dir, n)
-  }
 
   // exact 2-dp decimal casts: l_quantity is integral 1..50, prices are
   // exact 2-decimal values (FIXTURES.md) — these casts are lossless
@@ -78,7 +74,7 @@ object Round3bQueries {
     // exact decimal sums — the shuffle moves 6 numbers per group, and
     // the FP tree is written identically in the oracle.
     "q_stats_moments" -> ((s, dir) =>
-      sufficientStats(t(s, dir, "lineitem"))
+      sufficientStats(Tables(s, dir, "lineitem"))
         .select(col("l_returnflag"), col("n"),
           (sxD / nD).as("mean_qty"),
           ((nD * sxxD - sxD * sxD) / (nD * (nD - lit(1.0))))
@@ -95,7 +91,7 @@ object Round3bQueries {
     // built-in corr/regr_slope whose summation order is engine-
     // dependent): slope = (nΣxy−ΣxΣy)/(nΣx²−(Σx)²).
     "q_corr_regr" -> ((s, dir) =>
-      sufficientStats(t(s, dir, "lineitem"))
+      sufficientStats(Tables(s, dir, "lineitem"))
         .select(col("l_returnflag"), col("n"),
           ((nD * sxyD - sxD * syD) / (nD * sxxD - sxD * sxD))
             .as("slope"),
@@ -112,7 +108,7 @@ object Round3bQueries {
     // both engines. The window shuffles once on its partition key.
     "q_window_cume_dist" -> ((s, dir) => {
       val w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice"),
           percent_rank().over(w).as("pct_rank"),
@@ -124,11 +120,10 @@ object Round3bQueries {
     // value) rows — the inverse of q_pivot. Metrics are exact sums cast
     // to double; avg is the one mirrored division.
     "q_unpivot" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val cust = t(s, dir, "customer")
-      val nat = t(s, dir, "nation")
-      val reg = t(s, dir, "region")
-      val dec = DecimalType(18, 2)
+      val orders = Tables(s, dir, "orders")
+      val cust = Tables(s, dir, "customer")
+      val nat = Tables(s, dir, "nation")
+      val reg = Tables(s, dir, "region")
       orders
         .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
         .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
@@ -152,7 +147,7 @@ object Round3bQueries {
     // gate every 100 TB corpus applies before training.
     "quality_repetition" -> ((s, dir) =>
       // O(distinct·n) per-row folds: spread the single-file scan first
-      PipelineQueries.spread(s, t(s, dir, "documents"))
+      PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tokens", size(col("ws")))
         .withColumn("top_cnt",
@@ -184,7 +179,7 @@ object Round3bQueries {
     // unigram count table (vocabulary-sized, small by Heaps' law
     // relative to the corpus) broadcasts back onto the pair counts.
     "token_collocations" -> ((s, dir) => {
-      val ws = t(s, dir, "documents")
+      val ws = Tables(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
       val pairs = ws
         .filter(size(col("ws")) > 1)
@@ -228,7 +223,7 @@ object Round3bQueries {
       // the merge application — persist so the split/explode runs once
       // per pass (a real BPE trainer caches its word corpus across all
       // merge iterations for the same reason)
-      val words = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val words = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"),
           explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 2)
@@ -257,7 +252,7 @@ object Round3bQueries {
     // scan streams, and the argmin is a tiny per-key window — no
     // shuffle of vector payloads at all beyond the output sort.
     "embedding_kmeans_assign" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val cents = broadcast(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("ce"),
@@ -283,7 +278,7 @@ object Round3bQueries {
     // exactly the batch shape a vectorized decoder consumes. One window
     // shuffle on the task key; integer arithmetic throughout.
     "multimodal_decode_batches" -> ((s, dir) => {
-      val chunks = t(s, dir, "documents")
+      val chunks = Tables(s, dir, "documents")
         .withColumn("n_bytes", octet_length(col("text")))
         .withColumn("n_chunks", expr("(n_bytes + 999) div 1000"))
         .filter(col("n_bytes") > 0)

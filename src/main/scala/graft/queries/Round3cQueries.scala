@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-3 third batch: the remaining classic TPC-H query shapes
   * expressible on this star schema — Q6 (banded-predicate scan agg),
@@ -27,11 +28,6 @@ import graft.Tables
   */
 object Round3cQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   /** l_extendedprice * (1 - l_discount) in exact decimals. */
   private def volume: Column =
     col("l_extendedprice").cast(DecimalType(12, 2)) *
@@ -45,7 +41,7 @@ object Round3cQueries {
     // pushes to the parquet scan; the aggregate is one partial+final
     // pair with a single decimal sum crossing the exchange.
     "q_tpch_q6" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
           col("l_discount") >= 0.045 && col("l_discount") <= 0.075 &&
@@ -60,13 +56,13 @@ object Round3cQueries {
     // pair by ship year. supplier/customer/nation broadcast; the
     // lineitem⋈orders join is the only data shuffle.
     "q_tpch_q7" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val sup = broadcast(t(s, dir, "supplier"))
-      val cust = broadcast(t(s, dir, "customer"))
-      val n1 = broadcast(t(s, dir, "nation")
+      val li = Tables(s, dir, "lineitem")
+      val ord = Tables(s, dir, "orders")
+      val sup = broadcast(Tables(s, dir, "supplier"))
+      val cust = broadcast(Tables(s, dir, "customer"))
+      val n1 = broadcast(Tables(s, dir, "nation")
         .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation")))
-      val n2 = broadcast(t(s, dir, "nation")
+      val n2 = broadcast(Tables(s, dir, "nation")
         .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation")))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .join(sup, col("l_suppkey") === col("s_suppkey"))
@@ -85,14 +81,14 @@ object Round3cQueries {
     // order year — a ratio of two exact decimal sums with a single
     // mirrored double division.
     "q_tpch_q8" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val cust = broadcast(t(s, dir, "customer"))
-      val nat = broadcast(t(s, dir, "nation"))
-      val reg = broadcast(t(s, dir, "region")
+      val li = Tables(s, dir, "lineitem")
+      val ord = Tables(s, dir, "orders")
+      val cust = broadcast(Tables(s, dir, "customer"))
+      val nat = broadcast(Tables(s, dir, "nation"))
+      val reg = broadcast(Tables(s, dir, "region")
         .filter(col("r_name") === "ASIA"))
-      val sup = broadcast(t(s, dir, "supplier"))
-      val supNat = broadcast(t(s, dir, "nation")
+      val sup = broadcast(Tables(s, dir, "supplier"))
+      val supNat = broadcast(Tables(s, dir, "nation")
         .select(col("n_nationkey").as("sn_key"),
           col("n_name").as("supp_nation")))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -118,11 +114,11 @@ object Round3cQueries {
     // the aggregation/join shape is Q9's, with part and supplier
     // broadcast and one lineitem⋈orders shuffle.
     "q_tpch_q9" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val part = broadcast(t(s, dir, "part"))
-      val sup = broadcast(t(s, dir, "supplier"))
-      val nat = broadcast(t(s, dir, "nation"))
+      val li = Tables(s, dir, "lineitem")
+      val ord = Tables(s, dir, "orders")
+      val part = broadcast(Tables(s, dir, "part"))
+      val sup = broadcast(Tables(s, dir, "supplier"))
+      val nat = broadcast(Tables(s, dir, "nation"))
       val cost = col("p_retailprice").cast(DecimalType(12, 2)) *
         lit("0.5").cast(DecimalType(2, 1))
       li.join(part, col("l_partkey") === col("p_partkey"))
@@ -142,8 +138,8 @@ object Round3cQueries {
     // with no qualifying orders count as 0 — an inner join would lose
     // them).
     "q_tpch_q13" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val ord = t(s, dir, "orders")
+      val cust = Tables(s, dir, "customer")
+      val ord = Tables(s, dir, "orders")
         .filter(col("o_orderpriority") =!= "1-URGENT")
       cust.join(ord, col("c_custkey") === col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -158,14 +154,14 @@ object Round3cQueries {
     // revenue (a double max could strand the true winner); the cast to
     // double happens only on output.
     "q_tpch_q15" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem")
+      val rev = Tables(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
         .groupBy(col("l_suppkey"))
         .agg(sum(volume).as("total_rev"))
       val top = rev.agg(max(col("total_rev")).as("max_rev"))
       rev.join(broadcast(top), col("total_rev") === col("max_rev"))
-        .join(broadcast(t(s, dir, "supplier")),
+        .join(broadcast(Tables(s, dir, "supplier")),
           col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"),
           col("total_rev").cast("double").as("total_revenue"))
@@ -179,10 +175,10 @@ object Round3cQueries {
     // broadcast twice (filter + stats join); per-part stats aggregate
     // only the brand's lineitems.
     "q_tpch_q17" -> ((s, dir) => {
-      val brandParts = broadcast(t(s, dir, "part")
+      val brandParts = broadcast(Tables(s, dir, "part")
         .filter(col("p_brand") === "Brand#1")
         .select("p_partkey"))
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .join(brandParts, col("l_partkey") === col("p_partkey"))
       val stats = li.groupBy(col("l_partkey").as("sp_key"))
         .agg(count(lit(1)).as("n_li"),
@@ -204,8 +200,7 @@ object Round3cQueries {
     // exactly the plain join's — no false negatives, and false
     // positives die in the real join — so the oracle is ordinary SQL.
     "q_bloom_join" -> ((s, dir) => {
-      graft.expressions.BloomExpressions.register(s)
-      val urgent = t(s, dir, "orders")
+      val urgent = Tables(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
       // stat.bloomFilter on an EMPTY frame returns a bloom whose bit
       // buffer is null (writeTo NPEs) — substitute an explicit empty
@@ -220,7 +215,7 @@ object Round3cQueries {
         bloom.writeTo(bos)
         bos.toByteArray
       }
-      val prunedLi = t(s, dir, "lineitem")
+      val prunedLi = Tables(s, dir, "lineitem")
         .filter(call_function("graft_bloom_might_contain",
           col("l_orderkey"), lit(bytes)))
       prunedLi.join(urgent, col("l_orderkey") === col("o_orderkey"))
@@ -238,8 +233,8 @@ object Round3cQueries {
     // supplier count, late count AND the unique late supplier, so no
     // join-back over lineitem is needed at all.
     "q_tpch_q21" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
+      val li = Tables(s, dir, "lineitem")
+      val ord = Tables(s, dir, "orders")
       // two-level aggregate instead of two COUNT(DISTINCT ...): the
       // Expand-based distinct rewrite would triple the fact rows through
       // the shuffle; collapsing to (order, supplier) first, then
@@ -260,7 +255,7 @@ object Round3cQueries {
         .filter(col("n_supp") > 1 && col("n_late") === 1)
         .groupBy("late_supp")
         .agg(count(lit(1)).as("numwait"))
-        .join(broadcast(t(s, dir, "supplier")),
+        .join(broadcast(Tables(s, dir, "supplier")),
           col("late_supp") === col("s_suppkey"))
         .select(col("s_name"), col("numwait"))
         .orderBy(col("numwait").desc, col("s_name"))

@@ -22,9 +22,6 @@ import graft.Tables
   */
 object Round3dQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // INTERSECT ALL: multiset intersection — each supplier key appears
@@ -32,7 +29,7 @@ object Round3dQueries {
     // variant (q_intersect) collapses. Spark plans this as an
     // aggregate-with-counts + generate, one shuffle on the value.
     "q_intersect_all" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
       li.filter(col("l_returnflag") === "R").select("l_suppkey")
         .intersectAll(
           li.filter(col("l_linestatus") === "F").select("l_suppkey"))
@@ -42,7 +39,7 @@ object Round3dQueries {
     // EXCEPT ALL: multiset difference — count_A − count_B occurrences
     // survive per key.
     "q_except_all" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
       li.filter(col("l_returnflag") === "R").select("l_partkey")
         .exceptAll(
           li.filter(col("l_linestatus") === "F").select("l_partkey"))
@@ -52,7 +49,7 @@ object Round3dQueries {
     // Boolean aggregates: ALL/ANY predicates and conditional counts per
     // group — one partial-aggregated scan.
     "q_bool_agg" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
           expr("bool_and(o_totalprice > 1000)").as("all_over_1k"),
@@ -66,8 +63,8 @@ object Round3dQueries {
     // build the LEFT (fact) side, a shape that cannot exist at 100 TB —
     // the hint keeps the committed plan contract honest at scale.
     "q_right_join" -> ((s, dir) =>
-      t(s, dir, "lineitem").hint("merge")
-        .join(t(s, dir, "part"),
+      Tables(s, dir, "lineitem").hint("merge")
+        .join(Tables(s, dir, "part"),
           col("l_partkey") === col("p_partkey"), "right")
         .groupBy("p_partkey")
         .agg(count(col("l_orderkey")).as("n_lines"))
@@ -78,10 +75,10 @@ object Round3dQueries {
     // survive null-padded; the key is coalesced so no row loses its
     // identity (same rule as the streaming full-outer interval join).
     "q_full_outer_join" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
+      val cust = Tables(s, dir, "customer")
         .filter(col("c_acctbal") > 0)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val big = t(s, dir, "orders")
+      val big = Tables(s, dir, "orders")
         .filter(col("o_totalprice") > 150000)
         .select(col("o_custkey"), col("o_orderkey"))
       cust.join(big, col("c_custkey") === col("o_custkey"), "full_outer")
@@ -101,7 +98,7 @@ object Round3dQueries {
     // libs in this environment) but the planning math is the
     // production shape.
     "multimodal_resize_plan" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"),
           (pmod(col("doc_id") * 37, lit(1280)) + 64).as("src_w"),
           (pmod(col("doc_id") * 73, lit(720)) + 64).as("src_h"))
@@ -121,7 +118,7 @@ object Round3dQueries {
     // reasons concatenated deterministically, keep = no failures. One
     // scan, no shuffle before the output sort.
     "quality_gate" -> ((s, dir) =>
-      PipelineQueries.spread(s, t(s, dir, "documents"))
+      PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .withColumn("n_tokens", size(split(col("text"), " ")))
         .withColumn("n_distinct",
           size(array_distinct(split(col("text"), " "))))
@@ -154,7 +151,7 @@ object Round3dQueries {
     // identical weighted-edge exchange is built once and reused by both
     // iterations. Degree = Σw, the multigraph out-degree.
     "graph_pagerank" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val edgesW = li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.pk") =!= col("y.pk"))
@@ -169,7 +166,7 @@ object Round3dQueries {
         .transform(graft.CacheScope.retain)
       // uniform seed over the part dimension (no extra edge pass;
       // parts that never co-occur contribute nothing downstream)
-      val ranks0 = t(s, dir, "part").select(col("p_partkey").as("node"))
+      val ranks0 = Tables(s, dir, "part").select(col("p_partkey").as("node"))
         .withColumn("r", lit(1000000000L))
       def step(ranks: DataFrame): DataFrame =
         edgesD.join(ranks, col("src") === col("node"))
@@ -192,7 +189,7 @@ object Round3dQueries {
     // independently confirms the rewrite). Same-name pairs contribute
     // C(m,2) exact duplicates; cross-name pairs m_a·m_b each.
     "dedup_levenshtein" -> ((s, dir) => {
-      val names = t(s, dir, "part")
+      val names = Tables(s, dir, "part")
         .groupBy(col("p_brand"), col("p_name"))
         .agg(count(lit(1)).as("m"))
       val a = names.select(col("p_brand").as("brand"),

@@ -3,11 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.functions.VectorFunctions.dotD
 import graft.operators.GlobalRank
+import graft.queries.QueryKit.dec
 
 /** Round-3 fifth batch: passage-level intra-corpus dedup (the
   * RefinedWeb-style complement of document-level dedup — duplicated
@@ -29,13 +29,6 @@ import graft.operators.GlobalRank
   */
 object Round3eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    Tables(s, dir, n)
-  }
-
-  private val dec = DecimalType(18, 2)
-
   /** Deterministic IEEE dot in DuckDB, operand order mirroring dotD. */
   private def ddot(a: String, b: String): String =
     s"list_sum(list_transform(range(1,65), i -> " +
@@ -53,7 +46,7 @@ object Round3eQueries {
     // same shuffle a groupBy would cost, with no join back. Integer
     // counts only — exact.
     "dedup_passage" -> ((s, dir) => {
-      val toks = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val toks = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 8)
       val wins = toks.select(col("doc_id"),
@@ -76,7 +69,7 @@ object Round3eQueries {
     // Together with embedding_kmeans_assign this is one full Lloyd
     // iteration, the training loop of the semantic-dedup clusterer.
     "embedding_kmeans_update" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val cents = broadcast(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("ce"),
           dotD(col("embedding"), col("embedding")).as("n2c")))
@@ -129,7 +122,7 @@ object Round3eQueries {
     // the negated metric, and every ordering carries the custkey
     // tie-break so bucket boundaries stay deterministic.
     "q_rfm_segments" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val per = o.groupBy("o_custkey").agg(
         max(col("o_orderdate").cast("date")).as("last_d"),
         count(lit(1)).as("freq"),
@@ -165,7 +158,7 @@ object Round3eQueries {
     // the (tiny, broadcastable) parent map; depth is bounded by
     // log2(|nation|).
     "q_recursive_cte" -> ((s, dir) => {
-      t(s, dir, "nation").createOrReplaceTempView("nation_rv")
+      Tables(s, dir, "nation").createOrReplaceTempView("nation_rv")
       s.sql("""
         WITH RECURSIVE tree AS (
           SELECT 0 AS node, 0 AS depth

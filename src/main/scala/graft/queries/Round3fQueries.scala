@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-3 sixth batch: the three remaining classic TPC-H shapes —
   * Q2 (min-cost supplier: correlated min over a dimension-joined
@@ -28,11 +28,6 @@ import graft.Tables
   */
 object Round3fQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // TPC-H Q2 shape: for each small part, the European supplier(s)
@@ -43,16 +38,16 @@ object Round3fQueries {
     // deterministic.
     "q_tpch_q2" -> ((s, dir) => {
       val euroSupp = broadcast(
-        t(s, dir, "supplier")
-          .join(t(s, dir, "nation"),
+        Tables(s, dir, "supplier")
+          .join(Tables(s, dir, "nation"),
             col("s_nationkey") === col("n_nationkey"))
-          .join(t(s, dir, "region").filter(col("r_name") === "EUROPE"),
+          .join(Tables(s, dir, "region").filter(col("r_name") === "EUROPE"),
             col("n_regionkey") === col("r_regionkey"))
           .select("s_suppkey", "s_name", "s_acctbal", "n_name"))
-      val smallParts = broadcast(t(s, dir, "part")
+      val smallParts = broadcast(Tables(s, dir, "part")
         .filter(col("p_size") <= 10)
         .select("p_partkey", "p_brand"))
-      val ps = t(s, dir, "lineitem")
+      val ps = Tables(s, dir, "lineitem")
         .groupBy(col("l_partkey").as("ps_partkey"),
           col("l_suppkey").as("ps_suppkey"))
         .agg(min(col("l_extendedprice")).as("ps_supplycost"))
@@ -82,11 +77,11 @@ object Round3fQueries {
     // operand-for-operand in the oracle so the boundary rows agree.
     "q_tpch_q11" -> ((s, dir) => {
       val regionSupp = broadcast(
-        t(s, dir, "supplier")
-          .join(t(s, dir, "nation").filter(col("n_regionkey") === 0),
+        Tables(s, dir, "supplier")
+          .join(Tables(s, dir, "nation").filter(col("n_regionkey") === 0),
             col("s_nationkey") === col("n_nationkey"))
           .select("s_suppkey"))
-      val ps = t(s, dir, "lineitem")
+      val ps = Tables(s, dir, "lineitem")
         .groupBy(col("l_partkey"), col("l_suppkey"))
         .agg(min(col("l_extendedprice").cast(dec)).as("cost"),
           sum(col("l_quantity").cast(dec)).cast(dec).as("qty"))
@@ -112,10 +107,10 @@ object Round3fQueries {
     // each shrinking the key set before the next join touches it;
     // supplier⋈nation stays broadcast-sized.
     "q_tpch_q20" -> ((s, dir) => {
-      val widgetParts = broadcast(t(s, dir, "part")
+      val widgetParts = broadcast(Tables(s, dir, "part")
         .filter(col("p_name").like("%widget"))
         .select("p_partkey"))
-      val ps = t(s, dir, "lineitem")
+      val ps = Tables(s, dir, "lineitem")
         .join(widgetParts, col("l_partkey") === col("p_partkey"),
           "left_semi")
         .groupBy("l_suppkey")
@@ -125,9 +120,9 @@ object Round3fQueries {
             .otherwise(lit(0).cast(dec))).as("qty_recent"))
       val excess = ps.filter(col("qty_recent") * 5 < col("qty_total") * 2)
         .select("l_suppkey")
-      t(s, dir, "supplier")
+      Tables(s, dir, "supplier")
         .join(excess, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .join(broadcast(t(s, dir, "nation")),
+        .join(broadcast(Tables(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select("s_name", "s_acctbal", "n_name")
         .orderBy("s_name")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{dotD, normD}
+import graft.Tables
 
 /** Round-5 batch: the retrieval side of a training-data pipeline —
   * keyword search (BM25), index construction (posting lists), and
@@ -27,9 +28,6 @@ import graft.functions.VectorFunctions.{dotD, normD}
   */
 object Round5Queries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    PipelineQueries.t(s, dir, n)
-
   private val queryTerms = Seq("hash", "join", "vector")
 
   /** BM25-scored documents for [[queryTerms]] (k1=1.2, b=0.75):
@@ -39,7 +37,7 @@ object Round5Queries {
     * aggregations at any corpus size.
     */
   private def bm25Scored(s: SparkSession, dir: String): DataFrame = {
-    val docs = PipelineQueries.spread(s, t(s, dir, "documents"))
+    val docs = PipelineQueries.spread(s, Tables(s, dir, "documents"))
       .select(col("doc_id"), col("text"))
     // corpus stats: exact integers, broadcast as one row; avgdl enters
     // the formula as dl*n_docs/sum_dl so no early lossy division
@@ -102,7 +100,7 @@ object Round5Queries {
     // sharded, and only bounded heads travel through a single agg.
     "q_inverted_index" -> ((s, dir) => {
       val bottom8 = udaf(new graft.functions.TopKAggregator(8))
-      PipelineQueries.spread(s, t(s, dir, "documents"))
+      PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"),
           explode(split(col("text"), " ")).as("term"))
         .filter(length(col("term")) >= 2)
@@ -125,7 +123,7 @@ object Round5Queries {
       val lex = rankTop(bm25Scored(s, dir), 50,
           Seq(col("score").desc, col("doc_id")), "r_lex")
         .select(col("doc_id"), col("r_lex"))
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probe = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("pe")))
       val sem = rankTop(
@@ -157,7 +155,7 @@ object Round5Queries {
     // the weights are a broadcast row and sampling is a stateless
     // filter on the scan.
     "q_temperature_mix" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
       // ONE corpus-wide combine shuffle produces the 5-row lang counts;
       // the total, the fold normalizer, and the per-lang rates all
       // derive from that single collected row (folds, not re-scans —
@@ -207,7 +205,7 @@ object Round5Queries {
       // the corpus into words otherwise (r13, guide §1.2 — two full
       // scan+split+explode passes for one word frame)
       val words = graft.CacheScope.retain(
-        PipelineQueries.spread(s, t(s, dir, "documents"))
+        PipelineQueries.spread(s, Tables(s, dir, "documents"))
           .select(col("doc_id"), explode(split(col("text"), " ")).as("w")))
       val pairCnt = words.filter(length(col("w")) >= 2)
         .select(explode(expr(

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5Head, md5HeadSql}
 
 /** Round-5b batch: corpus-assembly operators — the steps between "docs
   * are scored and deduped" and "tokens reach the trainer": sequence
@@ -17,26 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5bQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    PipelineQueries.t(s, dir, n)
-
-  /** First 8 hex chars of md5(prefix || doc_id) as an exact long in
-    * [0, 2^32) — the deterministic per-doc coin every routing op uses.
-    */
-  private def md5Head(prefix: String): org.apache.spark.sql.Column =
-    conv(substring(md5(concat(lit(prefix), col("doc_id").cast("string"))),
-      1, 8), 16, 10).cast("long")
-
-  /** The same 8-hex-char fold in DuckDB (conv() does not exist there);
-    * exact for values < 2^53.
-    */
-  private def md5HeadSql(prefix: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(
-       |        substring(md5('$prefix' || CAST(doc_id AS VARCHAR)), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Sequence packing, concat-then-chunk style (the GPT-line
@@ -49,9 +31,10 @@ object Round5bQueries {
     // partitioned window, and no shuffle carries more than (doc, tok).
     "seq_pack_plan" -> ((s, dir) => {
       val budget = 512L
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
         .withColumn("tok", size(split(col("text"), " ")).cast("long"))
-        .withColumn("shard", pmod(md5Head("pack"), lit(8)))
+        .withColumn("shard", pmod(md5Head(
+          concat(lit("pack"), col("doc_id").cast("string"))), lit(8)))
       val w = Window.partitionBy("shard").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
       docs
@@ -75,7 +58,7 @@ object Round5bQueries {
     // scheduler-dependent; df and n_docs are exact integers. At scale:
     // one explode + vocab-partitioned join + per-doc bounded collect.
     "q_idf_surprisal" -> ((s, dir) => {
-      val docs = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val docs = PipelineQueries.spread(s, Tables(s, dir, "documents"))
       val toks = docs.select(col("doc_id"),
         explode(split(col("text"), " ")).as("term"))
       val df = toks.distinct().groupBy("term")
@@ -103,7 +86,7 @@ object Round5bQueries {
     "dedup_keep_best" -> ((s, dir) => {
       val fp = md5(lower(col("text")))
       val w = Window.partitionBy("fp")
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
         .withColumn("fp", fp)
         .withColumn("n_dups", count(lit(1)).over(w))
         .withColumn("rn", row_number().over(
@@ -121,8 +104,9 @@ object Round5bQueries {
     // by (coin ASC, doc_id ASC)).
     "sample_reservoir" -> ((s, dir) => {
       val bottom5 = udaf(new graft.functions.TopKAggregator(5))
-      t(s, dir, "documents")
-        .withColumn("h", md5Head("rsv"))
+      Tables(s, dir, "documents")
+        .withColumn("h",
+          md5Head(concat(lit("rsv"), col("doc_id").cast("string"))))
         .groupBy("lang", "source")
         .agg(bottom5(-col("h").cast("double"), col("doc_id")).as("p"))
         .select(col("lang"), col("source"),
@@ -139,7 +123,7 @@ object Round5bQueries {
       s"""WITH d AS (
          |  SELECT doc_id,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-         |    ${md5HeadSql("pack")} % 8 AS shard
+         |    ${md5HeadSql("'pack' || CAST(doc_id AS VARCHAR)")} % 8 AS shard
          |  FROM documents
          |), c AS (
          |  SELECT doc_id, shard, tok,
@@ -192,7 +176,7 @@ object Round5bQueries {
     "sample_reservoir" ->
       s"""WITH h AS (
          |  SELECT lang, source, doc_id,
-         |    ${md5HeadSql("rsv")} AS h
+         |    ${md5HeadSql("'rsv' || CAST(doc_id AS VARCHAR)")} AS h
          |  FROM documents
          |)
          |SELECT lang, source,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.GlobalRank
+import graft.Tables
 
 /** Round-5c batch: data-layout planning and operational monitoring —
   * the table-maintenance and alerting surface a 100 TB lakehouse runs
@@ -19,9 +20,6 @@ import graft.operators.GlobalRank
   * them — both engines produce bitwise-identical cells.
   */
 object Round5cQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   /** 16-bit Morton code: interleave the low 8 bits of x (even
     * positions) and y (odd positions). Plain integer multiply-adds so
@@ -69,7 +67,7 @@ object Round5cQueries {
     // stats buy at 100 TB. Pure integer bit arithmetic; one shuffle
     // (the 64-group aggregate), partials map-side.
     "q_zorder_layout" -> ((s, dir) => {
-      val b = t(s, dir, "lineitem").select(
+      val b = Tables(s, dir, "lineitem").select(
         pmod(col("l_partkey"), lit(256L)).as("px"),
         pmod(col("l_suppkey"), lit(256L)).as("sy"))
       b.withColumn("z", morton8(col("px"), col("sy")))
@@ -91,7 +89,7 @@ object Round5cQueries {
     // provably balanced (max-min <= 1 row).
     "q_range_layout" -> ((s, dir) => {
       GlobalRank.withNtile(
-          t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
+          Tables(s, dir, "orders").select("o_orderkey", "o_totalprice"),
           col("o_totalprice"), col("o_orderkey"), "bucket", 16)
         .groupBy("bucket").agg(
           count(lit(1)).as("n"),
@@ -109,7 +107,7 @@ object Round5cQueries {
     // distinct-weighted median passes + broadcast joins of tiny
     // per-type stats — nothing sorts raw rows.
     "q_mad_outliers" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select("event_type", "value")
+      val ev = Tables(s, dir, "events").select("event_type", "value")
       val med = groupMedian(ev, "event_type", "value", "med")
       val dev = ev.join(broadcast(med), "event_type")
         .withColumn("dev", abs(col("value") - col("med")))
@@ -134,7 +132,7 @@ object Round5cQueries {
     // O(types x minutes) rows BEFORE any window — the window input is
     // time-bounded, not data-bounded, at any corpus size.
     "q_event_rate_alert" -> ((s, dir) => {
-      val cnt = t(s, dir, "events")
+      val cnt = Tables(s, dir, "events")
         .select(col("event_type"),
           call_function("div", unix_millis(col("ts")), lit(60000L))
             .as("minute_idx"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
 
 /** Round-5d batch: TPC-H completion and table-integrity maintenance —
   * the pricing-summary report that completes the 22-query TPC-H set
@@ -20,9 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   * binary, so HALF_UP and half-away agree).
   */
 object Round5dQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -43,7 +41,7 @@ object Round5dQueries {
       val discPrice = col("l_extendedprice").cast(dp) *
         (one - col("l_discount").cast(dr))
       val charge = discPrice * (one + col("l_tax").cast(dr))
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -90,7 +88,7 @@ object Round5dQueries {
           .as(s"nn_$c"),
           countDistinct(col(c)).as(s"nd_$c"))
       }
-      val wide = t(s, dir, "orders")
+      val wide = Tables(s, dir, "orders")
         .agg(count(lit(1)).as("n"), aggs: _*)
       val stacked = cols.map(c => s"'$c', nn_$c, nd_$c").mkString(", ")
       wide.selectExpr("n",
@@ -117,7 +115,7 @@ object Round5dQueries {
         round(col("o_totalprice") * 100).cast("long").cast("string"),
         unix_millis(col("o_orderdate").cast("timestamp")).cast("string"),
         col("o_orderpriority"))
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .withColumn("h",
           conv(substring(md5(rowStr), 1, 15), 16, 10).cast("long"))
         .groupBy("o_orderpriority")
@@ -135,7 +133,7 @@ object Round5dQueries {
     // it describes — so the single-partition cumulative sum is
     // deliberate and bounded, exactly like a real table service.
     "q_compaction_plan" -> ((s, dir) => {
-      val manifest = t(s, dir, "lineitem")
+      val manifest = Tables(s, dir, "lineitem")
         .groupBy(call_function("div", col("l_orderkey"), lit(400L))
           .as("file_id"))
         .agg(count(lit(1)).as("rows_in_file"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5e batch: embedding-store maintenance — the audits a 100 TB
   * vector corpus runs before serving: int8 quantization planning
@@ -15,9 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** (dim, x) points: one row per embedding coordinate, position
     * 0-based, value widened float→double (exact). The explode is
     * rows×64 but each point is 12 bytes and the downstream aggregates
@@ -25,7 +23,7 @@ object Round5eQueries {
     * per partition, not O(rows×dims).
     */
   private def points(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       .select(posexplode(col("embedding")).as(Seq("dim", "xf")))
       .select(col("dim"), col("xf").cast("double").as("x"))
 
@@ -65,7 +63,7 @@ object Round5eQueries {
     // uniform), and the share as one double division. The stats row
     // (total, k) broadcasts — no second pass over the data.
     "q_label_balance" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val stats = e.agg(count(lit(1)).as("total"),
         countDistinct(col("label")).as("k"))
       e.groupBy("label").agg(count(lit(1)).as("n"))
@@ -83,7 +81,7 @@ object Round5eQueries {
     // holds). Two hash aggregates, both map-side combined; nothing
     // about the plan changes at 100×.
     "dedup_cluster_hist" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy(md5(col("text")).as("fp"))
         .agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5f batch: skew forensics and exact-cardinality primitives —
   * the pre-join audits a 100 TB shuffle plan depends on: heavy-hitter
@@ -16,9 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5fQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Heavy-hitter audit — the skew report read before choosing a join
@@ -30,7 +28,7 @@ object Round5fQueries {
     // 20 rows per partition — never a sort of all keys.
     "q_heavy_hitters" -> ((s, dir) => {
       val topk = udaf(new graft.functions.TopKAggregator(20))
-      val counts = t(s, dir, "orders")
+      val counts = Tables(s, dir, "orders")
         .groupBy("o_custkey").agg(count(lit(1)).as("n"))
       val stats = counts.agg(sum("n").as("total"),
         count(lit(1)).as("n_keys"))
@@ -58,7 +56,7 @@ object Round5fQueries {
     // the bitmaps re-merge across days/partitions losslessly — the
     // property HLL trades away.
     "q_bitmap_distinct" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"),
           call_function("div", col("user_id"), lit(63L)).as("bucket"),
           expr("shiftleft(1L, cast(pmod(user_id, 63) as int))").as("bit"))
@@ -75,7 +73,7 @@ object Round5fQueries {
     // backward q_asof_join — both sides co-partition on user_id and
     // the window replaces an O(n²) inequality join.
     "q_asof_forward" -> ((s, dir) => {
-      val e = t(s, dir, "events").withColumn("us", unix_micros(col("ts")))
+      val e = Tables(s, dir, "events").withColumn("us", unix_micros(col("ts")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("us"), lit(0).as("side"),
           col("event_id"), col("value").as("click_value"),
@@ -111,7 +109,7 @@ object Round5fQueries {
         .orderBy(col("ts"), col("event_id"))
       val gapUs = 30L * 60 * 1000 * 1000
       val capUs = 60L * 60 * 1000 * 1000
-      val sess = t(s, dir, "events")
+      val sess = Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("prev_us", lag(col("us"), 1).over(byTime))
         .withColumn("is_new",

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5g batch: graph structure, mergeable-sketch algebra, and the
   * modern SQL sugar surface — triangle counting with degree-ordered
@@ -16,9 +17,6 @@ import org.apache.spark.sql.functions._
   * in the oracle.
   */
 object Round5gQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   /** Distinct undirected co-purchase edges (a < b): two parts that
     * appear on the same order. The self-join is per-order (equi on
@@ -35,7 +33,7 @@ object Round5gQueries {
     // sorts); this shape has no join at all. sort_array makes the
     // collect_set order deterministic and gives a < b by construction —
     // the (a, b) pair set is identical to the join's.
-    val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
+    val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey")
     li.groupBy("l_orderkey")
       .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
       .select(explode(flatten(transform(col("ps"), (a, i) =>
@@ -96,7 +94,6 @@ object Round5gQueries {
       // primitive two-pointer merge (graft_lsorted_intersect_size) —
       // array_intersect's per-row boxed hash set was this query's
       // dominant CPU cost (r7: 70-120 s of task time at sf0.1).
-      graft.expressions.LongArrayExpressions.register(s)
       val adjOut = oriented.groupBy(col("src").as("u"))
         .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       val triangles = oriented
@@ -136,7 +133,7 @@ object Round5gQueries {
       val bottomK = udaf(new graft.functions.TopKAggregator(k))
       val u = conv(substring(md5(col("user_id").cast("string")), 1, 8),
         16, 10).cast("long")
-      val base = t(s, dir, "events")
+      val base = Tables(s, dir, "events")
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_type"), u.as("u")).distinct()
       // per-type sketch: k smallest hashes (score = -u keeps smallest;
@@ -182,7 +179,7 @@ object Round5gQueries {
     // user. The (us, event_id) key is total, so the pick is
     // deterministic.
     "q_distinct_on" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .groupBy("user_id")
         .agg(max_by(
@@ -201,7 +198,7 @@ object Round5gQueries {
     // then argmax by (count DESC, value ASC) via max_by over a
     // lexicographic struct — no per-group sort of raw rows.
     "q_mode" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_quantity"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy("l_returnflag")
@@ -217,7 +214,7 @@ object Round5gQueries {
     // list). Semantically identical to the explicit form; the point is
     // surface parity. Decimal-routed sum keeps the double exact.
     "q_group_by_all" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem_v")
+      Tables(s, dir, "lineitem").createOrReplaceTempView("lineitem_v")
       s.sql("""
         SELECT l_returnflag, l_linestatus, year(l_shipdate) AS yr,
           COUNT(*) AS n,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5h batch: changelog compaction (the minimal-delta emit a
   * ClickHouse-style sink would love to receive), an event-time disorder
@@ -17,11 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5hQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Changelog compaction — the net per-key delta of the window, the
@@ -34,7 +30,7 @@ object Round5hQueries {
     // deterministic); the whole query is one map-side-combinable
     // aggregate per key, no window sort.
     "q_changelog_compact" -> ((s, dir) =>
-      graft.operators.ChangelogOps.withDerivedOp(t(s, dir, "events"))
+      graft.operators.ChangelogOps.withDerivedOp(Tables(s, dir, "events"))
         .groupBy("user_id")
         .agg(
           min_by(col("op"), col("event_id")).as("first_op"),
@@ -59,7 +55,7 @@ object Round5hQueries {
     // aggregates to one row per event type. Integer microseconds.
     "q_disorder_audit" -> ((s, dir) => {
       val arrival = Window.partitionBy("user_id").orderBy("event_id")
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("hwm", max(col("us")).over(
           arrival.rowsBetween(Window.unboundedPreceding, -1)))
@@ -83,7 +79,7 @@ object Round5hQueries {
     // partitioning carries both sides; only docs with ≥1 gram appear
     // (mirrored by the oracle).
     "q_ngram_novelty" -> ((s, dir) => {
-      val grams = t(s, dir, "documents")
+      val grams = Tables(s, dir, "documents")
         .select(col("doc_id"),
           explode(call_function("graft_shingles", col("text"))).as("g"))
       val firsts = grams.groupBy("g").agg(min("doc_id").as("first_doc"))
@@ -107,7 +103,7 @@ object Round5hQueries {
     // 100× the same prefix-max distributes via range-bucketed offsets
     // (GlobalRank's construction). Pure comparisons — no FP arithmetic.
     "q_skyline" -> ((s, dir) => {
-      val parts = t(s, dir, "part")
+      val parts = Tables(s, dir, "part")
         .select("p_partkey", "p_brand", "p_retailprice", "p_size")
       val perPrice = parts.groupBy("p_retailprice")
         .agg(max("p_size").as("gmax"))
@@ -129,7 +125,7 @@ object Round5hQueries {
     // cross-multiplied so no division decides), and the one mirrored
     // share ratio. Broadcast 1-row/stats joins — no second data pass.
     "q_split_bias_audit" -> ((s, dir) => {
-      val routed = t(s, dir, "documents")
+      val routed = Tables(s, dir, "documents")
         .withColumn("h", substring(md5(col("doc_id").cast("string")), 1, 1))
         .withColumn("split",
           when(col("h") < "c", "train")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5i batch: sketch/metadata machinery around the corpus —
   * a Count-Min sketch (deterministic md5 hash rows, so exactly
@@ -19,9 +20,6 @@ import org.apache.spark.sql.functions._
   * single divisions.
   */
 object Round5iQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    PipelineQueries.t(s, dir, n) // registers the text/vector expressions
 
   /** Deterministic CMS cell column for hash row r over a key column:
     * first 8 md5 hex chars of "r:key" mod 64.
@@ -43,7 +41,7 @@ object Round5iQueries {
     // same mergeability KMV gives distinct counts). Five fixed probe
     // users carry the exact-vs-estimate comparison.
     "q_cms_freq" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
       val cells = ev.select(explode(array((0 until 4).map(r =>
           struct(lit(r).as("r"), cmsCol(r, col("user_id")).as("c"))): _*))
           .as("h"))
@@ -77,7 +75,7 @@ object Round5iQueries {
     // 64-char hash, never the text; distinct-before-join caps each
     // hash's fan-out at (#sources)².
     "q_source_overlap_matrix" -> ((s, dir) => {
-      val hs = t(s, dir, "documents")
+      val hs = Tables(s, dir, "documents")
         .select(sha2(col("text"), 256).as("h"), col("source")).distinct()
       hs.as("a").join(hs.as("b"),
           col("a.h") === col("b.h") && col("a.source") < col("b.source"))
@@ -93,7 +91,7 @@ object Round5iQueries {
     // confirms. This is the decontam production pipelines run — exact
     // n-gram overlap misses paraphrased leakage that near-dup catches.
     "decontam_fuzzy" -> ((s, dir) => {
-      val docs = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val docs = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
       val bands = docs.select(col("doc_id"),
         posexplode(call_function("graft_minhash_bands", col("sh")))
@@ -128,7 +126,7 @@ object Round5iQueries {
     // combine shuffle to ~#partitions rows; at 100 TB these fences ARE
     // the manifest stats, and this query is the skip-rate report.
     "q_partition_prune_audit" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .groupBy(unix_millis(date_trunc("month", col("o_orderdate")))
           .as("month_ms"))
         .agg(count(lit(1)).as("n_rows"),
@@ -144,7 +142,7 @@ object Round5iQueries {
     // merges fields ACROSS members). One content-hash-partitioned
     // aggregate; sorted csv keeps the set deterministic.
     "q_survivorship" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy(sha2(col("text"), 256).as("text_hash"))
         .agg(min("doc_id").as("golden_id"),
           max("n_chars").as("max_chars"),

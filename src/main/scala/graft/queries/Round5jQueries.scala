@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5j batch: behavior modeling and distribution reporting —
   * the Markov transition matrix over per-user event sequences (the
@@ -19,9 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5jQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Markov transition matrix — P(next event type | current) per
@@ -33,7 +31,7 @@ object Round5jQueries {
     "q_markov_transition" -> ((s, dir) => {
       val byUser = Window.partitionBy("user_id")
         .orderBy(col("ts"), col("event_id"))
-      val bigrams = t(s, dir, "events")
+      val bigrams = Tables(s, dir, "events")
         .withColumn("next_type", lead(col("event_type"), 1).over(byUser))
         .filter(col("next_type").isNotNull)
         .groupBy(col("event_type").as("from_type"),
@@ -58,7 +56,7 @@ object Round5jQueries {
         fences.zipWithIndex.map { case (f, i) =>
           sum(when(col("value") <= f, 1L).otherwise(0L)).as(s"le_$i")
         }
-      val agg = t(s, dir, "events")
+      val agg = Tables(s, dir, "events")
         .groupBy("event_type")
         .agg(exprs.head, exprs.tail: _*)
       val long = fences.zipWithIndex.map { case (f, i) =>
@@ -76,7 +74,7 @@ object Round5jQueries {
     // pair generation (bounded by lines-per-order); two combine
     // shuffles after that.
     "q_degree_dist" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
+      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey")
       // e feeds both unionAll branches of the degree table: retained so
       // the self-join + distinct derives once (see graph_triangles)
       val e = graft.CacheScope.retain(li.as("x").join(li.as("y"),
@@ -101,7 +99,7 @@ object Round5jQueries {
     // Reuses the forward as-of construction: one user-partitioned
     // window, no inequality join.
     "q_time_to_convert" -> ((s, dir) => {
-      val e = t(s, dir, "events").withColumn("us", unix_micros(col("ts")))
+      val e = Tables(s, dir, "events").withColumn("us", unix_micros(col("ts")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("us"), lit(0).as("side"),
           col("event_id"), lit(null).cast("long").as("p_us"))
@@ -128,7 +126,7 @@ object Round5jQueries {
     // bit-length of n_chars, integer-exact; share is the one mirrored
     // division per bucket.
     "q_len_log2_hist" -> ((s, dir) => {
-      val h = t(s, dir, "documents")
+      val h = Tables(s, dir, "documents")
         .withColumn("bucket", (length(bin(col("n_chars"))) - 1).cast("int"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_docs"),

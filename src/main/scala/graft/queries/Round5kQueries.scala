@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dsum
 
 /** Round-5k batch: the Spark-4 SQL surface (VARIANT semi-structured
   * access, pipe-syntax queries) plus three operational shapes —
@@ -15,12 +17,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round5kQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def dsum(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(18, 2))).cast("double")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // VARIANT semi-structured access (Spark 4's JSON-native type,
@@ -30,7 +26,7 @@ object Round5kQueries {
     // same paths with DuckDB's JSON operators — two engines, two
     // semi-structured engines, same typed answers.
     "q_variant_funcs" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("v", parse_json(col("props")))
         .select(col("event_type"),
           expr("variant_get(v, '$.k', 'long')").as("k"),
@@ -47,7 +43,7 @@ object Round5kQueries {
     // oracle is the identical classic-SQL formulation; semantics must
     // match exactly, proving the surface is sugar not semantics.
     "q_pipe_syntax" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem_pipe_v")
+      Tables(s, dir, "lineitem").createOrReplaceTempView("lineitem_pipe_v")
       s.sql("""
         FROM lineitem_pipe_v
         |> WHERE l_quantity >= 10
@@ -71,7 +67,7 @@ object Round5kQueries {
       val sgn = when(col("op").isin("I", "+U"), 1L).otherwise(-1L)
       val isOld = col("event_id") <= 500
       graft.operators.ChangelogOps
-        .withDerivedOp(t(s, dir, "events"))
+        .withDerivedOp(Tables(s, dir, "events"))
         .groupBy("user_id")
         .agg(
           sum(when(isOld, sgn).otherwise(0L)).as("base_n"),
@@ -95,7 +91,7 @@ object Round5kQueries {
     // one scan subtree (exchange reuse collapses them), broadcast
     // joins, two mirrored divisions.
     "q_share_of_parent" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
       val cells = li.groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"))
       val flags = li.groupBy("l_returnflag")
@@ -118,7 +114,7 @@ object Round5kQueries {
     // one combine aggregate over integer µs buckets — no window sort,
     // no state.
     "q_debounce" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("bucket", call_function("div",
           unix_micros(col("ts")), lit(300L * 1000 * 1000)))
         .groupBy("event_type", "user_id", "bucket")

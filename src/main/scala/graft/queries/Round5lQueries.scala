@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5l batch: evaluation and planning metrics that close loops
   * opened by earlier operators — cluster purity (did the kmeans
@@ -14,9 +15,6 @@ import org.apache.spark.sql.functions._
   * is a single division mirrored literally in the oracle.
   */
 object Round5lQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -31,7 +29,7 @@ object Round5lQueries {
       val assign = Round3bQueries.queries("embedding_kmeans_assign")(s, dir)
         .select("vec_id", "centroid_id")
       val labeled = assign.join(
-        t(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
+        Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
       val cells = labeled.groupBy("centroid_id", "label")
         .agg(count(lit(1)).as("n_label"))
       cells.groupBy("centroid_id")
@@ -54,7 +52,7 @@ object Round5lQueries {
     // that runs before strategy choice; the verification arm exists
     // because this is a correctness-checked engine.
     "q_join_size_audit" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select("l_partkey")
+      val li = Tables(s, dir, "lineitem").select("l_partkey")
       // counts feeds both arms: retained so the 600k-row groupBy runs once
       val counts = graft.CacheScope.retain(
         li.groupBy("l_partkey").agg(count(lit(1)).as("c")))

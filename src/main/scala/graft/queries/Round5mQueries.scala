@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5m batch: normalization dedup (the cheapest real-world dedup
   * level above exact-hash), classifier evaluation (language-ID
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5mQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Normalization dedup — lowercase, strip non-alphanumerics,
@@ -30,7 +28,7 @@ object Round5mQueries {
     "dedup_normalized" -> ((s, dir) => {
       val norm = trim(regexp_replace(regexp_replace(
         lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("h", sha2(norm, 256))
         .groupBy("h")
         .agg(min("doc_id").as("keep_id"),
@@ -48,7 +46,7 @@ object Round5mQueries {
     "q_langid_confusion" -> ((s, dir) => {
       val pred = PipelineQueries.queries("lang_id")(s, dir)
         .select(col("doc_id"), col("lang_guess"))
-      val cells = t(s, dir, "documents").select("doc_id", "lang")
+      val cells = Tables(s, dir, "documents").select("doc_id", "lang")
         .join(pred, "doc_id")
         .groupBy(col("lang").as("actual"),
           col("lang_guess").as("predicted"))
@@ -76,7 +74,7 @@ object Round5mQueries {
           year(col("d")).as("yr"), quarter(col("d")).as("qtr"),
           month(col("d")).as("mo"), dayofmonth(col("d")).as("dom"))
         .withColumn("dow", pmod(col("epoch_day") + 4, lit(7)))
-      val facts = t(s, dir, "orders")
+      val facts = Tables(s, dir, "orders")
         .select(datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
           .as("epoch_day"))
         .groupBy("epoch_day").agg(count(lit(1)).as("n_orders"))
@@ -95,10 +93,10 @@ object Round5mQueries {
     // range-containment filter per row — linear, never row×row.
     "q_scd2_asof_counts" -> ((s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy("event_id")
-      val ranges = t(s, dir, "events")
+      val ranges = Tables(s, dir, "events")
         .withColumn("from_us", unix_micros(col("ts")))
         .withColumn("to_us", lead(col("from_us"), 1).over(byUser))
-      val span = t(s, dir, "events")
+      val span = Tables(s, dir, "events")
         .agg(min(unix_micros(col("ts"))).as("lo"),
           max(unix_micros(col("ts"))).as("hi"))
       val probes = span.select(explode(array(Seq(1, 2, 3).map(k =>

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5n batch: exact rolling distinct counts via bitmap algebra —
   * the window-function form of the q_bitmap_distinct idea (bit_or is
@@ -15,9 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5nQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Rolling 7-day active users, EXACT — the metric usually
@@ -29,7 +27,7 @@ object Round5nQueries {
     // bounded at any corpus size — and every step is associative +
     // idempotent, so re-partitioning never changes the answer.
     "q_rolling_distinct_users" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .select(
           datediff(to_date(col("ts")), lit("1970-01-01")).as("epoch_day"),
           call_function("div", col("user_id"), lit(63L)).as("bucket"),
@@ -56,7 +54,7 @@ object Round5nQueries {
     // sum: the global statistic is the consumer's fold, the report
     // stays deterministic per cell.
     "q_chi2_cells" -> ((s, dir) => {
-      val cells = t(s, dir, "documents")
+      val cells = Tables(s, dir, "documents")
         .groupBy("lang", "source").agg(count(lit(1)).as("o"))
       val rows = cells.groupBy("lang").agg(sum("o").as("r"))
       val colsT = cells.groupBy("source").agg(sum("o").as("c"))

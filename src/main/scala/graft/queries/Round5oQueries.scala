@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5o batch: iterative graph decomposition and bipartite scoring
   * — k-core peeling (the degeneracy structure that separates the dense
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   * single divisions.
   */
 object Round5oQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   /** Distinct undirected co-purchase edges (a < b), as Round5g —
     * delegates to the shared builder (r12: the per-order grouped pair
@@ -104,8 +102,8 @@ object Round5oQueries {
       // level (same reasoning as q_kcore_peel; clearCache between
       // queries bounds the blocks to this query)
       import org.apache.spark.storage.StorageLevel
-      val edges = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"),
+      val edges = Tables(s, dir, "lineitem")
+        .join(Tables(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
@@ -140,7 +138,7 @@ object Round5oQueries {
     // scheduling. One combine aggregate to 7 rows.
     "q_weekday_seasonality" -> ((s, dir) => {
       val d = org.apache.spark.sql.types.DecimalType(18, 2)
-      val byDow = t(s, dir, "orders")
+      val byDow = Tables(s, dir, "orders")
         .withColumn("dow", pmod(
           datediff(to_date(col("o_orderdate")), lit("1970-01-01")) + 4,
           lit(7)))

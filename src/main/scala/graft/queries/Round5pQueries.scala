@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5p batch: corpus distribution diagnostics — the statistical
   * audits a training-data pipeline runs between ingestion and mixing —
@@ -27,9 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5pQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Two-sample KS statistic between the md5-coin train split
@@ -41,7 +39,7 @@ object Round5pQueries {
     // the same shape q_value_ecdf pinned. All arithmetic is integer
     // cumsums + one mirrored division per side.
     "q_ks_split" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
         .withColumn("is_a",
           (substring(md5(col("doc_id").cast("string")), 1, 1) < "c")
             .cast("long"))
@@ -81,7 +79,7 @@ object Round5pQueries {
         when(col("digit") === benford.head._1, lit(benford.head._2))) {
         case (acc, (d, p)) => acc.when(col("digit") === d, lit(p))
       }
-      val byd = t(s, dir, "orders")
+      val byd = Tables(s, dir, "orders")
         .select(substring(floor(col("o_totalprice")).cast("string"), 1, 1)
           .as("digit"))
         .groupBy("digit").agg(count(lit(1)).as("n"))
@@ -106,7 +104,7 @@ object Round5pQueries {
     // into the value. All sums are exact longs; divisions mirrored.
     "q_gini_doclen" -> ((s, dir) => {
       graft.operators.GlobalRank.withGroupRank(
-          t(s, dir, "documents"), Seq("source"),
+          Tables(s, dir, "documents"), Seq("source"),
           col("n_chars"), col("doc_id"), "rk")
         .groupBy("source").agg(
           count(lit(1)).as("n_docs"),
@@ -127,7 +125,7 @@ object Round5pQueries {
     // list so the double addition order is pinned. Two combine
     // aggregates, ≤ |sources|·|langs| intermediate rows.
     "q_source_diversity" -> ((s, dir) => {
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy("source", "lang").agg(count(lit(1)).as("c"))
         .groupBy("source").agg(
           count(lit(1)).as("n_langs"),
@@ -156,7 +154,7 @@ object Round5pQueries {
     // level; Bench/Verify clearCache() bounds the blocks' lifetime).
     "q_bfs_hops" -> ((s, dir) => {
       import org.apache.spark.storage.StorageLevel
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
+      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey")
       val pairs = li.as("x").join(li.as("y"),
           col("x.l_orderkey") === col("y.l_orderkey") &&
             col("x.l_partkey") < col("y.l_partkey"))
@@ -165,7 +163,7 @@ object Round5pQueries {
       val adj = pairs
         .unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
         .transform(graft.CacheScope.retain)
-      var visited = t(s, dir, "part")
+      var visited = Tables(s, dir, "part")
         .filter(col("p_partkey") % 100 === 0)
         .select(col("p_partkey").as("v"))
         .transform(graft.CacheScope.retain)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5q batch: windowed-imputation and event-timeline primitives —
   * the remaining window-function surface (PERCENT_RANK, IGNORE NULLS
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5qQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // PERCENT_RANK of suppliers by account balance within their
@@ -39,7 +37,7 @@ object Round5qQueries {
     "q_percent_rank" -> ((s, dir) => {
       val w = Window.partitionBy("s_nationkey")
         .orderBy(col("s_acctbal"), col("s_suppkey"))
-      t(s, dir, "supplier")
+      Tables(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"),
           percent_rank().over(w).as("pct_rank"))
         .orderBy("s_nationkey", "s_suppkey")
@@ -55,7 +53,7 @@ object Round5qQueries {
       val w = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("value_masked",
           when(col("event_id") % 7 === 0, lit(null).cast("double"))
@@ -75,7 +73,7 @@ object Round5qQueries {
     // [lo, hi), so the 0 / n+1 overflow buckets stay empty. One
     // combine aggregate to ≤ 22 rows.
     "q_width_bucket" -> ((s, dir) =>
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(width_bucket(col("o_totalprice"),
           lit(0d), lit(600000d), lit(20L)).as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_orders"))
@@ -89,7 +87,7 @@ object Round5qQueries {
     // (side orders purchases before clicks at equal us so a same-
     // instant purchase lands in both windows with distance 0).
     "q_asof_nearest" -> ((s, dir) => {
-      val e = t(s, dir, "events").withColumn("us", unix_micros(col("ts")))
+      val e = Tables(s, dir, "events").withColumn("us", unix_micros(col("ts")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("us"), lit(1).as("side"),
           col("event_id"), lit(null).cast("double").as("p_value"),
@@ -135,7 +133,7 @@ object Round5qQueries {
     "q_state_dwell" -> ((s, dir) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("dwell_us", lead(col("us"), 1).over(w) - col("us"))
         .filter(col("dwell_us").isNotNull)

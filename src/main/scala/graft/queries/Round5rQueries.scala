@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5r batch: sequential-model analytics and scale-pattern joins —
   * the ops that need an ORDERED fold (exponential smoothing, CUSUM)
@@ -28,14 +29,11 @@ import org.apache.spark.sql.functions._
   */
 object Round5rQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Daily (epoch-day, count) series per event_type — shared input of
     * the two sequential models.
     */
   private def dailyCounts(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"),
         call_function("div", unix_micros(col("ts")), lit(86400000000L))
           .as("day"))
@@ -87,7 +85,7 @@ object Round5rQueries {
     // change-detection audit behind "did ingestion volume drift?".
     // One tiny day-count aggregate, one 1-row fold.
     "q_cusum_drift" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .select(call_function("div", unix_micros(col("ts")),
           lit(86400000000L)).as("day"))
         .groupBy("day").agg(count(lit(1)).as("cnt"))
@@ -117,7 +115,7 @@ object Round5rQueries {
     // 1/nB)) with the pooled pp — sqrt is correctly rounded IEEE in
     // both engines, every division mirrored. Two tiny aggregates.
     "q_ab_test_z" -> ((s, dir) => {
-      val users = t(s, dir, "events")
+      val users = Tables(s, dir, "events")
         .groupBy("user_id")
         .agg(max((col("event_type") === "purchase").cast("long"))
           .as("converted"))
@@ -176,7 +174,7 @@ object Round5rQueries {
       val deg = graft.CacheScope.retain(
         adj.groupBy("a").agg(count(lit(1)).as("deg"))
           .withColumnRenamed("a", "v"))
-      val seeds = t(s, dir, "part")
+      val seeds = Tables(s, dir, "part")
         .filter(col("p_partkey") % 100 === 0)
         .select(col("p_partkey").as("a"))
       // u −(seed edge)− m −(any edge)− w, w ≠ u
@@ -219,11 +217,11 @@ object Round5rQueries {
     // Aggregated to per-nation order counts to keep the check tight.
     "q_null_skew_join" -> ((s, dir) => {
       val d = org.apache.spark.sql.types.DecimalType(18, 2)
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .withColumn("fk",
           when(col("o_custkey") % 10 === 0, lit(null).cast("long"))
             .otherwise(col("o_custkey")))
-      val c = t(s, dir, "customer").select(
+      val c = Tables(s, dir, "customer").select(
         col("c_custkey"), col("c_nationkey"))
       val matched = o.filter(col("fk").isNotNull)
         .join(c, col("fk") === col("c_custkey"), "left")

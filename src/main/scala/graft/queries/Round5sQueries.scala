@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5s batch: corpus curation mechanics — unsupervised keyword
   * extraction (RAKE), embedding-distribution drift between splits, and
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5sQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val stopwords = Seq("the", "of", "and", "a", "to", "in", "is",
     "on", "for", "with", "as", "by", "an", "be", "at")
 
@@ -39,7 +37,7 @@ object Round5sQueries {
     // Top-20 corpus-wide. Every stage is a partitioned window or a
     // combine aggregate on high-cardinality keys (doc, term).
     "q_rake_keywords" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
+      val toks = Tables(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
         .withColumn("term", lower(col("term")))
@@ -77,7 +75,7 @@ object Round5sQueries {
     // over the dim-SORTED (ma, mb) list. Labels present in only one
     // split drop out (inner join) — there is no drift to measure.
     "q_centroid_shift" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
         .withColumn("split",
           when(substring(md5(col("vec_id").cast("string")), 1, 1) < "8",
             "a").otherwise("b"))
@@ -133,7 +131,7 @@ object Round5sQueries {
     // the n_chars/4 token proxy. All exact longs; three 1-row
     // broadcast joins, no shuffle beyond the per-source aggregate.
     "q_budget_alloc" -> ((s, dir) => {
-      val caps = t(s, dir, "documents")
+      val caps = Tables(s, dir, "documents")
         .select(col("source"),
           call_function("div", col("n_chars"), lit(4L)).as("tok"))
         .groupBy("source").agg(sum("tok").as("cap"))

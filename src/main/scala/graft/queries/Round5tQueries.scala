@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5t batch: event-stream economics — the time-integral,
   * set-algebra, and credit-assignment ops behind engagement and
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5tQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Time-weighted average: each event's value holds until the user's
@@ -41,7 +39,7 @@ object Round5tQueries {
     "q_time_weighted_avg" -> ((s, dir) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("dwell_us", lead(col("us"), 1).over(w) - col("us"))
         .filter(col("dwell_us").isNotNull)
@@ -70,7 +68,7 @@ object Round5tQueries {
     // design: per-type audiences compress to |users|/63 words, the
     // pairwise step moves words, never user ids.
     "q_bitmap_intersect" -> ((s, dir) => {
-      val bm = t(s, dir, "events")
+      val bm = Tables(s, dir, "events")
         .select(col("event_type"),
           call_function("div", col("user_id"), lit(63L)).as("bucket"),
           expr("shiftleft(1L, cast(pmod(user_id, 63) as int))").as("bit"))
@@ -108,7 +106,7 @@ object Round5tQueries {
     // user_id, range on the click window — co-partitioned at scale.
     "q_linear_attribution" -> ((s, dir) => {
       val week = 7L * 86400000000L
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("us").as("p_us"),

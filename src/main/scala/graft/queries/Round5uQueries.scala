@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5u batch: association mining, language-model tables, and the
   * approximate-percentile surface.
@@ -28,9 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5uQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Association-rule lift over order baskets: for part pairs bought
@@ -45,7 +43,7 @@ object Round5uQueries {
       // li feeds four consumers (basket count, support table, both
       // sides of the pair self-join) and supp joins twice: retained so
       // the scan + distinct and the support aggregate derive once
-      val li = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val li = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey").distinct())
       val nBaskets = li.select("l_orderkey").distinct()
         .agg(count(lit(1)).as("n_baskets"))
@@ -80,7 +78,7 @@ object Round5uQueries {
       // bigrams feeds the unigram-count aggregate AND the ranked
       // output: retained so the corpus posexplode + lead window runs
       // once, not once per consumer
-      val bigrams = graft.CacheScope.retain(t(s, dir, "documents")
+      val bigrams = graft.CacheScope.retain(Tables(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
         .withColumn("tok", lower(col("tok")))
@@ -112,7 +110,7 @@ object Round5uQueries {
     // One broadcast of the 3-row sketch frame back onto the scan — the
     // verification pass is a second scan, not a sort.
     "q_approx_percentile" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice"))
       val sk = li.groupBy("l_returnflag")
         .agg(

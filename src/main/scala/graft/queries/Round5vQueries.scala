@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsOfJoinOps
+import graft.Tables
 
 /** Round-5v batch: queries served by the NATIVE custom operators —
   * the custom-LogicalPlan/SparkStrategy/SparkPlan stack, driven
@@ -24,13 +25,10 @@ import graft.operators.AsOfJoinOps
   */
 object Round5vQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_asof_native" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"),
@@ -50,7 +48,7 @@ object Round5vQueries {
     }),
 
     "q_asof_native_forward" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id"),
@@ -76,7 +74,7 @@ object Round5vQueries {
     // are single mirrored divisions over exact counts; thresholds are
     // integer comparisons.
     "q_dq_constraints" -> ((s, dir) => {
-      val wide = t(s, dir, "documents").agg(
+      val wide = Tables(s, dir, "documents").agg(
         count(lit(1)).as("n"),
         count(col("text")).as("nonnull_text"),
         countDistinct(col("doc_id")).as("distinct_ids"),

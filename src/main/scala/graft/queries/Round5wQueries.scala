@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5w batch: robust statistics and metric forensics — the
   * numerically-careful analytics that close out a metrics platform.
@@ -23,9 +24,6 @@ import org.apache.spark.sql.functions._
   * bucket-sorted lists.
   */
 object Round5wQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -48,7 +46,7 @@ object Round5wQueries {
       // (which passes over it twice: the quantile probe and the bucket
       // window), the per-type counts, and the final clamp scan — four
       // derivations of the same scan+filter otherwise
-      val base = graft.CacheScope.retain(t(s, dir, "events")
+      val base = graft.CacheScope.retain(Tables(s, dir, "events")
         .select(col("event_type"), col("event_id"), col("value"))
         .filter(col("value").isNotNull))
       val ranked = graft.operators.GlobalRank.withGroupRank(
@@ -87,7 +85,7 @@ object Round5wQueries {
     // report NULL. Two tiny aggregates after the per-day rollup.
     "q_autocorr" -> ((s, dir) => {
       val byType = Window.partitionBy("event_type").orderBy("day")
-      val paired = t(s, dir, "events")
+      val paired = Tables(s, dir, "events")
         .select(col("event_type"),
           call_function("div", unix_micros(col("ts")),
             lit(86400000000L)).as("day"))
@@ -119,7 +117,7 @@ object Round5wQueries {
     // |·| sum folds bucket-sorted. Source × bucket stays tiny —
     // |sources|·|buckets| rows.
     "q_tv_distance" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
         .select(col("source"),
           call_function("div", col("n_chars"), lit(500L)).as("bucket"))
       val global = docs.groupBy("bucket").agg(count(lit(1)).as("g"))
@@ -154,7 +152,7 @@ object Round5wQueries {
     // divisions.
     "q_revenue_bridge" -> ((s, dir) => {
       val d = org.apache.spark.sql.types.DecimalType(18, 2)
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_orderpriority").as("priority"),
           col("o_totalprice"), col("o_orderdate").cast("date").as("od"))
       val wD = Window.orderBy("od")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5x batch: model-evaluation harness — the metrics a pipeline
   * computes over its own classifiers, rankers and recommenders before
@@ -27,14 +28,11 @@ import org.apache.spark.sql.functions._
   */
 object Round5xQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Per-user behavioral features: score = click count (the "model"),
     * label = ever purchased. One combine aggregate over events.
     */
   private def userScores(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy("user_id")
       .agg(
         sum(when(col("event_type") === "click", 1L).otherwise(0L))
@@ -100,7 +98,7 @@ object Round5xQueries {
     "q_f1_macro" -> ((s, dir) => {
       val pred = PipelineQueries.queries("lang_id")(s, dir)
         .select(col("doc_id"), col("lang_guess"))
-      val j = t(s, dir, "documents").select("doc_id", "lang")
+      val j = Tables(s, dir, "documents").select("doc_id", "lang")
         .join(pred, "doc_id")
         .select(col("lang").as("actual"), col("lang_guess").as("predicted"))
       val act = j.groupBy(col("actual").as("c"))
@@ -155,7 +153,7 @@ object Round5xQueries {
     "q_calibration_bins" -> ((s, dir) => {
       val h = conv(substring(md5(col("event_id").cast("string")), 1, 8),
         16, 10).cast("long")
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(h.as("h"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
         .withColumn("bin",
@@ -213,7 +211,7 @@ object Round5xQueries {
     // lossless long for every rank 1..20, so MRR needs no cross-row
     // double sum — one division at the end.
     "q_mrr_popularity" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
+      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey")
       val pop = li.groupBy("l_partkey").agg(count(lit(1)).as("cnt"))
       val top20 = pop.orderBy(col("cnt").desc, col("l_partkey")).limit(20)
         .withColumn("rank_pop",
@@ -221,7 +219,7 @@ object Round5xQueries {
         .select("l_partkey", "rank_pop")
       val wC = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-      val lastOrd = t(s, dir, "orders")
+      val lastOrd = Tables(s, dir, "orders")
         .select("o_custkey", "o_orderkey", "o_orderdate")
         .withColumn("rn", row_number().over(wC))
         .filter(col("rn") === 1)

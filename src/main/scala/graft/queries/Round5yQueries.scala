@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.words
+import graft.Tables
 
 /** Round-5y batch: corpus statistics — the lexical health metrics a
   * training-data pipeline tracks per ingest batch.
@@ -29,16 +30,13 @@ import graft.functions.TextFunctions.words
   */
 object Round5yQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Vocabulary richness per source. Two combine aggregates: (source,
     // word) counts — the heavy one, partitioned on a high-cardinality
     // compound key — then a per-source rollup of exact longs.
     "q_hapax_ratio" -> ((s, dir) => {
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("source"), explode(words(col("text"))).as("word"))
         .groupBy("source", "word").agg(count(lit(1)).as("cnt"))
         .groupBy("source")
@@ -68,7 +66,7 @@ object Round5yQueries {
             size(array_distinct(slice(col("ws"),
               (i * 50L + 1L).cast("int"), lit(50)))).cast("long")))
         .otherwise(0L)
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("lang"), words(col("text")).as("ws"))
         .withColumn("k", k)
         .select(col("lang"), col("k"), typesSum.as("types_sum"))
@@ -91,10 +89,10 @@ object Round5yQueries {
     // Poisson scatter (function words); VMR >> 1 means topical
     // clumping. Ordered by (df DESC, word) — a total order.
     "q_term_burstiness" -> ((s, dir) => {
-      val perDoc = t(s, dir, "documents")
+      val perDoc = Tables(s, dir, "documents")
         .select(col("doc_id"), explode(words(col("text"))).as("word"))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
-      val nDocs = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
+      val nDocs = Tables(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       val stats = perDoc.groupBy("word")
         .agg(count(lit(1)).as("df"),
           sum(col("cnt")).as("s1"),
@@ -122,7 +120,7 @@ object Round5yQueries {
     // o_orderkey column itself is dense, so the subset is what gives
     // the detector real gaps to find.
     "q_sequence_gaps" -> ((s, dir) => {
-      val keys = t(s, dir, "orders")
+      val keys = Tables(s, dir, "orders")
         .filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey").as("k"),
           call_function("div", col("o_orderkey"), lit(4096L)).as("b"))
@@ -149,7 +147,7 @@ object Round5yQueries {
     // Zipf — and exactly integer, so no log-log regression enters the
     // oracle), plus the cumulative corpus share of the top ranks.
     "q_zipf_check" -> ((s, dir) => {
-      val counts = t(s, dir, "documents")
+      val counts = Tables(s, dir, "documents")
         .select(explode(words(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("freq"))
       val total = counts.agg(sum(col("freq")).as("n_total"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-5z batch: BI / operations analytics.
   *
@@ -25,9 +26,6 @@ import org.apache.spark.sql.functions._
   * so only patterns both engines implement identically are used.
   */
 object Round5zQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   /** Scale-safe global prefix sum over exactly-ranked rows: rank blocks
     * of 1024 cumulate internally (window PARTITIONED by block), block
@@ -74,7 +72,7 @@ object Round5zQueries {
     // RE2-safe (no lookaround): funnel completion v.*c.*p, signup-led
     // onboarding ^s, double error ee, repeat buyer p.*p.
     "q_session_funnel_regex" -> ((s, dir) => {
-      val seqs = t(s, dir, "events")
+      val seqs = Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
           letter.as("l"))
         .groupBy("user_id")
@@ -102,7 +100,7 @@ object Round5zQueries {
     "q_order_cycle_time" -> ((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy("epoch_day", "o_orderkey")
-      val gaps = t(s, dir, "orders")
+      val gaps = Tables(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
             .as("epoch_day"))
@@ -111,7 +109,7 @@ object Round5zQueries {
         .select(col("o_custkey"),
           (col("next_day") - col("epoch_day")).cast("long").as("gap"))
       gaps
-        .join(t(s, dir, "customer")
+        .join(Tables(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment")),
           col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
@@ -129,7 +127,7 @@ object Round5zQueries {
     // threshold is the INTEGER comparison 5·cum ≥ 4·total. One row:
     // population, total cents, n_top80, and the population share.
     "q_pareto_8020" -> ((s, dir) => {
-      val rev = t(s, dir, "orders")
+      val rev = Tables(s, dir, "orders")
         .groupBy("o_custkey")
         .agg(sum(floor(col("o_totalprice") * 100.0).cast("long"))
           .as("cents"))
@@ -160,7 +158,7 @@ object Round5zQueries {
       // rev feeds GlobalRank (quantile probe + rank plan) and the
       // corpus-total aggregate: retained so the lineitem aggregation
       // derives once
-      val rev = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val rev = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .groupBy("l_partkey")
         .agg(sum(floor(col("l_extendedprice") * 100.0).cast("long"))
           .as("cents")))
@@ -187,7 +185,7 @@ object Round5zQueries {
     // of long words (> 6 chars) — integer sums (chars, words, longs)
     // with two mirrored divisions.
     "q_word_len_profile" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("lang"),
           explode(graft.functions.TextFunctions.words(col("text")))
             .as("word"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6a batch: customer dynamics and curation audits.
   *
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Round6aQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Decile mobility: customers active in BOTH periods (pre/post
@@ -38,7 +36,7 @@ object Round6aQueries {
     // and rank the population twice.
     "q_decile_transition" -> ((s, dir) => {
       val cents = floor(col("o_totalprice") * 100.0).cast("long")
-      val both = t(s, dir, "orders")
+      val both = Tables(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderdate"), cents.as("cents"))
         .groupBy("o_custkey")
         .agg(sum(when(col("o_orderdate") < "1998-01-01", col("cents")))
@@ -68,7 +66,7 @@ object Round6aQueries {
     // bounded (cohort, age) domain — the per-cohort running LTV a
     // growth dashboard plots. Counts customers once per cohort.
     "q_ltv_cohort" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_custkey"),
           (year(to_date(col("o_orderdate"))) * 12 +
             month(to_date(col("o_orderdate"))) - 1).as("em"),
@@ -99,7 +97,7 @@ object Round6aQueries {
     // engines), order-line volume, mean quantity and mean line price
     // (cents-quantized mirrored divisions).
     "q_discount_bands" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(round(col("l_discount") * 100.0, 0).cast("int").as("band"),
           col("l_quantity"),
           floor(col("l_extendedprice") * 100.0).cast("long").as("cents"))
@@ -119,7 +117,7 @@ object Round6aQueries {
     // scraper boilerplate, one source is a site template.
     "q_template_detect" -> ((s, dir) => {
       val ws = graft.functions.TextFunctions.words(col("text"))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           array_join(slice(ws, 1, 5), " ").as("prefix"))
         .groupBy("prefix")
@@ -136,7 +134,7 @@ object Round6aQueries {
     // gaps between stages are the curation yield of each escalation.
     "q_dedup_funnel" -> ((s, dir) => {
       val norm = lower(regexp_replace(col("text"), "\\s+", " "))
-      val d = t(s, dir, "documents")
+      val d = Tables(s, dir, "documents")
       val words16 = explode(array_distinct(
         graft.functions.TextFunctions.words(col("text"))))
       val bits = d.select(col("doc_id"), words16.as("w"))

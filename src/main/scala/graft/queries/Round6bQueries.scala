@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6b batch: engagement and market-structure metrics.
   *
@@ -20,9 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Round6bQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def epochDay(c: org.apache.spark.sql.Column) =
     call_function("div", unix_micros(c), lit(86400000000L))
 
@@ -34,7 +32,7 @@ object Round6bQueries {
     // chain. Stickiness 1.0 = the same users every day; 1/7 = full
     // churn within the week.
     "q_dau_wau" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .select(col("user_id"), epochDay(col("ts")).as("day"))
         .withColumn("week", call_function("div", col("day"), lit(7L)))
       val dau = e.groupBy("week", "day")
@@ -57,7 +55,7 @@ object Round6bQueries {
     // Requires a full 7-day history window; the trailing window is
     // per-type over the bounded day domain.
     "q_anomaly_days" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .select(col("event_type"), epochDay(col("ts")).as("day"))
         .groupBy("event_type", "day").agg(count(lit(1)).as("vol"))
       val w = Window.partitionBy("event_type").orderBy("day")
@@ -78,7 +76,7 @@ object Round6bQueries {
     // bitwise. Days need not be consecutive — the regression is over
     // the observations' actual day coordinates.
     "q_rolling_slope" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
+      val daily = Tables(s, dir, "events")
         .select(col("event_type"), epochDay(col("ts")).as("day"))
         .groupBy("event_type", "day").agg(count(lit(1)).as("y"))
       val w = Window.partitionBy("event_type").orderBy("day")
@@ -104,12 +102,12 @@ object Round6bQueries {
     // computation is exact integer arithmetic until the single final
     // division. Also reports the top-supplier share (max/total).
     "q_hhi_supplier" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem")
+      val rev = Tables(s, dir, "lineitem")
         .select(col("l_suppkey"),
           floor(col("l_extendedprice") * 100.0).cast("long").as("cents"))
         .groupBy("l_suppkey").agg(sum("cents").as("cents"))
-      val sup = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
+      val sup = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+      val nat = Tables(s, dir, "nation").select("n_nationkey", "n_name")
       rev.join(sup, col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
         .groupBy("n_name")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6c batch: platform operations — the audits a data platform
   * runs about ITSELF.
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Round6cQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Shuffle-skew audit over candidate join keys: rows per key, the
@@ -33,7 +31,7 @@ object Round6cQueries {
     // cnt·n_keys > 10·total (exact longs). One row per candidate key.
     "q_skew_metrics" -> ((s, dir) => {
       def audit(keyCol: String): DataFrame = {
-        val counts = t(s, dir, "lineitem")
+        val counts = Tables(s, dir, "lineitem")
           .groupBy(col(keyCol)).agg(count(lit(1)).as("c"))
         val stats = counts.agg(count(lit(1)).as("n_keys"),
           sum(col("c")).as("total_rows"), max(col("c")).as("max_rows"))
@@ -58,7 +56,7 @@ object Round6cQueries {
     // the event timestamp's calendar month; both engines read the same
     // parquet micros so the calendar math mirrors.
     "q_seasonal_index" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"), month(col("ts")).as("mo"))
         .groupBy("event_type", "mo").agg(count(lit(1)).as("n"))
         .withColumn("type_total",
@@ -76,7 +74,7 @@ object Round6cQueries {
     // struct-ordered aggregates (engines disagree on struct
     // comparison corners).
     "q_cold_start_users" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("event_type"),
           unix_micros(col("ts")).as("us"))
       val firstTs = e.groupBy("user_id").agg(min("us").as("min_us"))
@@ -100,7 +98,7 @@ object Round6cQueries {
     // Ingest freshness: per-type newest event vs the global newest,
     // lag in whole minutes (integer microsecond arithmetic).
     "q_freshness_lag" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
         .select(col("event_type"), unix_micros(col("ts")).as("us"))
       val perType = e.groupBy("event_type").agg(max("us").as("max_us"))
       val global = e.agg(max("us").as("global_us"))
@@ -115,7 +113,7 @@ object Round6cQueries {
     // hour from epoch-microseconds modulo arithmetic (UTC, no session
     // timezone involvement on either engine).
     "q_hour_profile" -> ((s, dir) =>
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("event_type"),
           pmod(call_function("div", unix_micros(col("ts")),
             lit(3600000000L)), lit(24L)).as("hr"))

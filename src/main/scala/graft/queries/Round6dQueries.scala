@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Tables
 
 /** Round-6d batch: product/returns analytics and exact-arithmetic
   * embedding quality gates.
@@ -21,18 +22,15 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round6dQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Returns by brand: R-flag line share per p_brand (the product-
     // quality ranking a merchandiser reads first). Fact joins the
     // 2k-row part dim via broadcast; counts exact, one division.
     "q_return_rate_brand" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_returnflag"))
-        .join(broadcast(t(s, dir, "part")
+        .join(broadcast(Tables(s, dir, "part")
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
         .groupBy("p_brand")
@@ -47,7 +45,7 @@ object Round6dQueries {
     // lineitem pairs), histogrammed — parts with one supplier are the
     // single-point-of-failure list.
     "q_part_supplier_coverage" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select("l_partkey", "l_suppkey").distinct()
         .groupBy("l_partkey")
         .agg(count(lit(1)).as("k_suppliers"))
@@ -60,14 +58,14 @@ object Round6dQueries {
     // gap are mirrored per-row doubles (no cross-brand FP reduction —
     // the per-brand table IS the deliverable, like q_calibration_bins).
     "q_brand_mix_shift" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_orderkey"),
           floor(col("l_extendedprice") * 100.0).cast("long").as("cents"))
-      val withDate = li.join(t(s, dir, "orders")
+      val withDate = li.join(Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
       val byBrand = withDate
-        .join(broadcast(t(s, dir, "part")
+        .join(broadcast(Tables(s, dir, "part")
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
         .groupBy("p_brand")
@@ -93,7 +91,7 @@ object Round6dQueries {
     // activity bands (band_lo = 20·⌊n/20⌋), with population share —
     // the depth distribution a retention team watches shift left.
     "q_engagement_depth" -> ((s, dir) => {
-      val perUser = t(s, dir, "events")
+      val perUser = Tables(s, dir, "events")
         .groupBy("user_id").agg(count(lit(1)).as("n_events"))
       val banded = perUser.withColumn("band_lo",
         call_function("div", col("n_events"), lit(20L)) * 20L)
@@ -120,7 +118,7 @@ object Round6dQueries {
           val m = floor(x.cast("double") * 1000.0).cast("long")
           acc + m * m
         })
-      val base = t(s, dir, "embeddings")
+      val base = Tables(s, dir, "embeddings")
         .select(col("vec_id"), vExpr.as("v"))
       val d38 = DecimalType(38, 0)
       val stats = base.agg(count(lit(1)).as("n"),

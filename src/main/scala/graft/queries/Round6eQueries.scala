@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6e batch: SQL-surface completions.
   *
@@ -20,9 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Round6eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Correlated LATERAL: per-order line stats computed by a lateral
@@ -30,8 +28,8 @@ object Round6eQueries {
     // aggregate — the point of the query is that the LATERAL surface
     // exists and plans without a per-row subquery execution.
     "q_lateral_sql" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("v_orders")
-      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
+      Tables(s, dir, "orders").createOrReplaceTempView("v_orders")
+      Tables(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
       s.sql("""SELECT o.o_orderkey, o.o_totalprice, l.max_qty, l.n_lines
               FROM v_orders o, LATERAL (
                 SELECT MAX(l_quantity) AS max_qty,
@@ -46,12 +44,12 @@ object Round6eQueries {
     // as count(*) = count(condition), one combine aggregate per order
     // then a per-status rollup.
     "q_relational_division" -> ((s, dir) => {
-      val perOrder = t(s, dir, "lineitem")
+      val perOrder = Tables(s, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("n_lines"),
           sum(when(col("l_linestatus") === "F", 1L).otherwise(0L))
             .as("n_f"))
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"))
         .join(perOrder, col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderstatus")
@@ -70,13 +68,13 @@ object Round6eQueries {
     // threshold and a broadcast value-filter keeps the tied rows. No
     // window over the 25-value nation key anywhere.
     "q_topn_with_ties" -> ((s, dir) => {
-      val rev = t(s, dir, "orders")
+      val rev = Tables(s, dir, "orders")
         .groupBy("o_custkey")
         .agg(sum(floor(col("o_totalprice") * 100.0).cast("long"))
           .as("cents"))
-      val nat = t(s, dir, "customer")
+      val nat = Tables(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
-        .join(broadcast(t(s, dir, "nation")
+        .join(broadcast(Tables(s, dir, "nation")
           .select(col("n_nationkey"), col("n_name"))),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name"))
@@ -112,7 +110,7 @@ object Round6eQueries {
     // encoding, so ties within one second break on event_id by
     // definition.
     "q_attribution_models" -> ((s, dir) => {
-      val e = t(s, dir, "events")
+      val e = Tables(s, dir, "events")
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id").as("cu"),
           unix_micros(col("ts")).as("cus"), col("event_id").as("cid"))

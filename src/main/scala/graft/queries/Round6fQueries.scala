@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6f batch: pipeline self-evaluation — measuring the dedup and
   * similarity machinery against ground truth, plus corpus planning.
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   *    over the embedding space (composes similarity_knn_join)
   */
 object Round6fQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -46,7 +44,7 @@ object Round6fQueries {
       // ~45k-pair shingle-intersect space streaming through ONE task
       // (DebugJobs: a 1.0 s straggler job carrying nearly the query's
       // whole wall); round-robining ~300 rows is noise next to it
-      val docs = PipelineQueries.spread(s, t(s, dir, "documents")
+      val docs = PipelineQueries.spread(s, Tables(s, dir, "documents")
           .filter(col("doc_id") < sub))
         .select(col("doc_id"),
           call_function("graft_shingles", col("text")).as("sh"))
@@ -82,7 +80,7 @@ object Round6fQueries {
     // alpha token, per language — fertility drift flags languages the
     // tokenizer fragments.
     "q_tokenizer_fertility" -> ((s, dir) =>
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("lang"),
           size(graft.functions.TextFunctions.words(col("text")))
             .cast("long").as("n_words"),
@@ -107,7 +105,7 @@ object Round6fQueries {
     // min(10⁶, target·10⁶ div n_docs)) with the expected kept count —
     // auditable integer arithmetic end to end, like q_budget_alloc.
     "q_sampling_plan" -> ((s, dir) => {
-      val byLang = t(s, dir, "documents")
+      val byLang = Tables(s, dir, "documents")
         .groupBy("lang").agg(count(lit(1)).as("n_docs"))
       val tot = byLang.agg(sum("n_docs").as("n_total"),
         count(lit(1)).as("n_langs"))
@@ -132,7 +130,7 @@ object Round6fQueries {
     "q_knn_label_eval" -> ((s, dir) => {
       val knn = PipelineQueries.queries("similarity_knn_join")(s, dir)
         .select("probe_id", "neighbor_id")
-      val lab = t(s, dir, "embeddings")
+      val lab = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("label"))
       val votes = knn
         .join(lab, col("neighbor_id") === col("vec_id"))

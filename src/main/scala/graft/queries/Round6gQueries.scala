@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6g batch: distribution profiles — quick-read shape summaries
   * over the order book.
@@ -15,16 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object Round6gQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Lines-per-order histogram: exact counts, one mirrored share
     // division. The classic fan-out profile a join planner sanity-
     // checks against.
     "q_order_linecount_dist" -> ((s, dir) => {
-      val perOrder = t(s, dir, "lineitem")
+      val perOrder = Tables(s, dir, "lineitem")
         .groupBy("l_orderkey").agg(count(lit(1)).as("n_lines"))
       val tot = perOrder.agg(count(lit(1)).as("n_orders"))
       perOrder.groupBy("n_lines").agg(count(lit(1)).as("n"))
@@ -41,7 +39,7 @@ object Round6gQueries {
     "q_weekend_effect" -> ((s, dir) => {
       val d = datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
       val dow = pmod(d + 4, lit(7))
-      t(s, dir, "orders")
+      Tables(s, dir, "orders")
         .select(year(to_date(col("o_orderdate"))).as("yr"),
           (dow === 0 || dow === 6).as("is_weekend"),
           floor(col("o_totalprice") * 100.0).cast("long").as("cents"))
@@ -58,7 +56,7 @@ object Round6gQueries {
     "q_repeat_interval_bands" -> ((s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("o_custkey").orderBy("epoch_day", "o_orderkey")
-      val gaps = t(s, dir, "orders")
+      val gaps = Tables(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"),
           datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
             .as("epoch_day"))
@@ -82,7 +80,7 @@ object Round6gQueries {
     // Price positioning per brand: retail price min/max/spread in
     // cents (exact integers after FLOOR quantization).
     "q_price_spread_brand" -> ((s, dir) =>
-      t(s, dir, "part")
+      Tables(s, dir, "part")
         .select(col("p_brand"),
           floor(col("p_retailprice") * 100.0).cast("long").as("cents"))
         .groupBy("p_brand")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6h batch: logistics / fulfillment profiles over the order
   * book — the operational-latency views a supply-chain team reads.
@@ -19,9 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Round6hQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Order-to-ship latency bands. lineitem joins orders on the
@@ -29,9 +27,9 @@ object Round6hQueries {
     // from date arithmetic, then a 4-bucket histogram with share —
     // the fulfillment SLA chart.
     "q_ship_delay_bands" -> ((s, dir) => {
-      val delays = t(s, dir, "lineitem")
+      val delays = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), to_date(col("l_shipdate")).as("sd"))
-        .join(t(s, dir, "orders")
+        .join(Tables(s, dir, "orders")
           .select(col("o_orderkey"), to_date(col("o_orderdate")).as("od")),
           col("l_orderkey") === col("o_orderkey"))
         .select(datediff(col("sd"), col("od")).cast("long").as("delay"))
@@ -51,9 +49,9 @@ object Round6hQueries {
     // Latency sufficient statistics per order priority: exact integer
     // day sums, min/max, one avg division. Single join + 5-group agg.
     "q_priority_latency" -> ((s, dir) =>
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), to_date(col("l_shipdate")).as("sd"))
-        .join(t(s, dir, "orders")
+        .join(Tables(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             to_date(col("o_orderdate")).as("od")),
           col("l_orderkey") === col("o_orderkey"))
@@ -74,19 +72,19 @@ object Round6hQueries {
     // on their high-cardinality keys. Revenue quantized to exact cents
     // before the sum so the matrix hashes bit-identically.
     "q_nation_trade_flows" -> ((s, dir) => {
-      val nat = t(s, dir, "nation")
+      val nat = Tables(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"))
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"),
           floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
             * 100.0).cast("long").as("rev_cents"))
-      val supp = broadcast(t(s, dir, "supplier")
+      val supp = broadcast(Tables(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"))
         .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-      val custSide = t(s, dir, "orders")
+      val custSide = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"))
-        .join(t(s, dir, "customer")
+        .join(Tables(s, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey")),
           col("o_custkey") === col("c_custkey"))
         .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
@@ -103,7 +101,7 @@ object Round6hQueries {
     // query is reproducible, no wall clock). Buckets are the working-
     // capital review bands.
     "q_open_order_aging" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_orderstatus"), to_date(col("o_orderdate")).as("od"))
       val anchor = broadcast(o.agg(max("od").as("anchor")))
       o.filter(col("o_orderstatus") === "O")

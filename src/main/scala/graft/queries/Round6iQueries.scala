@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6i batch: second-order graph structure over the part
   * co-purchase graph (edges from [[Round5gQueries.coEdges]]).
@@ -21,9 +22,6 @@ import org.apache.spark.sql.functions._
   * double is a final division mirrored in the oracle.
   */
 object Round6iQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -54,7 +52,6 @@ object Round6iQueries {
           struct(col("a").as("src"), col("b").as("dst")))
           .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("o"))
         .select(col("o.src").as("src"), col("o.dst").as("dst"))
-      graft.expressions.LongArrayExpressions.register(s)
       val adjOut = oriented.groupBy(col("src").as("u"))
         .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       // one explode per triangle VERTEX: the apex list is concatenated
@@ -182,7 +179,7 @@ object Round6iQueries {
       // e feeds the node census and the intra-brand edge count —
       // retained so the lineitem self-join + distinct runs once
       val e = graft.CacheScope.retain(Round5gQueries.coEdges(s, dir))
-      val brand = broadcast(t(s, dir, "part")
+      val brand = broadcast(Tables(s, dir, "part")
         .select(col("p_partkey"), col("p_brand")))
       val nodes = e.select(col("a").as("v"))
         .unionAll(e.select(col("b").as("v"))).distinct()

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-6j batch: corpus statistics II — diversity, vocabulary growth,
   * and cross-language structure over the documents table.
@@ -23,11 +24,8 @@ import org.apache.spark.sql.functions._
   */
 object Round6jQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def toks(s: SparkSession, dir: String): DataFrame =
-    PipelineQueries.spread(s, t(s, dir, "documents"))
+    PipelineQueries.spread(s, Tables(s, dir, "documents"))
       .select(col("doc_id"), col("lang"),
         split(col("text"), " ").as("ts"))
 

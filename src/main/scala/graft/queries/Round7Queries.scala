@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-7 batch: training-pipeline planning + behavioral mining
   * operators that round out the curriculum/sharding/diagnostic surface.
@@ -30,12 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Round7Queries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   private def bandKeys(sh: Column): Column =
     call_function("graft_minhash_bands", sh)
 
@@ -50,7 +45,7 @@ object Round7Queries {
     // engines instead of NTILE so no engine-specific remainder
     // distribution can diverge.
     "curriculum_phase" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
       val ranked = graft.operators.GlobalRank.withGroupRank(
         docs, Seq("lang"), col("n_chars"), col("doc_id"), "rnk")
       val sizes = docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
@@ -70,7 +65,7 @@ object Round7Queries {
     // OOV occurrence rate of a k-term vocab, which is what tokenizer
     // truncation planning actually needs.
     "q_token_mass_coverage" -> ((s, dir) => {
-      val tc = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val tc = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("c"))
       val ranked = graft.operators.GlobalRank.withRank(
@@ -96,7 +91,7 @@ object Round7Queries {
     // bucket) shows up here as cand_pairs exploding, at census cost
     // (two combine aggregates), not at join cost.
     "dedup_lsh_cost_audit" -> ((s, dir) => {
-      val buckets = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val buckets = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
         .select(posexplode(bandKeys(col("sh"))).as(Seq("band_idx", "band_key")))
         .groupBy("band_idx", "band_key").agg(count(lit(1)).as("c"))
@@ -119,7 +114,7 @@ object Round7Queries {
       val byTime = Window.partitionBy("user_id")
         .orderBy(col("ts"), col("event_id"))
       val gapUs = 30L * 60 * 1000 * 1000
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("prev_us", lag(col("us"), 1).over(byTime))
         .withColumn("is_new",
@@ -146,7 +141,7 @@ object Round7Queries {
     // the ranking) — the shard plan a multimodal export job feeds to
     // its writers. skew_x16 = 16*bytes/corpus reads 1.0 = perfect.
     "multimodal_shard_manifest" -> ((s, dir) => {
-      val sized = t(s, dir, "documents")
+      val sized = Tables(s, dir, "documents")
         .select(col("doc_id"), octet_length(col("text")).as("n_bytes"))
       val ranked = graft.operators.GlobalRank.withRank(
         sized, -col("n_bytes"), col("doc_id"), "rnk")
@@ -176,7 +171,7 @@ object Round7Queries {
       val byTime = Window.partitionBy("user_id")
         .orderBy(col("ts"), col("event_id"))
       val dormantUs = 2L * 24 * 3600 * 1000 * 1000
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("prev_us", lag(col("us"), 1).over(byTime))
         .filter(col("prev_us").isNotNull &&

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-7 second batch: corpus-lifecycle diagnostics — the operations
   * an ingest/dedup/decontam pipeline runs BETWEEN snapshots rather
@@ -33,12 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Round7bQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Incremental-ingest dedup: docs with doc_id % 5 == 0 are the
@@ -51,7 +46,7 @@ object Round7bQueries {
     // corpus's hash set is the big side; the shuffle is on the
     // high-cardinality hash, so it scales and cannot skew.
     "dedup_incremental" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
       val old = d.filter(pmod(col("doc_id"), lit(5)) =!= 0)
         .select("h").distinct()
@@ -82,7 +77,7 @@ object Round7bQueries {
     // the classic boilerplate signature; the cross informs whether a
     // length floor and dedup are redundant filters or complementary.
     "quality_decile_dup" -> ((s, dir) => {
-      val base = t(s, dir, "documents")
+      val base = Tables(s, dir, "documents")
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("tok"),
           md5(col("text")).as("h"))
@@ -111,7 +106,7 @@ object Round7bQueries {
     // matching grams (broadcast bench-gram list), plus one corpus
     // token-count scan.
     "decontam_token_mass" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
       val grams = PipelineQueries.spread(s, docs)
         .select(col("doc_id"),
           explode(call_function("graft_shingles5", col("text"))).as("gram"))
@@ -144,7 +139,7 @@ object Round7bQueries {
     // The window-hash partition is high-cardinality; the per-language
     // rollup is 5 rows.
     "dedup_span_coverage" -> ((s, dir) => {
-      val toks = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val toks = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 8)
       val wins = toks.select(col("doc_id"), col("lang"),
@@ -169,7 +164,7 @@ object Round7bQueries {
     // the ordered window over it is a driver-scale frame, not a data
     // window.
     "vocab_marginal_gain" -> ((s, dir) => {
-      val first = t(s, dir, "documents")
+      val first = Tables(s, dir, "documents")
         .select(col("source"), explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(min("source").as("first_src"))
       val per = first.groupBy("first_src")
@@ -192,7 +187,7 @@ object Round7bQueries {
     // n_retained + n_resurrected is checkable row by row. All windows
     // partition by user_id — high-cardinality, scales.
     "q_growth_accounting" -> ((s, dir) => {
-      val uw = t(s, dir, "events")
+      val uw = Tables(s, dir, "events")
         .select(col("user_id"),
           to_date(date_trunc("week", col("ts"))).as("week"))
         .distinct()

@@ -1,10 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.Tables
+import graft.queries.QueryKit.{md5Head, md5HeadSql}
 
 /** Round-7 third batch: sampling/routing plans and similarity audits.
   *
@@ -31,27 +33,6 @@ import graft.functions.VectorFunctions._
   */
 object Round7cQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  /** First 8 hex chars of md5(prefix || doc_id) as an exact long in
-    * [0, 2^32) — the deterministic per-doc coin (same idiom as
-    * Round5bQueries.md5Head).
-    */
-  private def md5Head(prefix: String): Column =
-    conv(substring(md5(concat(lit(prefix), col("doc_id").cast("string"))),
-      1, 8), 16, 10).cast("long")
-
-  private def md5HeadSql(prefix: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(
-       |        substring(md5('$prefix' || CAST(doc_id AS VARCHAR)), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Importance sampling by quality band: band 4 (longest docs) keeps
@@ -61,9 +42,9 @@ object Round7cQueries {
     // 4-row rollup; the coin is the md5 route every sampling op here
     // uses (reproducible across runs AND across engines).
     "sample_importance" -> ((s, dir) => {
-      val coin = md5Head("imp")
+      val coin = md5Head(concat(lit("imp"), col("doc_id").cast("string")))
       val two32 = 4294967296L
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .withColumn("tok", size(split(col("text"), " ")).cast("long"))
         .withColumn("band",
           when(col("tok") >= 64, 4).when(col("tok") >= 32, 3)
@@ -88,7 +69,7 @@ object Round7cQueries {
     // n²/B and stays a choice, not a consequence. Band boundaries are
     // exact because both engines run the identical fold + divide.
     "q_emb_pair_distance_hist" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
         .withColumn("nrm", normD(col("embedding")))
         .withColumn("g", pmod(col("vec_id"), lit(16L)))
@@ -115,7 +96,7 @@ object Round7cQueries {
     "multimodal_stft_plan" -> ((s, dir) => {
       val win = 400L
       val hop = 160L
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           (col("n_chars") * 100L).as("samples"))
         .withColumn("n_frames",
@@ -139,7 +120,7 @@ object Round7cQueries {
     // division at the end. Work scales with candidate-pair shingle
     // mass (LSH-bounded), never n².
     "q_shingle_idf_jaccard" -> ((s, dir) => {
-      val docs = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val docs = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
       val sg = graft.CacheScope.retain(docs
         .select(col("doc_id"), explode(col("sh")).as("g")))
@@ -184,7 +165,7 @@ object Round7cQueries {
     // dedup policy between corpus versions).
     "dedup_keep_policy_compare" -> ((s, dir) => {
       val byHash = Window.partitionBy("h")
-      val d = t(s, dir, "documents")
+      val d = Tables(s, dir, "documents")
         .select(col("doc_id"), md5(col("text")).as("h"),
           size(split(col("text"), " ")).cast("long").as("tok"))
         .withColumn("n_members", count(lit(1)).over(byHash))
@@ -216,7 +197,7 @@ object Round7cQueries {
         array(lit("jpeg"), lit("png"), lit("wav"), lit("mp4")),
         (pmod(ascii(col("text")), lit(4)) + 1).cast("int"))
       val bytes = octet_length(col("text"))
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .select(codec.as("codec"), bytes.as("n_bytes"))
         .withColumn("size_class",
           when(col("n_bytes") < 256, "s").when(col("n_bytes") < 1024, "m")
@@ -236,7 +217,7 @@ object Round7cQueries {
       s"""WITH d AS (
          |  SELECT doc_id,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-         |    ${md5HeadSql("imp")} AS coin
+         |    ${md5HeadSql("'imp' || CAST(doc_id AS VARCHAR)")} AS coin
          |  FROM documents
          |), banded AS (
          |  SELECT tok, coin,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-7 fourth batch: sequential/temporal analytics — interval
   * algebra, streak mining, order statistics over time.
@@ -29,12 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Round7dQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Union length of overlapping 5-minute event intervals per user:
@@ -47,7 +42,7 @@ object Round7dQueries {
       val winUs = 5L * 60 * 1000 * 1000
       val byStart = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
-      val iv = t(s, dir, "events")
+      val iv = Tables(s, dir, "events")
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("e", col("us") + winUs)
         .withColumn("prev_max",
@@ -72,7 +67,7 @@ object Round7dQueries {
     // the ordered windows ride a frame whose size the data volume
     // cannot grow — only the initial daily aggregate scales.
     "q_runs_test" -> ((s, dir) => {
-      val daily = t(s, dir, "orders")
+      val daily = Tables(s, dir, "orders")
         .groupBy(col("o_orderdate").cast("date").as("day"))
         .agg(sum(floor(col("o_totalprice") * 100.0).cast("long"))
           .as("cents"))
@@ -119,7 +114,7 @@ object Round7dQueries {
     "q_max_drawdown" -> ((s, dir) => {
       val byShip = Window.partitionBy("l_partkey")
         .orderBy(col("day"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
           col("l_shipdate").cast("date").as("day"),
           floor(col("l_extendedprice") * 100.0).cast("long").as("cents"))
@@ -140,7 +135,7 @@ object Round7dQueries {
     // partition by user_id. Top-20 by (streak, user).
     "q_streak_days" -> ((s, dir) => {
       val byDay = Window.partitionBy("user_id").orderBy("day")
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("day"))
         .distinct()
         .withColumn("anchor",
@@ -159,12 +154,12 @@ object Round7dQueries {
     // by |rank delta|. The weekly brand table is catalog x calendar
     // bounded, but the rank machinery scales anyway.
     "q_rank_movers" -> ((s, dir) => {
-      val part = broadcast(t(s, dir, "part")
+      val part = broadcast(Tables(s, dir, "part")
         .select(col("p_partkey"), col("p_brand")))
       // weekly feeds the group-rank machinery (quantile probe + rank
       // plan) AND both sides of the adjacent-week self-join: retained
       // so the lineitem join + aggregate derives once
-      val weekly = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val weekly = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .join(part, col("l_partkey") === col("p_partkey"))
         .groupBy(to_date(date_trunc("week", col("l_shipdate"))).as("week"),
           col("p_brand"))
@@ -192,7 +187,7 @@ object Round7dQueries {
     // cardinality); the weekly rollup is calendar-bounded.
     "q_new_repeat_revenue" -> ((s, dir) => {
       val byCust = Window.partitionBy("o_custkey")
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
         .select(col("o_custkey"),
           col("o_orderdate").cast("date").as("day"),
           floor(col("o_totalprice") * 100.0).cast("long").as("cents"))

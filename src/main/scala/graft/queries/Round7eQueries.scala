@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.Tables
 
 /** Round-7 fifth batch: optimizer-stats and matching operators.
   *
@@ -31,12 +32,6 @@ import graft.functions.VectorFunctions._
   */
 object Round7eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Equi-depth (equal-height) histogram of line price in cents:
@@ -54,7 +49,7 @@ object Round7eQueries {
       // group, so without it the approxQuantile pass and the bucket
       // projection run on a single task.
       val li = graft.CacheScope.retain(
-        PipelineQueries.spread(s, t(s, dir, "lineitem"))
+        PipelineQueries.spread(s, Tables(s, dir, "lineitem"))
         .select((col("l_orderkey") * 10 + col("l_linenumber")).as("uid"),
           floor(col("l_extendedprice") * 100.0).cast("long").as("cents")))
       val ranked = graft.operators.GlobalRank.withRank(
@@ -85,7 +80,7 @@ object Round7eQueries {
     // yields 0, and an EMPTY input still yields NULL — both exactly the
     // oracle's SUM(CASE...). Key columns only, so min/max stay BIGINT.
     "q_stats_collect" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
       def colStats(c: String): DataFrame =
         li.select(col(c)).groupBy(c).agg(count(lit(1)).as("cnt"))
           .agg(
@@ -109,7 +104,7 @@ object Round7eQueries {
     // rows. The output is the high-precision alignment seed set —
     // asymmetric matches are where near-dup false positives live.
     "q_mutual_best_match" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
         .withColumn("nrm", normD(col("embedding")))
         .withColumn("g", pmod(col("vec_id"), lit(16L)))
@@ -140,9 +135,9 @@ object Round7eQueries {
     // contributes its cents div 2^62 ~ 0 — the same answer the
     // untruncated series would give.
     "q_decay_weighted_revenue" -> ((s, dir) => {
-      val part = broadcast(t(s, dir, "part")
+      val part = broadcast(Tables(s, dir, "part")
         .select(col("p_partkey"), col("p_brand")))
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_partkey"),
           col("l_shipdate").cast("date").as("day"),
           floor(col("l_extendedprice") * 100.0).cast("long").as("cents"))
@@ -167,7 +162,7 @@ object Round7eQueries {
     // Jaccard). Prefix and suffix reduce to md5 keys, so the join
     // moves 32-byte hashes, never token arrays.
     "dedup_affix_overlap" -> ((s, dir) => {
-      val toks = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val toks = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 3)
       val affixed = toks.select(col("doc_id"),
@@ -190,7 +185,7 @@ object Round7eQueries {
     "q_funnel_latency" -> ((s, dir) => {
       // ev feeds the three per-step filters: retained so the events
       // scan + timestamp projection runs once
-      val ev = graft.CacheScope.retain(t(s, dir, "events")
+      val ev = graft.CacheScope.retain(Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us")))
       val v = ev.filter(col("event_type") === "view")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-7 sixth batch: corpus provenance and pipeline self-evaluation.
   *
@@ -24,12 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Round7fQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Per-source syndication rate: a doc is syndicated when its exact
@@ -37,7 +32,7 @@ object Round7fQueries {
     // source-cardinality via one hash-keyed aggregate, joined back on
     // the same hash partitioning.
     "dedup_syndication" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
       val cl = d.groupBy("h")
         .agg(count_distinct(col("source")).as("ns"))
@@ -56,7 +51,7 @@ object Round7fQueries {
     // + per-doc aggregate (the explode is the corpus CPU pass `spread`
     // parallelizes).
     "quality_compress_proxy" -> ((s, dir) => {
-      val g = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val g = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .filter(length(col("text")) >= 4)
         .select(col("doc_id"),
           explode(expr("transform(sequence(1, length(text) - 3), " +
@@ -79,7 +74,7 @@ object Round7fQueries {
     // whole audit is cheap enough to run BEFORE choosing the 100 TB
     // blocking key.
     "q_blocking_quality" -> ((s, dir) => {
-      val docs = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val docs = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
       val keys = graft.CacheScope.retain(
         PipelineQueries.simhashed(s, dir)
@@ -125,7 +120,7 @@ object Round7fQueries {
     // join consumes; everything reduces in a single user-keyed
     // aggregate.
     "q_user_feature_vector" -> ((s, dir) => {
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us"), to_date(col("ts")).as("day"))
         .groupBy("user_id")
@@ -152,7 +147,7 @@ object Round7fQueries {
     // length. Two aggregates (corpus scan + hash-cluster scan) joined
     // on nothing — a bounded, broadcastable summary.
     "corpus_summary_card" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
+      val d = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"),
           col("n_chars"), md5(col("text")).as("h"),
           size(split(col("text"), " ")).cast("long").as("tok"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-7 seventh batch: sequence mining, LSH tuning, demand classes,
   * concurrency.
@@ -23,12 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Round7gQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Within-3 skip-gram sequence motifs: (type_t, type_{t+k}) for
@@ -39,7 +34,7 @@ object Round7gQueries {
     // TakeOrdered, not a global sort.
     "q_skipgram_sequences" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val withLeads = t(s, dir, "events")
+      val withLeads = Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type").as("a"))
         .withColumn("n1", lead(col("a"), 1).over(w))
@@ -62,7 +57,7 @@ object Round7gQueries {
     // more candidate pairs; this prices the trade.
     "dedup_band_tuning_curve" -> ((s, dir) => {
       val sigs = graft.CacheScope.retain(
-        PipelineQueries.spread(s, t(s, dir, "documents"))
+        PipelineQueries.spread(s, Tables(s, dir, "documents"))
           .withColumn("sh", call_function("graft_shingles", col("text")))
           .select(col("doc_id"),
             call_function("graft_minhash_sig", col("sh")).as("sig")))
@@ -93,7 +88,7 @@ object Round7gQueries {
     // BIGINT comparison, so no sqrt and no FP can flip a class.
     // Output is the per-class census with revenue share.
     "q_xyz_variability" -> ((s, dir) => {
-      val weekly = t(s, dir, "lineitem")
+      val weekly = Tables(s, dir, "lineitem")
         .groupBy(col("l_partkey"),
           to_date(date_trunc("week", col("l_shipdate"))).as("week"))
         .agg(sum(col("l_quantity").cast("long")).as("q"))
@@ -124,7 +119,7 @@ object Round7gQueries {
     // user's activity" distribution.
     "q_peak_concurrency" -> ((s, dir) => {
       val winUs = 5L * 60 * 1000 * 1000
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
           col("event_id"))
       val points = ev.select(col("user_id"), col("us").as("t"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-8 first batch: the two depth asks from the r7 verdict.
   *
@@ -40,12 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object Round8aQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   private val S = "|"
   private val S2 = "||"
 
@@ -69,7 +64,7 @@ object Round8aQueries {
       .select(col("w"), charToks(col("w")).as("s"), col("freq"))
 
   private[queries] def docWords(s: SparkSession, dir: String): DataFrame =
-    PipelineQueries.spread(s, t(s, dir, "documents"))
+    PipelineQueries.spread(s, Tables(s, dir, "documents"))
       .select(explode(split(col("text"), " ")).as("w"))
 
   /** One BPE training iteration: (argmax-merge 1-row frame (l,r,cnt),
@@ -170,7 +165,7 @@ object Round8aQueries {
     // label propagation's per-round cost is |V| and this one's is |E|.
     "dedup_cc_star" -> ((s, dir) => {
       // near-dup edges: identical construction to dedup_cc_labels
-      val docs = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val docs = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .withColumn("sh", call_function("graft_shingles", col("text")))
       val bands = docs
         .select(col("doc_id"),
@@ -329,7 +324,7 @@ object Round8aQueries {
       // child side is a no-op at the fixed point but keeps the answer
       // correct even if the 20-round cap ever bites.
       val stars = e.groupBy(col("v").as("doc_id")).agg(min(col("u")).as("root"))
-      t(s, dir, "documents").select(col("doc_id"))
+      Tables(s, dir, "documents").select(col("doc_id"))
         .join(stars, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("root"), col("doc_id")).as("cluster_id"))

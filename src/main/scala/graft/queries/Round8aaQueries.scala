@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-8 twenty-seventh batch: physical-encoding planners — the
   * columnar-storage decisions (dictionary, bloom, RLE) priced from
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   *    partition-local lag plus one run per partition head.
   */
 object Round8aaQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -55,20 +53,20 @@ object Round8aaQueries {
             (col("raw_bytes").cast("double") / col("dict_bytes"))
               .as("compression_ratio"))
       }
-      audit(t(s, dir, "lineitem"), "l_returnflag", "lineitem.l_returnflag")
-        .unionByName(audit(t(s, dir, "lineitem"), "l_linestatus",
+      audit(Tables(s, dir, "lineitem"), "l_returnflag", "lineitem.l_returnflag")
+        .unionByName(audit(Tables(s, dir, "lineitem"), "l_linestatus",
           "lineitem.l_linestatus"))
-        .unionByName(audit(t(s, dir, "orders"), "o_orderpriority",
+        .unionByName(audit(Tables(s, dir, "orders"), "o_orderpriority",
           "orders.o_orderpriority"))
-        .unionByName(audit(t(s, dir, "orders"), "o_orderstatus",
+        .unionByName(audit(Tables(s, dir, "orders"), "o_orderstatus",
           "orders.o_orderstatus"))
-        .unionByName(audit(t(s, dir, "customer"), "c_mktsegment",
+        .unionByName(audit(Tables(s, dir, "customer"), "c_mktsegment",
           "customer.c_mktsegment"))
         .orderBy("column_name")
     }),
 
     "q_bloom_size_plan" -> ((s, dir) => {
-      val li = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val li = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey"))
       def keyNdv(k: String): DataFrame = li
         .agg(countDistinct(col(k)).as("ndv"))
@@ -94,7 +92,7 @@ object Round8aaQueries {
     }),
 
     "q_rle_runs" -> ((s, dir) => {
-      val ev = graft.CacheScope.retain(t(s, dir, "events")
+      val ev = graft.CacheScope.retain(Tables(s, dir, "events")
         .select("event_id", "user_id", "event_type"))
       // arrival order, block-decomposed: within-block changes via a
       // 1024-row-bucket window, plus block-boundary changes from the

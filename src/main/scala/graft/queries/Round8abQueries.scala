@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{dec, md5Head, md5HeadSql}
 
 /** Round-8 twenty-eighth batch: estimation-quality audits — the three
   * places a cost-based optimizer's guesses meet reality.
@@ -28,24 +29,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round8abQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def md5Head(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_selectivity_independence" -> ((s, dir) => {
-      val li = graft.CacheScope.retain(t(s, dir, "lineitem").select(
+      val li = graft.CacheScope.retain(Tables(s, dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice",
         "l_discount", "l_tax"))
       def pair(name: String, a: Column, b: Column): DataFrame = li
@@ -77,7 +64,7 @@ object Round8abQueries {
     }),
 
     "q_histogram_selectivity" -> ((s, dir) => {
-      val li = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val li = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .select(col("l_extendedprice").as("x")))
       val b = broadcast(li.agg(min("x").as("lo"), max("x").as("hi"))
         .select(col("lo"), ((col("hi") - col("lo")) / lit(10.0))
@@ -120,7 +107,7 @@ object Round8abQueries {
     }),
 
     "q_sample_aqp_eval" -> ((s, dir) => {
-      val li = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val li = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice"),
           md5Head(concat(lit("aqp:"), col("l_orderkey"), lit(":"),
             col("l_linenumber"), lit(":"), col("l_partkey"), lit(":"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-8 twenty-ninth batch: queueing-theory capacity planning over
   * the event stream — what a streaming-ingest operator computes before
@@ -26,14 +27,11 @@ import org.apache.spark.sql.functions._
   */
 object Round8acQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_backlog_lindley" -> ((s, dir) => {
-      val t0 = broadcast(t(s, dir, "events").agg(min("ts").as("t0")))
-      val arr = t(s, dir, "events").crossJoin(t0)
+      val t0 = broadcast(Tables(s, dir, "events").agg(min("ts").as("t0")))
+      val arr = Tables(s, dir, "events").crossJoin(t0)
         // integer `div`, not `/`+cast: Spark casts double->long by
         // truncation but DuckDB CAST rounds — div avoids the divergence
         .select(expr("(unix_micros(ts) - unix_micros(t0)) div 60000000")
@@ -80,7 +78,7 @@ object Round8acQueries {
     }),
 
     "q_erlang_b" -> ((s, dir) => {
-      val span = broadcast(t(s, dir, "events")
+      val span = broadcast(Tables(s, dir, "events")
         .agg(count(lit(1)).as("n"), min("ts").as("t0"),
           max("ts").as("t1"))
         .select(col("n"),
@@ -107,7 +105,7 @@ object Round8acQueries {
     }),
 
     "q_autoscale_plan" -> ((s, dir) => {
-      t(s, dir, "events")
+      Tables(s, dir, "events")
         .select(hour(col("ts")).as("h"), to_date(col("ts")).as("d"))
         .groupBy("h")
         .agg(count(lit(1)).as("n_events"),

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-8 thirtieth batch: fraud / operational-risk audits — the
   * anomaly screens a payments-shaped warehouse runs nightly.
@@ -26,15 +27,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round8adQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_duplicate_payment" -> ((s, dir) => {
-      val o = graft.CacheScope.retain(t(s, dir, "orders")
+      val o = graft.CacheScope.retain(Tables(s, dir, "orders")
         .select(col("o_custkey").as("ck"), col("o_totalprice").as("amt"),
           col("o_orderkey").as("ok"), col("o_orderdate").as("d")))
       val pairs = o.as("a").join(o.as("b"),
@@ -60,7 +56,7 @@ object Round8adQueries {
     }),
 
     "q_round_amount_bias" -> ((s, dir) => {
-      t(s, dir, "lineitem")
+      Tables(s, dir, "lineitem")
         .select(col("l_returnflag"),
           (col("l_extendedprice").cast(dec) * 100).cast("long")
             .as("cents"))
@@ -80,7 +76,7 @@ object Round8adQueries {
     }),
 
     "q_velocity_flags" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .select(col("user_id"),
           expr("unix_micros(ts) div 1000000").as("sec"))
       val w = Window.partitionBy("user_id").orderBy("sec")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-8 second batch: the tokenizer-evaluation surface composing the
   * trained BPE loop (Round8aQueries.bpeTrain).
@@ -27,12 +28,6 @@ object Round8bQueries {
 
   import Round8aQueries.{bpeTrain, bpeVocab0, toks, BpeK}
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Fertility by language under the corpus-trained merges: tokens per
@@ -40,7 +35,7 @@ object Round8bQueries {
     // trained token count; the per-(lang, word) table joins it broadcast
     // (the dict is vocab-sized) and rolls up integer sufficient stats.
     "bpe_fertility_by_lang" -> ((s, dir) => {
-      val words = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val words = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("lang"), explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 1)
       val (_, dictK) = bpeTrain(bpeVocab0(words.select("w")), BpeK)
@@ -80,7 +75,7 @@ object Round8bQueries {
     // statistics, and a vocab budget should not be spent on it.
     "bpe_merge_stability" -> ((s, dir) => {
       def half(lower: Boolean): DataFrame = {
-        val d = PipelineQueries.spread(s, t(s, dir, "documents"))
+        val d = PipelineQueries.spread(s, Tables(s, dir, "documents"))
           .withColumn("h", substring(md5(col("doc_id").cast("string")), 1, 1))
         val f = if (lower) d.filter(col("h") < "8") else d.filter(col("h") >= "8")
         f.select(explode(split(col("text"), " ")).as("w"))

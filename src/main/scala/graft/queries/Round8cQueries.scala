@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.functions.VectorFunctions.{dotD, sqDistD}
 
 /** Round-8 third batch: embedding-pipeline depth — the composed ANN
   * production shape, semantic decontamination, and clustering quality.
@@ -28,17 +30,6 @@ import org.apache.spark.sql.functions._
   * per-key windows over cell-sized partitions.
   */
 object Round8cQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  private def dotD(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotD(a, b)
-  private def dist2(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.sqDistD(a, b)
 
   /** Top-2 IVF cells for the vec_id=0 probe: label-cell centroids from
     * the explicit vec_id-ordered fold (bitwise-stable mean), ranked by
@@ -75,7 +66,7 @@ object Round8cQueries {
     // broadcast.
     "ann_ivfpq_topk" -> ((s, dir) => {
       val m = 8; val subDim = 8; val k = 16
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probe = broadcast(e.filter(col("vec_id") === 0)
         .select(col("embedding").as("pe")))
       val cells = topCells(e, probe)
@@ -92,14 +83,14 @@ object Round8cQueries {
       val byDist = Window.partitionBy("vec_id", "sub")
         .orderBy("d2", "cid")
       val codes = memberSubs.join(anchors, "sub")
-        .withColumn("d2", dist2(col("subv"), col("av")))
+        .withColumn("d2", sqDistD(col("subv"), col("av")))
         .withColumn("rn", row_number().over(byDist))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("sub"), col("cid").as("code"))
       val probeSubs = broadcast(e.filter(col("vec_id") === 0)
         .select(posexplode(subArr).as(Seq("sub", "pv"))))
       val adc = broadcast(anchors.join(probeSubs, "sub")
-        .select(col("sub"), col("cid"), dist2(col("pv"), col("av")).as("pd")))
+        .select(col("sub"), col("cid"), sqDistD(col("pv"), col("av")).as("pd")))
       codes.join(adc,
           codes("sub") === adc("sub") && col("code") === col("cid"))
         .groupBy("vec_id")
@@ -121,7 +112,7 @@ object Round8cQueries {
     // are bitwise equal). Threshold probed in DuckDB: 20 hits at
     // sf0.01 (66 at 0.30, 2 at 0.40).
     "decontam_embedding" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val bench = broadcast(e.filter(col("vec_id") < 16)
         .select(col("embedding").as("be"),
           sqrt(dotD(col("embedding"), col("embedding"))).as("nb")))
@@ -147,7 +138,7 @@ object Round8cQueries {
     // and report the majority-label share per centroid. Ties break to
     // the smaller label — deterministic in both engines.
     "q_emb_centroid_purity" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val cents = broadcast(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("ce"),

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
 
 /** Round-8 fourth batch: language-model data filtering — the CCNet-style
   * perplexity gate, distribution drift between sources, and MOSS-style
@@ -42,18 +44,9 @@ import org.apache.spark.sql.functions._
   */
 object Round8dQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.TextExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
   /** Left fold of `field` over the (key-)sorted struct list — the
     * written-down summation order both engines share.
     */
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Per-source NLL distribution under the corpus unigram LM. The
@@ -61,7 +54,7 @@ object Round8dQueries {
     // picks exact ranks (ceil(n/2), ceil(9n/10)) instead of averaging,
     // so no cross-doc double accumulation exists at all.
     "q_unigram_nll" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
       val toks = docs.select(col("doc_id"), col("source"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
       val cnts0 = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
@@ -104,7 +97,7 @@ object Round8dQueries {
     // the argmax-contribution token. The 31-term KL sum folds in token
     // order.
     "q_kl_sources" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
+      val toks = Tables(s, dir, "documents")
         .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       val corpus = broadcast(toks.groupBy("tok")
         .agg(count(lit(1)).as("cnt_c")))
@@ -141,7 +134,7 @@ object Round8dQueries {
     // fingerprints, df-capped candidate pairs within each source. All
     // outputs integer counts plus one mirrored division.
     "q_winnowing_fingerprints" -> ((s, dir) => {
-      val docs = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val docs = PipelineQueries.spread(s, Tables(s, dir, "documents"))
       val ws = split(col("text"), " ")
       // the when() guard: docs under 3 tokens produce NO shingles (a
       // start>stop Spark sequence counts DOWN, indexing off the array —

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5HeadSql, sortedFold}
 
 /** Round-8 fifth batch: the sketch/linear-algebra layer an optimizer
   * and an embedding pipeline sit on.
@@ -40,21 +42,13 @@ import org.apache.spark.sql.functions._
   */
 object Round8eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  /** Exact left fold of `field` over the key-sorted struct list. */
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // F2 sketch audit. All integer: key counts, bucket counts, squared
     // sums; the two final ratios are mirrored divisions.
     "q_sketch_join_size" -> ((s, dir) => {
       val keyc = graft.CacheScope.retain(
-        t(s, dir, "lineitem").groupBy(col("l_partkey").as("k"))
+        Tables(s, dir, "lineitem").groupBy(col("l_partkey").as("k"))
           .agg(count(lit(1)).as("c")))
       val exact = keyc.agg(sum(col("c") * col("c")).cast("long")
         .as("exact_f2"))
@@ -91,7 +85,7 @@ object Round8eQueries {
         when(substring(md5(concat(d.cast("string"), lit(":"),
           j.cast("string"))), 1, 1) < "8", lit(1.0)).otherwise(lit(-1.0))
       val base = graft.CacheScope.retain(
-        t(s, dir, "embeddings").filter(col("vec_id") < 50)
+        Tables(s, dir, "embeddings").filter(col("vec_id") < 50)
           .select(col("vec_id"),
             col("embedding"),
             transform(sequence(lit(0), lit(15)), j =>
@@ -133,7 +127,7 @@ object Round8eQueries {
     // 3-step power iteration: v0 = ones/8, v_{i} = X'(X v_{i-1})
     // normalized. Per-dim sums go through the 1024-row block tree.
     "q_pca_power" -> ((s, dir) => {
-      val e = graft.CacheScope.retain(t(s, dir, "embeddings")
+      val e = graft.CacheScope.retain(Tables(s, dir, "embeddings")
         .select("vec_id", "embedding"))
       var v: DataFrame = s.range(1)
         .select(array((1 to 64).map(_ => lit(0.125)): _*).as("v"))
@@ -180,12 +174,6 @@ object Round8eQueries {
         .orderBy("rk")
     }),
   )
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
 
   /** One unrolled power-iteration CTE block (reads v{i-1}, defines
     * s{i}, ub{i}, u{i}, n{i}, v{i}) — the exact operation DAG of the

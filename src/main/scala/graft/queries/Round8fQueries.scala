@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
+import graft.functions.VectorFunctions.dotD
 
 /** Round-8 sixth batch: clustering evaluation, contrastive mining, and
   * community quality.
@@ -35,19 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object Round8fQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  private def dotD(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotD(a, b)
-
-  /** Exact left fold of `field` over the key-sorted struct list. */
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   private def pairs2(c: Column): Column = (c * (c - 1) / 2).cast("long")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -57,7 +47,7 @@ object Round8fQueries {
     // DetMath.dln of integer counts folded in table order.
     "q_adjusted_rand" -> ((s, dir) => {
       import graft.functions.DetMath.dln
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val cents = broadcast(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("ce")))
@@ -124,7 +114,7 @@ object Round8fQueries {
     // Hard-negative mining: per bench probe (vec_id < 16), argmax-sim
     // same-label and different-label corpus vectors and the margin.
     "q_hard_negatives" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probes = broadcast(e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("p_id"), col("label").as("p_label"),
           col("embedding").as("pe"),
@@ -156,14 +146,14 @@ object Round8fQueries {
     // Weighted modularity of the brand partition over the co-purchase
     // graph. One integer numerator over W^2: (w_in*W - sum_c d_c^2)/W^2.
     "q_graph_modularity" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val edges = graft.CacheScope.retain(
         li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.pk") =!= col("y.pk"))
         .groupBy(col("x.pk").as("src"), col("y.pk").as("dst"))
         .agg(count(lit(1)).as("w")))
-      val comm = graft.CacheScope.retain(t(s, dir, "part")
+      val comm = graft.CacheScope.retain(Tables(s, dir, "part")
         .select(col("p_partkey").as("node"), col("p_brand").as("c")))
       val commA = comm.select(col("node").as("anode"), col("c").as("ac"))
       val commB = comm.select(col("node").as("bnode"), col("c").as("bc"))

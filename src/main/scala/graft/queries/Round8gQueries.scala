@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5HeadSql, sortedFold}
+import graft.functions.VectorFunctions.dotD
 
 /** Round-8 seventh batch: retrieval evaluation, training-batch
   * efficiency, and membership-sketch calibration.
@@ -36,18 +39,6 @@ object Round8gQueries {
 
   private val Ln2 = 0.6931471805599453
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  private def dotD(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotD(a, b)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   private def md5Bucket(i: Column, k: Column, m: Int): Column =
     conv(substring(md5(concat(i.cast("string"), lit(":"),
       k.cast("string"))), 1, 8), 16, 10).cast("long") % m
@@ -58,7 +49,7 @@ object Round8gQueries {
     // discounts (ln2/dln(rank+1) == 1/log2(rank+1)).
     "q_ndcg_eval" -> ((s, dir) => {
       import graft.functions.DetMath.dln
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probes = broadcast(e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("p_id"), col("label").as("p_label"),
           col("embedding").as("pe"),
@@ -99,7 +90,7 @@ object Round8gQueries {
     // Padding waste: batch-of-8 max-length padding, length-sorted vs
     // arrival order. All BIGINT token counts.
     "q_padding_waste" -> ((s, dir) => {
-      val d = graft.CacheScope.retain(t(s, dir, "documents")
+      val d = graft.CacheScope.retain(Tables(s, dir, "documents")
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("toks")))
       val withBatches = graft.CacheScope.retain(
@@ -129,9 +120,9 @@ object Round8gQueries {
     // custkeys; probes are out-of-domain shifted customer keys.
     "q_bloom_fpp_audit" -> ((s, dir) => {
       val m = 16384
-      val present = graft.CacheScope.retain(t(s, dir, "orders")
+      val present = graft.CacheScope.retain(Tables(s, dir, "orders")
         .select(col("o_custkey").as("k")).distinct())
-      val absent = graft.CacheScope.retain(t(s, dir, "customer")
+      val absent = graft.CacheScope.retain(Tables(s, dir, "customer")
         .select((col("c_custkey") + 1000000).as("k")))
       val ks = explode(sequence(lit(0), lit(2))).as("i")
       val bits = graft.CacheScope.retain(present.select(col("k"), ks)
@@ -160,12 +151,6 @@ object Round8gQueries {
   private val dotSql = (a: String, b: String) =>
     s"list_sum(list_transform(range(1,65), i -> " +
       s"CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q_ndcg_eval" ->

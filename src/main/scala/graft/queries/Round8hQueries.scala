@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5HeadSql, sortedFold}
 
 /** Round-8 eighth batch: storage-layout payoff, conditional-LM
   * scoring, and uncertainty quantification.
@@ -36,13 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object Round8hQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Per-group rank-pick summary (min / ceil(n/2) / ceil(9n/10) / max)
     * over a per-row metric — the shared shape of both NLL queries.
     */
@@ -70,7 +65,7 @@ object Round8hQueries {
     // predicate. GlobalRank supplies both orderings without a
     // single-partition window.
     "q_zonemap_prune_sim" -> ((s, dir) => {
-      val d0 = t(s, dir, "documents").select("doc_id", "n_chars")
+      val d0 = Tables(s, dir, "documents").select("doc_id", "n_chars")
       val d = graft.CacheScope.retain(
         graft.operators.GlobalRank.withRank(
           graft.operators.GlobalRank.withRank(d0, col("doc_id"),
@@ -121,7 +116,7 @@ object Round8hQueries {
       // round-robin exchange moves 5000 doc rows and unlocks the full
       // core count (guide §2.6 idle capacity / §6 input splits)
       def cs = split(col("text"), "")
-      val chars = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val chars = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(col("doc_id"), col("lang"),
           posexplode(arrays_zip(cs.as("c1"),
             slice(cs, lit(2), greatest(size(cs), lit(1))).as("c2"),
@@ -156,7 +151,7 @@ object Round8hQueries {
     // Poissonized bootstrap CI for mean doc length per source: B=100
     // integer-weight replicas, 5th/95th replica-rank bounds.
     "q_bootstrap_ci" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
+      val docs = Tables(s, dir, "documents")
       val un = conv(substring(md5(concat(lit("bs"),
         col("b").cast("string"), lit(":"),
         col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long") /
@@ -200,12 +195,6 @@ object Round8hQueries {
   )
 
   import graft.functions.DetMath.lnCtesSql
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q_zonemap_prune_sim" ->

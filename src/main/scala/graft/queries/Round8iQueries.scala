@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5Head, md5HeadSql, sortedFold}
 
 /** Round-8 ninth batch: coreset planning, private releases, and skew
   * mitigation planning.
@@ -37,19 +39,11 @@ object Round8iQueries {
 
   private val Ln2 = 0.6931471805599453
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   // the coalesce pins the NULL-key hash: without it Spark's concat
   // null-propagates (NULL head) while DuckDB's [0] || NULL list-concat
   // quietly evaluates to 0 — a NULL group key is a real group
-  private def md5Head(prefix: String, k: Column): Column =
-    conv(substring(md5(concat(lit(prefix),
-      coalesce(k.cast("string"), lit("")))), 1, 8), 16, 10).cast("long")
+  private def sourceKey(prefix: String): Column =
+    concat(lit(prefix), coalesce(col("source").cast("string"), lit("")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -57,7 +51,7 @@ object Round8iQueries {
     // order; the global sum-of-d2 goes through the 1024-row block
     // tree; per-cell folds are cell-bounded.
     "q_coreset_weights" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val cents = broadcast(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("centroid_id"),
           col("embedding").as("ce")))
@@ -97,12 +91,12 @@ object Round8iQueries {
     // sign and magnitude from md5 of the source name, ln via dln.
     "q_dp_count_release" -> ((s, dir) => {
       import graft.functions.DetMath.dln
-      t(s, dir, "documents")
+      Tables(s, dir, "documents")
         .groupBy("source").agg(count(lit(1)).as("cnt"))
         .withColumn("sgn",
-          (md5Head("dpsign", col("source")) % 2) * 2 - 1)
+          (md5Head(sourceKey("dpsign")) % 2) * 2 - 1)
         .withColumn("a",
-          md5Head("dpmag", col("source")) % 2147483648L + 1)
+          md5Head(sourceKey("dpmag")) % 2147483648L + 1)
         .select(col("source"), col("cnt"),
           (col("sgn") * (lit(31) * lit(Ln2) - dln(col("a"))))
             .as("noise"),
@@ -114,7 +108,7 @@ object Round8iQueries {
     // Skew planner: per-key salt = ceil(c/256), top-10 hottest keys
     // with the global before/after max partition sizes.
     "q_salt_plan" -> ((s, dir) => {
-      val plan = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val plan = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .groupBy(col("l_suppkey").as("k"))
         .agg(count(lit(1)).as("c"))
         .withColumn("salt", ((col("c") + 255) / 256).cast("long"))
@@ -134,12 +128,6 @@ object Round8iQueries {
   )
 
   import graft.functions.DetMath.lnCtesSql
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q_coreset_weights" ->

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5Head, md5HeadSql, sortedFold}
 
 /** Round-8 tenth batch: distribution-shift inference and monitoring.
   *
@@ -29,19 +31,9 @@ import org.apache.spark.sql.functions._
   */
 object Round8jQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
-  private def md5Head(prefix: String, k: Column): Column =
-    conv(substring(md5(concat(lit(prefix), k.cast("string"))), 1, 8),
-      16, 10).cast("long")
-
   private def split2(k: Column): Column =
-    when(md5Head("split", k) % 2 === 0, "a").otherwise("b")
+    when(md5Head(concat(lit("split"), k.cast("string"))) % 2 === 0, "a")
+      .otherwise("b")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -49,7 +41,7 @@ object Round8jQueries {
     // All sums BIGINT; replica and observed statistics are mirrored
     // integer-ratio differences.
     "q_permutation_test" -> ((s, dir) => {
-      val d = graft.CacheScope.retain(t(s, dir, "documents")
+      val d = graft.CacheScope.retain(Tables(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"))
         .withColumn("grp", split2(col("doc_id"))))
       val obs = d.agg(
@@ -64,8 +56,8 @@ object Round8jQueries {
         .select(col("na"), col("nb"),
           (col("sa").cast("double") / col("na") -
             col("sb").cast("double") / col("nb")).as("obs_diff"))
-      val inA = md5Head("perm", concat(col("b").cast("string"),
-        lit(":"), col("doc_id").cast("string"))) % 2 === 0
+      val inA = md5Head(concat(lit("perm"), concat(col("b").cast("string"),
+        lit(":"), col("doc_id").cast("string")).cast("string"))) % 2 === 0
       val pstat = d
         .select(col("doc_id"), col("n_chars"),
           explode(sequence(lit(0), lit(199))).as("b"))
@@ -95,7 +87,7 @@ object Round8jQueries {
     // smoothing, dln log-ratio. Boundaries via GlobalRank picks.
     "q_psi_drift" -> ((s, dir) => {
       import graft.functions.DetMath.dln
-      val d = graft.CacheScope.retain(t(s, dir, "documents")
+      val d = graft.CacheScope.retain(Tables(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"))
         .withColumn("grp", split2(col("doc_id"))))
       val a = graft.operators.GlobalRank.withRank(
@@ -131,7 +123,7 @@ object Round8jQueries {
     // Heavy-change: top-10 tokens by |share delta| between splits,
     // ranked by the cross-multiplied integer so ordering is FP-free.
     "q_heavy_change" -> ((s, dir) => {
-      val cells = t(s, dir, "documents")
+      val cells = Tables(s, dir, "documents")
         .withColumn("grp", split2(col("doc_id")))
         .select(col("grp"), explode(split(col("text"), " ")).as("tok"))
         .groupBy("tok").agg(
@@ -163,12 +155,6 @@ object Round8jQueries {
   )
 
   import graft.functions.DetMath.lnCtesSql
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
 
   private val splitSql =
     s"""CASE WHEN ${md5HeadSql("'split' || CAST(doc_id AS VARCHAR)")}

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-8 eleventh batch: metric agreement, survival analysis, and
   * compressed-sketch calibration.
@@ -31,9 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Round8kQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def sortedFoldMul(structs: Column, field: String): Column =
     aggregate(transform(array_sort(structs), _.getField(field)),
       lit(1.0), (acc, v) => acc * v)
@@ -42,7 +40,7 @@ object Round8kQueries {
 
     // Spearman rho between n_chars and distinct-token-count ranks.
     "q_spearman_metrics" -> ((s, dir) => {
-      val m = t(s, dir, "documents")
+      val m = Tables(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
           size(array_distinct(split(col("text"), " "))).cast("long")
             .as("uniq"))
@@ -66,7 +64,7 @@ object Round8kQueries {
     // exactly the oracle's global window).
     "q_km_survival" -> ((s, dir) => {
       val byU = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val ue = graft.CacheScope.retain(t(s, dir, "events")
+      val ue = graft.CacheScope.retain(Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"))
         .withColumn("rn", row_number().over(byU))
         .filter(col("rn") <= 2))
@@ -132,7 +130,7 @@ object Round8kQueries {
           size(ws) - 2), i => concat_ws(" ", element_at(ws, i),
           element_at(ws, i + 1), element_at(ws, i + 2)))))
         .otherwise(array().cast("array<string>"))
-      val base = graft.CacheScope.retain(t(s, dir, "documents")
+      val base = graft.CacheScope.retain(Tables(s, dir, "documents")
         .filter(col("doc_id") < 50)
         .select(col("doc_id"), sh.as("s"))
         .select(col("doc_id"), col("s"), size(col("s")).as("sz"),

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5HeadSql, sortedFold}
 
 /** Round-8 twelfth batch: corpus information rate, tail-risk
   * estimation, and entity linkage.
@@ -29,13 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Round8lQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // H(c3|c1c2) in nats: one number from alphabet-bounded count
@@ -44,7 +39,7 @@ object Round8lQueries {
       import graft.functions.DetMath.dln
       val byPos = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy("pos")
-      val chars = t(s, dir, "documents")
+      val chars = Tables(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(split(col("text"), "")).as(Seq("pos", "c1")))
         .withColumn("c2", lead("c1", 1).over(byPos))
@@ -75,7 +70,7 @@ object Round8lQueries {
       import graft.functions.DetMath.dln
       val ranked = graft.CacheScope.retain(
         graft.operators.GlobalRank.withRank(
-          t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
+          Tables(s, dir, "documents").select(col("doc_id"), col("n_chars")),
           -col("n_chars"), col("doc_id"), "rk")
         .filter(col("rk") <= 51))
       val xk = broadcast(ranked.filter(col("rk") === 51)
@@ -99,7 +94,7 @@ object Round8lQueries {
     "q_topk_shard_recall" -> ((s, dir) => {
       val shard = conv(substring(md5(concat(lit("shard"),
         col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long") % 8
-      val sc = graft.CacheScope.retain(t(s, dir, "documents")
+      val sc = graft.CacheScope.retain(Tables(s, dir, "documents")
         .select(shard.as("shard"),
           explode(split(col("text"), " ")).as("tok"))
         .groupBy("shard", "tok").agg(count(lit(1)).as("c")))
@@ -127,12 +122,6 @@ object Round8lQueries {
   )
 
   import graft.functions.DetMath.lnCtesSql
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q_ngram_entropy_rate" ->

@@ -1,8 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
+import graft.functions.VectorFunctions.dotD
 
 /** Round-8 thirteenth batch: late-interaction retrieval, residual
   * quantization, and capacity planning.
@@ -31,25 +34,13 @@ import org.apache.spark.sql.functions._
   */
 object Round8mQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  private def dotD(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotD(a, b)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // MaxSim(label) = sum over probes of max member cosine; top-10
     // labels. Probes broadcast; one corpus scan; per-(probe,label)
     // max is a combine aggregate.
     "q_colbert_maxsim" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val probes = broadcast(e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("p_id"), col("embedding").as("pe"),
           sqrt(dotD(col("embedding"), col("embedding"))).as("np")))
@@ -76,7 +67,7 @@ object Round8mQueries {
     // 8 anchors built from vecs 8..15's own residuals; cell census +
     // block-tree total squared error.
     "q_residual_quantize" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val c1 = broadcast(e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("c1_id"), col("embedding").as("ce")))
       val d2 = aggregate(zip_with(col("embedding"), col("ce"), (x, c) =>
@@ -127,7 +118,7 @@ object Round8mQueries {
       def est(name: String, numCols: Int, strCols: Seq[String]) = {
         val strBytes = strCols.map(c => length(col(c)).cast("long"))
           .reduceOption(_ + _).getOrElse(lit(0L))
-        t(s, dir, name).select(
+        Tables(s, dir, name).select(
           (lit(8L * numCols) + strBytes).as("row_bytes"))
           .agg(count(lit(1)).as("n_rows"),
             sum("row_bytes").cast("long").as("est_bytes"))

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
 
 /** Round-8 fourteenth batch: sampling-temperature planning, classifier
   * thresholding, and softmax weighting — the DetMath.dexp batch (the
@@ -32,19 +34,12 @@ import org.apache.spark.sql.functions._
   */
 object Round8nQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // p_l(tau) = exp(tau * ln n_l) / Z_tau; effective_n = 1/sum p^2.
     "q_temperature_sweep" -> ((s, dir) => {
       import graft.functions.DetMath.{withDln, withDexp}
-      val ns = t(s, dir, "documents").groupBy("lang")
+      val ns = Tables(s, dir, "documents").groupBy("lang")
         .agg(count(lit(1)).as("n_l"))
       // staged dln/dexp (r12, guide §3.3): the nested Column form built
       // a ~9,000-node expression tree (dexp re-inlines its argument —
@@ -78,7 +73,7 @@ object Round8nQueries {
     // pseudo-label; P/R/F1 with guarded denominators.
     "q_threshold_sweep" -> ((s, dir) => {
       val ws = split(col("text"), " ")
-      val scored = t(s, dir, "documents")
+      val scored = Tables(s, dir, "documents")
         .select(col("doc_id"), size(ws).cast("long").as("n_tokens"),
           size(array_distinct(ws)).cast("long").as("uniq"))
         .select(col("doc_id"),
@@ -114,7 +109,7 @@ object Round8nQueries {
     "q_softmax_weights" -> ((s, dir) => {
       import graft.functions.DetMath.dexp
       val ws = split(col("text"), " ")
-      val scored = t(s, dir, "documents")
+      val scored = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           size(ws).cast("long").as("n_tokens"),
           size(array_distinct(ws)).cast("long").as("uniq"))

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5HeadSql, sortedFold}
 
 /** Round-8 fifteenth batch: the dlnD ops — weighted sampling without
   * replacement, mixture entropy, and in-engine model inference.
@@ -32,13 +34,6 @@ object Round8oQueries {
 
   private val Ln2 = 0.6931471805599453
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Gumbel-key weighted top-5 per language, weight = n_chars.
@@ -47,7 +42,7 @@ object Round8oQueries {
       val a = conv(substring(md5(concat(lit("gum"),
         col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long") %
         2147483647L + 1
-      val scored = t(s, dir, "documents")
+      val scored = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .withColumn("ua", a)
         .withColumn("neg_ln_u",
@@ -66,7 +61,7 @@ object Round8oQueries {
     // H(tau) = -sum_l p_l dlnD(p_l); perplexity = dexp(H).
     "q_mixture_entropy" -> ((s, dir) => {
       import graft.functions.DetMath.{dexp, dlnD, withDln, withDexp}
-      val ns = t(s, dir, "documents").groupBy("lang")
+      val ns = Tables(s, dir, "documents").groupBy("lang")
         .agg(count(lit(1)).as("n_l"))
       // staged dln/dexp: identical IEEE DAG, linear plan tree — see
       // q_temperature_sweep (guide §3.3 planning cost)
@@ -98,7 +93,7 @@ object Round8oQueries {
     "q_lr_score" -> ((s, dir) => {
       import graft.functions.DetMath.dexp
       val ws = split(col("text"), " ")
-      val feat = t(s, dir, "documents")
+      val feat = Tables(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           size(ws).cast("long").as("n_tokens"),
           size(array_distinct(ws)).cast("long").as("uniq"))
@@ -129,12 +124,6 @@ object Round8oQueries {
   )
 
   import graft.functions.DetMath.{lnCtesSql, lnDCtesSql, expCtesSql}
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "q_gumbel_topk" ->

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
 
 /** Round-8 sixteenth batch: feature selection, embedding whitening,
   * and class balancing — the model-prep layer.
@@ -24,13 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Round8pQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // MI(feature_bucket; label) per feature, ranked. All counts
@@ -38,7 +33,7 @@ object Round8pQueries {
     "q_feature_mi" -> ((s, dir) => {
       import graft.functions.DetMath.dln
       val ws = split(col("text"), " ")
-      val base = t(s, dir, "documents")
+      val base = Tables(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
           size(ws).cast("long").as("n_tokens"),
           size(array_distinct(ws)).cast("long").as("uniq"))
@@ -86,7 +81,7 @@ object Round8pQueries {
 
     // Per-dim whitening stats via the 1024-row block tree.
     "q_whitening_stats" -> ((s, dir) => {
-      val comps = t(s, dir, "embeddings")
+      val comps = Tables(s, dir, "embeddings")
         .select(col("vec_id"),
           posexplode(col("embedding")).as(Seq("dim0", "comp")))
         .select(col("vec_id"), (col("dim0") + 1).cast("long").as("dim"),
@@ -117,7 +112,7 @@ object Round8pQueries {
     // language; b^n = 1/dexp(n * -dlnD(b)), b = 0.999.
     "q_class_weights" -> ((s, dir) => {
       import graft.functions.DetMath.{dexp, dlnD}
-      val ns = t(s, dir, "documents").groupBy("lang")
+      val ns = Tables(s, dir, "documents").groupBy("lang")
         .agg(count(lit(1)).as("n_c"))
       val tot = broadcast(ns.agg(sum("n_c").cast("long").as("n"),
         count(lit(1)).as("k")))

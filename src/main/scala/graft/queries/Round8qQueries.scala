@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
+import graft.functions.VectorFunctions.dotD
 
 /** Round-8 seventeenth batch: multiscale signals, kernel two-sample
   * testing, and sequential monitoring.
@@ -32,25 +35,13 @@ import org.apache.spark.sql.functions._
   */
 object Round8qQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  private def dotD(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotD(a, b)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Haar: series -> (avg, det) pairs three times; energy per level.
     "q_haar_energy" -> ((s, dir) => {
-      val start = broadcast(t(s, dir, "orders")
+      val start = broadcast(Tables(s, dir, "orders")
         .agg(min("o_orderdate").as("d0")))
-      val days = t(s, dir, "orders").crossJoin(start)
+      val days = Tables(s, dir, "orders").crossJoin(start)
         .select(datediff(col("o_orderdate"), col("d0")).cast("long")
           .as("d"))
         .groupBy("d").agg(count(lit(1)).as("c"))
@@ -83,7 +74,7 @@ object Round8qQueries {
     // MMD^2 under (1 + x.y/64)^2 between the first 100 vectors of
     // labels 0 and 1.
     "q_mmd_poly" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val byL = Window.partitionBy("label").orderBy("vec_id")
       val g = graft.CacheScope.retain(e.filter(col("label").isin(0, 1))
         .withColumn("rn", row_number().over(byL))
@@ -130,7 +121,7 @@ object Round8qQueries {
     "q_sprt_monitor" -> ((s, dir) => {
       val ranked = graft.CacheScope.retain(
         graft.operators.GlobalRank.withRank(
-          t(s, dir, "events")
+          Tables(s, dir, "events")
             .select(col("event_id"),
               when(col("value") > 50, 1L).otherwise(0L).as("sc")),
           col("event_id"), col("event_id"), "rn")

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
 
 /** Round-8 eighteenth batch: rank-based nonparametric tests — the
   * distribution-free layer a data-quality / experiment-analysis stack
@@ -33,22 +35,14 @@ import org.apache.spark.sql.functions._
   */
 object Round8rQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: org.apache.spark.sql.Column,
-      field: String): org.apache.spark.sql.Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Daily (d, y=revenue, x=n_orders, u=n_urgent) frame for the first
     * 64 days of the orders table — the shared series both trend
     * queries consume. One scan, one combine aggregate keyed by day.
     */
   private def dailyFrame(s: SparkSession, dir: String): DataFrame = {
-    val start = broadcast(t(s, dir, "orders")
+    val start = broadcast(Tables(s, dir, "orders")
       .agg(min("o_orderdate").as("d0")))
-    t(s, dir, "orders").crossJoin(start)
+    Tables(s, dir, "orders").crossJoin(start)
       .select(datediff(col("o_orderdate"), col("d0")).cast("long").as("d"),
         col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       .filter(col("d") < 64)
@@ -68,7 +62,7 @@ object Round8rQueries {
     // runs as a broadcast self-join over the ~50-value quantity
     // domain — never a global sort/rank over the fact table.
     "q_mann_whitney" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .filter(col("l_returnflag").isin("R", "N"))
         .select(col("l_returnflag").as("g"),
           col("l_quantity").cast("long").as("v"))

@@ -3,6 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
+import graft.functions.VectorFunctions.{cosine, dotD}
 
 /** Round-8 nineteenth batch: retrieval-quality evaluation of the
   * compressed-embedding routes a 100 TB vector store actually deploys.
@@ -33,26 +36,11 @@ import org.apache.spark.sql.functions._
   */
 object Round8sQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  private def dotD(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotD(a, b)
-
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.cosine(a, b)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** (probe_id, pe, plabel) x (neighbor_id, embedding, nlabel) scored
     * frame: 20 broadcast probes against every other vector.
     */
   private def scored(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     val probes = broadcast(e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
         col("label").as("plabel")))
@@ -119,7 +107,7 @@ object Round8sQueries {
     }),
 
     "q_map_eval" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
+      val e = Tables(s, dir, "embeddings")
       val labelCnt = broadcast(e.groupBy("label")
         .agg(count(lit(1)).as("lc")))
       val ranked = top10(

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
 
 /** Round-8 twentieth batch: the data-quality / profiling audits a
   * warehouse runs before trusting a 100 TB corpus.
@@ -29,13 +31,6 @@ import org.apache.spark.sql.functions._
   * which truncate in Spark but round in DuckDB).
   */
 object Round8tQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
 
   /** g3-style audit of candidate FD lhs -> rhs over df. */
   private def fdAudit(df: DataFrame, lhs: String, rhs: String,
@@ -65,7 +60,7 @@ object Round8tQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_fd_violations" -> ((s, dir) => {
-      val li = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val li = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_returnflag",
           "l_linestatus", "l_quantity"))
       fdAudit(li, "l_orderkey", "l_returnflag", "l_orderkey->l_returnflag")
@@ -77,7 +72,7 @@ object Round8tQueries {
     }),
 
     "q_column_drift" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
+      val o = Tables(s, dir, "orders")
       val bounds = broadcast(o.agg(min("o_orderdate").as("dmin"),
         max("o_orderdate").as("dmax")))
       val cats = o.crossJoin(bounds)
@@ -113,18 +108,18 @@ object Round8tQueries {
     }),
 
     "q_key_uniqueness" -> ((s, dir) => {
-      keyAudit(t(s, dir, "orders"), "orders.o_orderkey",
+      keyAudit(Tables(s, dir, "orders"), "orders.o_orderkey",
           Seq("o_orderkey"))
-        .unionByName(keyAudit(t(s, dir, "lineitem"),
+        .unionByName(keyAudit(Tables(s, dir, "lineitem"),
           "lineitem.(l_orderkey,l_linenumber)",
           Seq("l_orderkey", "l_linenumber")))
-        .unionByName(keyAudit(t(s, dir, "customer"),
+        .unionByName(keyAudit(Tables(s, dir, "customer"),
           "customer.c_custkey", Seq("c_custkey")))
-        .unionByName(keyAudit(t(s, dir, "part"), "part.p_name",
+        .unionByName(keyAudit(Tables(s, dir, "part"), "part.p_name",
           Seq("p_name")))
-        .unionByName(keyAudit(t(s, dir, "events"), "events.event_id",
+        .unionByName(keyAudit(Tables(s, dir, "events"), "events.event_id",
           Seq("event_id")))
-        .unionByName(keyAudit(t(s, dir, "documents"),
+        .unionByName(keyAudit(Tables(s, dir, "documents"),
           "documents.doc_id", Seq("doc_id")))
         .orderBy("candidate")
     }),

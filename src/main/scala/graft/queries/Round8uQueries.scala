@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
 
 /** Round-8 twenty-first batch: the forecasting/monitoring loop over the
   * daily order-count series — backtest, changepoint, online smoother.
@@ -28,18 +30,11 @@ import org.apache.spark.sql.functions._
   */
 object Round8uQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Zero-filled daily order-count series, idx in [0, len). */
   private def series(s: SparkSession, dir: String, len: Int): DataFrame = {
-    val start = broadcast(t(s, dir, "orders")
+    val start = broadcast(Tables(s, dir, "orders")
       .agg(min("o_orderdate").as("d0")))
-    val days = t(s, dir, "orders").crossJoin(start)
+    val days = Tables(s, dir, "orders").crossJoin(start)
       .select(datediff(col("o_orderdate"), col("d0")).cast("long")
         .as("d"))
       .groupBy("d").agg(count(lit(1)).as("c"))

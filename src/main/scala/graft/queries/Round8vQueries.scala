@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-8 twenty-second batch: the query-planning layer — semi-join
   * programs, cardinality-model evaluation, lookup-cache sizing.
@@ -32,11 +33,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round8vQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   private def discPrice: Column =
     col("l_extendedprice").cast(dec) *
       (lit(1).cast(dec) - col("l_discount").cast(dec))
@@ -44,14 +40,14 @@ object Round8vQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_semijoin_program" -> ((s, dir) => {
-      val cust = graft.CacheScope.retain(t(s, dir, "customer")
+      val cust = graft.CacheScope.retain(Tables(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
         .select("c_custkey", "c_nationkey"))
       // reduce DOWN the join tree: orders ⋉ customer, lineitem ⋉ orders
-      val ord = graft.CacheScope.retain(t(s, dir, "orders")
+      val ord = graft.CacheScope.retain(Tables(s, dir, "orders")
         .join(cust, col("o_custkey") === col("c_custkey"), "left_semi")
         .select("o_orderkey", "o_custkey"))
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .join(ord, col("l_orderkey") === col("o_orderkey"), "left_semi")
         .select(col("l_orderkey"), discPrice.as("rev"))
       // join back UP: every row now survives to the output
@@ -92,22 +88,22 @@ object Round8vQueries {
               try_divide(col("actual_rows").cast("double"), col("est_rows")))
               .as("q_error"))
       }
-      eval(t(s, dir, "orders").select(col("o_custkey").as("lk")), "lk",
-          t(s, dir, "customer").select(col("c_custkey").as("rk")), "rk",
+      eval(Tables(s, dir, "orders").select(col("o_custkey").as("lk")), "lk",
+          Tables(s, dir, "customer").select(col("c_custkey").as("rk")), "rk",
           "orders-customer")
         .unionByName(eval(
-          t(s, dir, "lineitem").select(col("l_orderkey").as("lk")), "lk",
-          t(s, dir, "orders").select(col("o_orderkey").as("rk")), "rk",
+          Tables(s, dir, "lineitem").select(col("l_orderkey").as("lk")), "lk",
+          Tables(s, dir, "orders").select(col("o_orderkey").as("rk")), "rk",
           "lineitem-orders"))
         .unionByName(eval(
-          t(s, dir, "lineitem").select(col("l_partkey").as("lk")), "lk",
-          t(s, dir, "part").select(col("p_partkey").as("rk")), "rk",
+          Tables(s, dir, "lineitem").select(col("l_partkey").as("lk")), "lk",
+          Tables(s, dir, "part").select(col("p_partkey").as("rk")), "rk",
           "lineitem-part"))
         .orderBy("join_name")
     }),
 
     "q_lookup_cache_plan" -> ((s, dir) => {
-      val freq = t(s, dir, "orders").groupBy("o_custkey")
+      val freq = Tables(s, dir, "orders").groupBy("o_custkey")
         .agg(count(lit(1)).as("cnt"))
       val ranked = graft.CacheScope.retain(
         graft.operators.GlobalRank.withRank(freq,

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.sortedFold
 
 /** Round-8 twenty-third batch: language-model smoothing and stylometry
   * over the documents corpus.
@@ -29,13 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Round8wQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private def sortedFold(structs: Column, field: String): Column =
-    aggregate(transform(array_sort(structs), _.getField(field)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Adjacent word pairs of every document, one row per occurrence.
     * Docs with fewer than 2 words are dropped BEFORE the transform:
     * Spark's sequence(1, size-1) descends when size < 2 (yielding
@@ -44,7 +39,7 @@ object Round8wQueries {
     * agree on short docs instead of diverging.
     */
   private def bigrams(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"), explode(expr(
@@ -87,7 +82,7 @@ object Round8wQueries {
     // genuine Zipf tail (9.4k singletons at sf0.01)
     "q_good_turing" -> ((s, dir) => {
       // size >= 3 guard: same descending-sequence hazard as bigrams
-      val uni = t(s, dir, "documents")
+      val uni = Tables(s, dir, "documents")
         .select(split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 3)
         .select(explode(expr(
@@ -117,7 +112,7 @@ object Round8wQueries {
     }),
 
     "q_burrows_delta" -> ((s, dir) => {
-      val toks = graft.CacheScope.retain(t(s, dir, "documents")
+      val toks = graft.CacheScope.retain(Tables(s, dir, "documents")
         .select(col("source"), explode(split(col("text"), " "))
           .as("tok")))
       val top = broadcast(toks.groupBy("tok")

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.queries.QueryKit.{md5Head, md5HeadSql}
 
 /** Round-8 twenty-fourth batch: shard-placement planning — the data-
   * level companion to the sink's shard routing (hash / balanced /
@@ -29,20 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object Round8xQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** First 8 hex chars of md5(expr) as an exact long in [0, 2^32). */
-  private def md5Head(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  /** The same 8-hex fold in DuckDB (no conv() there). */
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
-
   /** vnode ring for `shards` shards: (shard, rpos), 32 vnodes each. */
   private def ring(s: SparkSession, shards: Int): DataFrame =
     s.range(shards * 32L).select(
@@ -66,7 +55,7 @@ object Round8xQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_consistent_hash_ring" -> ((s, dir) => {
-      val keys = graft.CacheScope.retain(t(s, dir, "orders")
+      val keys = graft.CacheScope.retain(Tables(s, dir, "orders")
         .select(col("o_orderkey").as("k")).distinct()
         .withColumn("kp",
           md5Head(concat(lit("key:"), col("k").cast("string")))))
@@ -90,7 +79,7 @@ object Round8xQueries {
     }),
 
     "q_rebalance_matrix" -> ((s, dir) => {
-      val keys = t(s, dir, "orders")
+      val keys = Tables(s, dir, "orders")
         .select(col("o_custkey").as("k")).distinct()
         .withColumn("h",
           md5Head(concat(lit("mod:"), col("k").cast("string"))))
@@ -110,7 +99,7 @@ object Round8xQueries {
     }),
 
     "q_shard_key_skew" -> ((s, dir) => {
-      val li = graft.CacheScope.retain(t(s, dir, "lineitem")
+      val li = graft.CacheScope.retain(Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_partkey", "l_suppkey"))
       def audit(key: String): DataFrame = li
         .select((md5Head(concat(lit(s"skew:$key:"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-8 twenty-fifth batch: re-identification-risk audits — the
   * privacy layer a dataset must pass before leaving the warehouse,
@@ -26,16 +27,13 @@ import org.apache.spark.sql.functions._
   */
 object Round8yQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private def band(width: Int): Column =
     floor(col("c_acctbal") / lit(width.toDouble)).cast("long")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_k_anonymity" -> ((s, dir) => {
-      val classes = t(s, dir, "customer")
+      val classes = Tables(s, dir, "customer")
         .groupBy(col("c_nationkey"), col("c_mktsegment"),
           band(1000).as("bal_band"))
         .agg(count(lit(1)).as("k"))
@@ -55,7 +53,7 @@ object Round8yQueries {
     }),
 
     "q_l_diversity" -> ((s, dir) => {
-      val classes = t(s, dir, "customer")
+      val classes = Tables(s, dir, "customer")
         .groupBy(col("c_nationkey"), band(1000).as("bal_band"))
         .agg(count(lit(1)).as("k"),
           countDistinct(col("c_mktsegment")).as("l"))
@@ -70,7 +68,7 @@ object Round8yQueries {
     }),
 
     "q_generalization_tradeoff" -> ((s, dir) => {
-      val cust = graft.CacheScope.retain(t(s, dir, "customer")
+      val cust = graft.CacheScope.retain(Tables(s, dir, "customer")
         .select(col("c_nationkey"), col("c_mktsegment"),
           col("c_acctbal")))
       def level(name: String, bal: Column): DataFrame = cust

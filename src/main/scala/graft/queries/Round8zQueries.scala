@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.{dec, md5Head, md5HeadSql}
 
 /** Round-8 twenty-sixth batch: the experimentation-platform layer —
   * variance reduction, test sizing, and the panel-data estimator.
@@ -30,29 +31,15 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round8zQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
-  private def md5Head(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  private def md5HeadSql(x: String): String =
-    s"""CAST(list_reduce([CAST(0 AS BIGINT)] || list_transform(
-       |      string_split_regex(substring(md5($x), 1, 8), ''),
-       |      c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT)),
-       |      (acc, v) -> acc * 16 + v) AS BIGINT)""".stripMargin
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_cuped" -> ((s, dir) => {
-      val y = t(s, dir, "orders").groupBy(col("o_custkey"))
+      val y = Tables(s, dir, "orders").groupBy(col("o_custkey"))
         .agg(sum(col("o_totalprice").cast(dec)).as("y"))
       // re-narrow the per-customer sum to (18,2): second moments of the
       // wide sum type would exceed decimal-38 and the two engines
       // degrade precision differently there
-      val xy = t(s, dir, "customer")
+      val xy = Tables(s, dir, "customer")
         .join(y, col("c_custkey") === col("o_custkey"))
         .select(col("c_acctbal").cast(dec).as("x"),
           col("y").cast(dec).as("y"))
@@ -84,7 +71,7 @@ object Round8zQueries {
     // z_{.975} and z_{.80} as shared literal constants (the test's
     // modeling inputs, not computed quantities)
     "q_power_analysis" -> ((s, dir) => {
-      val p = t(s, dir, "orders").agg(
+      val p = Tables(s, dir, "orders").agg(
         count(lit(1)).as("n_orders"),
         (sum(when(col("o_orderpriority") === "1-URGENT", 1L)
           .otherwise(0L)).cast("double") /
@@ -103,9 +90,9 @@ object Round8zQueries {
     }),
 
     "q_did_estimator" -> ((s, dir) => {
-      val bounds = broadcast(t(s, dir, "orders")
+      val bounds = broadcast(Tables(s, dir, "orders")
         .agg(min("o_orderdate").as("dmin"), max("o_orderdate").as("dmax")))
-      val cells = t(s, dir, "orders").crossJoin(bounds)
+      val cells = Tables(s, dir, "orders").crossJoin(bounds)
         .select(
           when(md5Head(concat(lit("arm:"),
             col("o_custkey").cast("string"))) % 2 === 0, "treat")

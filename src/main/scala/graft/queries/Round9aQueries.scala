@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-9 first batch: ClickHouse aggregate-combinator semantics.
   * The reference is a ClickHouse sink (SURVEY §0); the queries its
@@ -41,11 +42,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round9aQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
-
   private val letter =
     when(col("event_type") === "view", "v")
       .when(col("event_type") === "click", "c")
@@ -57,7 +53,7 @@ object Round9aQueries {
 
     "q_window_funnel" -> ((s, dir) => {
       val WindowUs = 3600L * 1000000L // 1 hour
-      val ev = graft.CacheScope.retain(t(s, dir, "events")
+      val ev = graft.CacheScope.retain(Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("us")))
       // every view is an anchor; per anchor the greedy chain takes the
@@ -92,7 +88,7 @@ object Round9aQueries {
     }),
 
     "q_sequence_count_vc" -> ((s, dir) => {
-      val seqs = t(s, dir, "events")
+      val seqs = Tables(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), letter.as("l"))
         .groupBy("user_id")
         .agg(array_join(transform(
@@ -113,7 +109,7 @@ object Round9aQueries {
     }),
 
     "q_summap_pivot" -> ((s, dir) => {
-      val hourly = t(s, dir, "events")
+      val hourly = Tables(s, dir, "events")
         // long hour: the oracle checker's integer-width tolerance does
         // not reach inside list elements, and DuckDB's hour() is BIGINT
         .select(col("event_type"), hour(col("ts")).cast("long").as("h"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-9 second batch: multiple-testing governance — the statistical
   * layer a platform runs when it screens MANY hypotheses at once
@@ -40,22 +41,19 @@ import org.apache.spark.sql.functions._
   */
 object Round9bQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** Per-brand (nA, nN, nR, n) + global counts, chi2, p — shared by all
     * three queries.
     */
   private def pFrame(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DetMath.dexp
-    val perPart = t(s, dir, "lineitem")
+    val perPart = Tables(s, dir, "lineitem")
       .groupBy("l_partkey")
       .agg(
         sum(when(col("l_returnflag") === "A", 1L).otherwise(0L)).as("cA"),
         sum(when(col("l_returnflag") === "N", 1L).otherwise(0L)).as("cN"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("cR"))
     val perBrand = perPart
-      .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand")),
+      .join(Tables(s, dir, "part").select(col("p_partkey"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand")
       .agg(sum("cA").as("nA"), sum("cN").as("nN"), sum("cR").as("nR"))

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
+import graft.functions.VectorFunctions.{dotD, normD}
 
 /** Round-9 third batch: ANN index-shape evaluation — the SPANN-style
   * boundary-closure assignment and the IVF probe-tuning curve, the two
@@ -34,14 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object Round9cQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    graft.expressions.VectorExpressions.register(s)
-    graft.Tables(s, dir, n)
-  }
-
-  private def dotD(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.dotD(a, b) // float x float, codegen'd
-  private def normD(a: Column): Column = sqrt(dotD(a, a))
   // centroid arms are array<double>: same left-to-right fold the SQL
   // mirrors, spelled with zip_with/aggregate (VectorDotProduct is
   // float-only)
@@ -72,7 +66,7 @@ object Round9cQueries {
     * error (the adversarial fixture holds an all-zero embedding).
     */
   private def vecCellSims(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     // spread the probe-side scan (guide §2.5): the sf parquet is one
     // row group, so the |vectors| x |cells| interpreted-lambda cosine
     // fold otherwise runs on a single task; the centroid arm keeps the
@@ -106,7 +100,7 @@ object Round9cQueries {
 
   /** (pid, vec_id, label, sim) for every probe × non-self vector. */
   private def probeSims(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     // spread: |probes| x corpus dot products off a 1-row-group scan
     // otherwise evaluate on one task (guide §2.5)
     PipelineQueries.spread(s, e)
@@ -129,7 +123,7 @@ object Round9cQueries {
 
   /** Per-probe ranked centroid cells (by centroid cosine). */
   private def probeCells(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
     val byProbe = Window.partitionBy("pid")
       .orderBy(col("csim").desc, col("c_label").asc)
     broadcast(probes(e))

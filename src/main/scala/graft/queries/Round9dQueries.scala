@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-9 fourth batch: graph-mining depth on the part co-purchase
   * graph — seeded ranking, cohesive-subgraph peeling, and link
@@ -28,13 +29,10 @@ import org.apache.spark.sql.functions._
   */
 object Round9dQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_ppr_seeds" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
+      val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val edgesW = li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.pk") =!= col("y.pk"))
@@ -47,7 +45,7 @@ object Round9dQueries {
       // "personalized" in PPR; everything else starts and restarts at 0
       val restart = when(col("node") % 20 === 0, lit(150000000L))
         .otherwise(lit(0L))
-      val ranks0 = t(s, dir, "part").select(col("p_partkey").as("node"))
+      val ranks0 = Tables(s, dir, "part").select(col("p_partkey").as("node"))
         .withColumn("r", when(col("node") % 20 === 0, lit(1000000000L))
           .otherwise(lit(0L)))
       def step(ranks: DataFrame): DataFrame =

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-9 fifth batch: KEYLESS temporal joins — the three shapes that
   * have no equi-key to shuffle on, where a naive plan is a cartesian
@@ -30,13 +31,10 @@ import org.apache.spark.sql.functions._
   */
 object Round9eQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   private val BandUs = 60L * 1000000L // ±60 s
 
   private def ev(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(col("event_id"), col("event_type"),
+    Tables(s, dir, "events").select(col("event_id"), col("event_type"),
       col("value"), unix_micros(col("ts")).as("us"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-9 sixth batch: Hilbert-curve data layout vs Z-order — the
   * storage-layout decision a 100 TB table owner actually faces. Morton
@@ -31,9 +32,6 @@ import org.apache.spark.sql.functions._
   * aggregates shuffle 64 file groups, partials map-side.
   */
 object Round9fQueries {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
 
   private val steps = Seq(128L, 64L, 32L, 16L, 8L, 4L, 2L, 1L)
 
@@ -108,7 +106,7 @@ object Round9fQueries {
   }
 
   private def cells(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(
+    Tables(s, dir, "lineitem").select(
       pmod(col("l_partkey"), lit(256L)).as("px"),
       pmod(col("l_suppkey"), lit(256L)).as("sy"))
 

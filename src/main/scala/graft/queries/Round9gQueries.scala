@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Round-9 seventh batch: the Selinger join-order layer — cost-based
   * planning AS QUERIES, over the 5-relation TPC-H chain
@@ -36,23 +37,20 @@ import org.apache.spark.sql.functions._
   */
 object Round9gQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** One-row stats frame: cardinalities + per-edge max-ndv. */
   private def stats(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").agg(
+    val c = Tables(s, dir, "customer").agg(
       count(lit(1)).as("n_c"), countDistinct("c_custkey").as("ndv_c_ck"))
-    val o = t(s, dir, "orders").agg(
+    val o = Tables(s, dir, "orders").agg(
       count(lit(1)).as("n_o"), countDistinct("o_custkey").as("ndv_o_ck"),
       countDistinct("o_orderkey").as("ndv_o_ok"))
-    val l = t(s, dir, "lineitem").agg(
+    val l = Tables(s, dir, "lineitem").agg(
       count(lit(1)).as("n_l"), countDistinct("l_orderkey").as("ndv_l_ok"),
       countDistinct("l_partkey").as("ndv_l_pk"),
       countDistinct("l_suppkey").as("ndv_l_sk"))
-    val p = t(s, dir, "part").agg(
+    val p = Tables(s, dir, "part").agg(
       count(lit(1)).as("n_p"), countDistinct("p_partkey").as("ndv_p_pk"))
-    val su = t(s, dir, "supplier").agg(
+    val su = Tables(s, dir, "supplier").agg(
       count(lit(1)).as("n_s"), countDistinct("s_suppkey").as("ndv_s_sk"))
     c.crossJoin(broadcast(o)).crossJoin(broadcast(l))
       .crossJoin(broadcast(p)).crossJoin(broadcast(su))
@@ -137,12 +135,13 @@ object Round9gQueries {
 
     "q_cost_model_validate" -> ((s, dir) => {
       val est = graft.CacheScope.retain(estFrame(s, dir))
-      val c = t(s, dir, "customer").select(col("c_custkey"))
-      val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderkey"))
-      val l = t(s, dir, "lineitem")
+      val c = Tables(s, dir, "customer").select(col("c_custkey"))
+      val o = Tables(s, dir, "orders")
+        .select(col("o_custkey"), col("o_orderkey"))
+      val l = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-      val p = t(s, dir, "part").select(col("p_partkey"))
-      val su = t(s, dir, "supplier").select(col("s_suppkey"))
+      val p = Tables(s, dir, "part").select(col("p_partkey"))
+      val su = Tables(s, dir, "supplier").select(col("s_suppkey"))
       val co = c.join(o, col("c_custkey") === col("o_custkey"))
         .transform(graft.CacheScope.retain)
       val col3 = co.join(l, col("o_orderkey") === col("l_orderkey"))
@@ -178,14 +177,15 @@ object Round9gQueries {
             (col("max_per_key").cast("double") *
               col("ndv").cast("double") / col("n").cast("double"))
               .as("skew_factor"))
-      side(t(s, dir, "customer"), "c_custkey", "c_o", "left")
-        .unionAll(side(t(s, dir, "orders"), "o_custkey", "c_o", "right"))
-        .unionAll(side(t(s, dir, "orders"), "o_orderkey", "o_l", "left"))
-        .unionAll(side(t(s, dir, "lineitem"), "l_orderkey", "o_l", "right"))
-        .unionAll(side(t(s, dir, "lineitem"), "l_partkey", "l_p", "left"))
-        .unionAll(side(t(s, dir, "part"), "p_partkey", "l_p", "right"))
-        .unionAll(side(t(s, dir, "lineitem"), "l_suppkey", "l_s", "left"))
-        .unionAll(side(t(s, dir, "supplier"), "s_suppkey", "l_s", "right"))
+      side(Tables(s, dir, "customer"), "c_custkey", "c_o", "left")
+        .unionAll(side(Tables(s, dir, "orders"), "o_custkey", "c_o", "right"))
+        .unionAll(side(Tables(s, dir, "orders"), "o_orderkey", "o_l", "left"))
+        .unionAll(
+          side(Tables(s, dir, "lineitem"), "l_orderkey", "o_l", "right"))
+        .unionAll(side(Tables(s, dir, "lineitem"), "l_partkey", "l_p", "left"))
+        .unionAll(side(Tables(s, dir, "part"), "p_partkey", "l_p", "right"))
+        .unionAll(side(Tables(s, dir, "lineitem"), "l_suppkey", "l_s", "left"))
+        .unionAll(side(Tables(s, dir, "supplier"), "s_suppkey", "l_s", "right"))
         .orderBy("edge", "side")
     }))
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.words
 import graft.operators.GlobalRank
+import graft.Tables
 
 /** Round-9 eighth batch: coverage and uncertainty estimators — the
   * "how much haven't we seen" questions a corpus owner asks before
@@ -30,13 +31,10 @@ import graft.operators.GlobalRank
   */
 object Round9hQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_capture_recapture" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey"),
+      val o = Tables(s, dir, "orders").select(col("o_custkey"),
         (col("o_orderkey") % 2 === 1).as("odd"))
       val per = o.groupBy("o_custkey").agg(
         max(when(col("odd"), 1L).otherwise(0L)).as("in1"),
@@ -53,7 +51,7 @@ object Round9hQueries {
     }),
 
     "q_chao1_vocab" -> ((s, dir) => {
-      val freq = PipelineQueries.spread(s, t(s, dir, "documents"))
+      val freq = PipelineQueries.spread(s, Tables(s, dir, "documents"))
         .select(explode(words(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
       freq.agg(
@@ -72,7 +70,7 @@ object Round9hQueries {
     }),
 
     "q_quantile_ci" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_orderkey"),
+      val o = Tables(s, dir, "orders").select(col("o_orderkey"),
         col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 2))
           .as("price"))
       val ranked = GlobalRank.withRank(o, col("price"), col("o_orderkey"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.GlobalRank
+import graft.Tables
 
 /** Round-9 ninth batch: columnar encoding planners, completing the
   * round-8aa family (dict advisory, Bloom sizing, RLE census) with the
@@ -34,9 +35,6 @@ import graft.operators.GlobalRank
   */
 object Round9iQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
   /** lineitem keyed by its exact global row rank and 1024-row block. */
   private def ranked(s: SparkSession, dir: String): DataFrame = {
     // NO spread (measured, r12): round-robining the 600k-row 4-long
@@ -45,7 +43,7 @@ object Round9iQueries {
     // q_dict_fallback_sim 2.12 -> 2.54) — the exchange write+read costs
     // more than the 1-task scan it parallelizes, the same finding as
     // q_gd_linreg/q_hilbert_layout (guide §1: measure first)
-    val li = t(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_suppkey"))
     // (l_orderkey, l_linenumber) is NOT unique in the synthetic data

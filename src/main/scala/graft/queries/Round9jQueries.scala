@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.Tables
+import graft.queries.QueryKit.dec
 
 /** Round-9 tenth batch: survey-sampling design — the statistical layer
   * behind every "sample 0.1% of 100 TB and estimate" decision. The
@@ -30,10 +31,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Round9jQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    graft.Tables(s, dir, n)
-
-  private val dec = DecimalType(18, 2)
   private val priorities = Seq(
     "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
 
@@ -42,7 +39,7 @@ object Round9jQueries {
     */
   private def strata(s: SparkSession, dir: String): DataFrame = {
     val p = col("o_totalprice").cast(dec)
-    t(s, dir, "orders").groupBy("o_orderpriority")
+    Tables(s, dir, "orders").groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_h"),
         sum(p).cast("string").cast("double").as("s_h"),
         sum(p * p).cast("string").cast("double").as("ss_h"))
@@ -89,7 +86,7 @@ object Round9jQueries {
 
     "q_design_effect" -> ((s, dir) => {
       val p = col("o_totalprice").cast(dec)
-      val global = t(s, dir, "orders").agg(
+      val global = Tables(s, dir, "orders").agg(
           count(lit(1)).as("n"),
           sum(p).cast("string").cast("double").as("s"),
           sum(p * p).cast("string").cast("double").as("ss"))
@@ -114,7 +111,7 @@ object Round9jQueries {
     "q_horvitz_thompson" -> ((s, dir) => {
       // pi_i = k_i/1024 with k = clamp(floor(price/500), 16, 1024):
       // bigger orders are (near-)certainly sampled, small ones rarely
-      val o = t(s, dir, "orders").select(col("o_orderkey"),
+      val o = Tables(s, dir, "orders").select(col("o_orderkey"),
           col("o_totalprice").cast(dec).as("price"))
         .withColumn("k", least(lit(1024L), greatest(lit(16L),
           floor(col("price").cast("double") / 500.0).cast("long"))))

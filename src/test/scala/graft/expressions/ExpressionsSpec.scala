@@ -14,7 +14,6 @@ import graft.functions.VectorFunctions
 class ExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   test("VectorDotProduct == interpreted zip_with/aggregate fold, bitwise") {
-    VectorExpressions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val vecs = Seq.fill(50)(
@@ -31,7 +30,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("VectorSqDist == interpreted fold, bitwise; null on ragged/null") {
-    VectorExpressions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val vecs = Seq.fill(50)(
@@ -55,7 +53,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("VectorDotProduct rejects non-float-array input") {
-    VectorExpressions.register(spark)
     import spark.implicits._
     val df = Seq((Seq(1, 2), Seq(3, 4))).toDF("a", "b")
     assertThrows[Exception](
@@ -63,7 +60,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("ShingleArray == array_distinct(transform(...slice...))") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val texts = Seq(
       "the fast key order sort table scan merge",
@@ -82,7 +78,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("MinhashBandKeys == declarative md5 min + band md5 formulation") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val df = Seq("the fast key order sort table scan merge part window")
       .toDF("text")
@@ -99,7 +94,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("MinhashSignature == declarative per-seed md5 min formulation") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val df = Seq("the fast key order sort table scan merge part window",
         "a b") // fewer than 3 words -> empty shingles -> 8 nulls
@@ -114,7 +108,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("ArrayIntersectSize == size(array_intersect) on sorted-set input") {
-    TextExpressions.register(spark)
     import spark.implicits._
     // contract: inputs are sorted and duplicate-free (ShingleArray output)
     val cases = Seq(
@@ -131,8 +124,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("registered expressions are reachable from SQL text") {
-    VectorExpressions.register(spark)
-    TextExpressions.register(spark)
     val r = spark.sql(
       """SELECT graft_vec_dot(array(cast(1.0 as float), cast(2.0 as float)),
         |                     array(cast(3.0 as float), cast(4.0 as float)))
@@ -144,10 +135,27 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("GraftExtensions wires every expression into a fresh extension set") {
-    // config-driven path (spark.sql.extensions=graft.GraftExtensions);
-    // the imperative register() path is exercised everywhere else
-    new graft.GraftExtensions()
-      .apply(new org.apache.spark.sql.SparkSessionExtensions)
+    // the extension is the only doorway: nothing registers per query, so
+    // every function must resolve in the built session AND in a new
+    // session derived from it
+    val names = Seq("graft_vec_dot", "graft_vec_sqdist", "graft_shingles",
+      "graft_minhash_bands", "graft_array_intersect_size",
+      "graft_shingles5", "graft_poly_hash", "graft_minhash_sig",
+      "graft_jaro_winkler", "graft_bloom_might_contain",
+      "graft_bounds_bucket", "graft_lsorted_intersect_size",
+      "graft_lsorted_intersect")
+    val fresh = spark.newSession()
+    for (s <- Seq(spark, fresh); n <- names)
+      assert(s.catalog.functionExists(n), s"$n does not resolve")
+    // ... and the as-of strategy arrives the same way, not through
+    // experimental.extraStrategies
+    assert(fresh.experimental.extraStrategies.isEmpty)
+    val plan = graft.SparkEntry.queries("q_asof_native")(fresh, sf0001)
+      .queryExecution.executedPlan
+    assert(plan.collect { case a: graft.operators.AsOfJoinExec => a }
+      .nonEmpty, plan.toString)
+    assert(fresh.experimental.extraStrategies.isEmpty)
+    graft.CacheScope.releaseAll(fresh)
   }
 
   test("fingerprint matches a hand-rolled polynomial hash") {
@@ -160,7 +168,6 @@ class ExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("StringPolyHash == declarative char fold on ASCII text") {
-    TextExpressions.register(spark)
     import spark.implicits._
     val texts = Seq("the fast key order", "a", "", "x y z 123")
     val rows = texts.toDF("text").select(

@@ -12,7 +12,6 @@ import graft.SparkSuite
 class LongArrayExpressionsSpec extends AnyFunSuite with SparkSuite {
 
   private def run(a: Seq[Long], b: Seq[Long]): (Int, Seq[Long]) = {
-    LongArrayExpressions.register(spark)
     import spark.implicits._
     val df = Seq((a, b)).toDF("a", "b")
     val r = df.select(
@@ -44,7 +43,6 @@ class LongArrayExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("agrees with array_intersect on random sorted duplicate-free inputs") {
-    LongArrayExpressions.register(spark)
     import spark.implicits._
     // deterministic pseudo-random arrays derived from the row id
     val df = spark.range(200).select(

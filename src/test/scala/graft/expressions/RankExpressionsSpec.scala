@@ -19,7 +19,6 @@ class RankExpressionsSpec extends AnyFunSuite with SparkSuite {
   private def bucketBoth(values: Seq[java.lang.Double],
                          bounds: Seq[Double]): Seq[(Int, Int)] = {
     import spark.implicits._
-    RankExpressions.register(spark)
     val df = values.zipWithIndex
       .map { case (v, i) => (i, Option(v).map(_.doubleValue)) }
       .toDF("id", "m")
@@ -56,7 +55,6 @@ class RankExpressionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("runs inside whole-stage codegen (no fallback)") {
-    RankExpressions.register(spark)
     // spark.range, not a local relation: toDF of literals folds to a
     // LocalTableScan with no codegen stage to inspect
     val df = spark.range(1, 101).select(col("id").cast("double").as("m"))

@@ -16,7 +16,6 @@ import graft.functions.VectorFunctions
 class VectorizeDotFoldSpec extends AnyFunSuite with SparkSuite {
 
   private def embeddings = {
-    graft.expressions.VectorExpressions.register(spark)
     graft.Tables(spark, sf0001, "embeddings")
   }
 
@@ -95,7 +94,6 @@ class VectorizeDotFoldSpec extends AnyFunSuite with SparkSuite {
 
   test("ragged and null-element arrays yield NULL in both forms") {
     import spark.implicits._
-    graft.expressions.VectorExpressions.register(spark)
     // (ragged lengths, null element, clean pair) — the declarative fold
     // returns NULL for the first two (zip_with null padding propagates);
     // VectorDotProduct must match or the rewrite changes results

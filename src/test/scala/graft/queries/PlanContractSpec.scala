@@ -116,4 +116,12 @@ class PlanContractSpec extends AnyFunSuite with SparkSuite {
     assert(spark.sharedState.cacheManager.isEmpty,
       "plan-only query builds left persisted frames registered")
   }
+
+  test("every oracle key names a query, and no oracle key is shadowed") {
+    // forcing the map runs SparkEntry's duplicate-key and orphan checks
+    val oracle = SparkEntry.oracleSql
+    assert(oracle.nonEmpty)
+    val orphans = oracle.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracle keys with no query: $orphans")
+  }
 }
